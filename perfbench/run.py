@@ -53,6 +53,9 @@ def _start_spark(workdir: str):
     tmp = os.path.join(workdir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
+    # the launcher JVM spark-submit starts first would otherwise write its
+    # performance-data file under /tmp
+    os.environ["SPARK_LAUNCHER_OPTS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
     from rtstore_spark.engine import get_spark
 
     return get_spark(
