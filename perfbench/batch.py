@@ -2,8 +2,9 @@
 largest operator families, in a fixed order, with a ``noop`` sink.
 
 The tables are generated from the seed into the run's own directory, with
-the schemas and value domains of the repository's test tables (TPC-H-like
-star schema, an events stream, a text corpus and an embedding table).
+the schemas, value domains and TIMESTAMP(NANOS) columns of the
+repository's sf0.01 test tables (TPC-H-like star schema, an events stream,
+a text corpus and an embedding table).
 Every query's row count is checked against the DuckDB oracle SQL the
 inventory registers for it, on the same parquet files.
 """
@@ -39,6 +40,7 @@ WORDS = ("a agg batch big column customer data dup fast filter group hash "
          "spark stream table the value vector window").split()
 LANGS = ["en", "en", "en", "zh", "es", "de", "fr"]
 EMB_DIM = 64
+SETUPS = 3
 
 
 def query_names() -> list[str]:
@@ -52,9 +54,12 @@ def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
 
 
 def _ts(start: dt.datetime, seconds: np.ndarray) -> pa.Array:
-    base = np.datetime64(start, "us")
-    return pa.array(base + (seconds * 1e6).astype("timedelta64[us]"),
-                    type=pa.timestamp("us"))
+    """TIMESTAMP(NANOS), as in the repository's tables, on whole
+    microseconds."""
+    base = np.datetime64(start, "ns")
+    nanos = (seconds * 1e6).astype(np.int64) * 1000
+    return pa.array(base + nanos.astype("timedelta64[ns]"),
+                    type=pa.timestamp("ns"))
 
 
 def _days(start: dt.datetime, days: np.ndarray) -> pa.Array:
@@ -135,13 +140,20 @@ def generate_tables(out_dir: str, seed: int, scale: str) -> None:
         "value": _money(rng, 0, 100, ne),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]})
     nd = n["documents"]
+    # 3% exact duplicates and 10% documents that open with a run of another
+    # one's tokens: fixed shares, so every seed gives the dedup queries as
+    # much to find
+    later = rng.permutation(np.arange(10, nd))
+    n_dup, n_run = round(0.03 * nd), round(0.1 * nd)
+    dups = set(later[:n_dup].tolist())
+    runs = set(later[n_dup:n_dup + n_run].tolist())
     texts = []
     for i in range(nd):
-        if i >= 10 and rng.random() < 0.03:  # exact duplicates
+        if i in dups:
             texts.append(texts[int(rng.integers(0, i))])
             continue
         words = list(rng.choice(WORDS, int(rng.integers(10, 101))))
-        if i >= 10 and rng.random() < 0.1:  # a shared run of tokens
+        if i in runs:
             src = texts[int(rng.integers(0, i))].split()
             words[:0] = src[:12]
         texts.append(" ".join(words))
@@ -216,39 +228,52 @@ def run_batch(spark, seed: int, seconds: float, trace: bool, workdir: str,
 
     names = query_names()
     qs = inventory.queries()
-    # two set-ups, each a fresh generation of the tables loaded through the
-    # program's table layer; the last one is the measured data
-    setups = []
-    for i in range(2):
-        data_dir = os.path.join(workdir, f"data{i}")
-        t = time.perf_counter()
-        generate_tables(data_dir, seed, size_name)
-        for name in TABLE_NAMES:
-            load_table(spark, data_dir, name).count()
-        setups.append(time.perf_counter() - t)
-    log(f"batch_queries: set-ups {[round(s, 2) for s in setups]} s")
+    data_dir = os.path.join(workdir, "data")
+    generate_tables(data_dir, seed, size_name)  # the benchmark's own, untimed
 
-    # untimed warm-up: one pass, its row counts checked against the oracle
+    # untimed warm-up: one pass, its row counts checked against the oracle.
+    # It also pays the JVM's first parquet reads, so the set-ups after it
+    # time the program's table loading alone.
+    want = oracle_counts(data_dir, names)
     t_check = time.perf_counter()
     got = {q: _run_query(spark, qs[q], data_dir)[0] for q in names}
-    want = oracle_counts(data_dir, names)
     mismatches = compare_counts(got, want)
     warm = {"checked_pass_s": time.perf_counter() - t_check}
     log(f"batch_queries: warm-up {warm}")
 
+    # set-ups: every table loaded through the program's table layer,
+    # uncached, and counted
+    setups = []
+    for _ in range(SETUPS):
+        t = time.perf_counter()
+        for name in TABLE_NAMES:
+            load_table(spark, data_dir, name, cache=False).count()
+        setups.append(time.perf_counter() - t)
+    log(f"batch_queries: set-ups {[round(s, 2) for s in setups]} s")
+
     def measure(traced: bool):
-        """Whole passes in the fixed order, at least two, until the window
-        closes. A partial pass would add the cheap queries at the head of
-        the order and bias the rate by how far it got; a single pass leaves
-        one sample per query, and the median query swings with it."""
+        """The whole number of passes, in the fixed order, that comes
+        nearest to ``seconds``, and at least one: another pass starts only
+        while more than half of one fits. A partial pass would add the cheap
+        queries at the head of the order and bias the rate by how far it
+        got; stopping at the nearest whole pass, rather than at the first
+        pass past ``seconds``, keeps the pass count from flipping when a
+        pass takes about ``seconds``. Every execution's row count is
+        checked too."""
         host = HostSampler()
         timings: list[tuple] = []
-        t0 = time.perf_counter()
-        while len(timings) < 2 * len(names) or time.perf_counter() - t0 < seconds:
+        t0, pass_s = time.perf_counter(), 0.0
+        while not timings or time.perf_counter() - t0 + pass_s / 2 < seconds:
+            pass_t0 = time.perf_counter()
             for q in names:
-                _, a, b, c = _run_query(spark, qs[q], data_dir,
-                                        group=f"batch-{q}" if traced else None)
+                rows, a, b, c = _run_query(
+                    spark, qs[q], data_dir,
+                    group=f"batch-{q}" if traced else None)
                 timings.append((q, a, b, c))
+                if rows != want[q]:
+                    mismatches.append(f"{q}: {rows} rows in a measured pass, "
+                                      f"oracle {want[q]}")
+            pass_s = time.perf_counter() - pass_t0
             host.sample_load()
         wall = time.perf_counter() - t0
         hostm = host.finish()

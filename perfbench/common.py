@@ -117,19 +117,20 @@ class Window:
     so an op cut by the window's end counts in part rather than not at
     all, which keeps the rate smooth when ops are long."""
 
-    def __init__(self, seconds: float, clients: int):
+    def __init__(self, seconds: float, clients: int, on_open=None):
         self.seconds = seconds
         self.t0 = 0.0
+        self.on_open = on_open
         # the barrier's action stamps t0 before any party is released
         self.barrier = threading.Barrier(clients + 1, action=self._start)
 
     def _start(self) -> None:
         self.t0 = time.perf_counter()
-
-    def open(self) -> None:
-        self.barrier.wait()
+        if self.on_open is not None:
+            self.on_open()
 
     def wait_open(self) -> None:
+        """Called by every client and by the caller that opens the window."""
         self.barrier.wait()
 
     def is_open(self) -> bool:

@@ -22,55 +22,35 @@ SPARK_FIELDS = [("jobs", "count"), ("stages", "count"), ("tasks", "count"),
                 ("executor_run_ms", "ms"), ("executor_cpu_ms", "ms"),
                 ("input_rows_per_result", "rows"), ("shuffle_bytes", "bytes")]
 
-# name -> (unit, the end-to-end metric it should move, on which workload).
-# Per-op-kind latencies (getdoc, query, write p50 and tail) are in every
-# serve artifact; of them only the write p50 is the gated op_p50_ms.
-_MOVES = {
-    "write": "op_p50_ms on serve_write",
-    "getdoc": "ops_per_s on serve_write (getdoc p50 in the artifact)",
-    "query": "ops_per_s on serve_write (query p50 in the artifact)",
-}
-LAYER_METRICS: dict[str, tuple[str, str]] = {}
+# name -> unit. Which end-to-end metric each should move is mapped in
+# perfbench/README.md.
+LAYER_METRICS: dict[str, str] = {}
 for _op in SERVE_OPS:
-    LAYER_METRICS[f"service.front_ms.{_op}"] = ("ms", _MOVES[_op])
-    LAYER_METRICS[f"service.dispatch_self_ms.{_op}"] = ("ms", _MOVES[_op])
+    LAYER_METRICS[f"service.front_ms.{_op}"] = "ms"
+    LAYER_METRICS[f"service.dispatch_self_ms.{_op}"] = "ms"
     for _f, _u in SPARK_FIELDS:
-        LAYER_METRICS[f"spark.{_f}.{_op}"] = (_u, _MOVES[_op])
-for _name, _unit, _moves in [
-    ("wire.unwrap_verify_ms", "ms", _MOVES["write"]),
-    ("crypto.recover_ms", "ms", _MOVES["write"]),
-    ("wire.translate_ms", "ms", _MOVES["write"]),
-    ("store.lock_wait_ms", "ms", _MOVES["write"]),
-    ("store.lock_hold_ms", "ms", "ops_per_s on serve_write"),
-    ("store.state_persist_ms", "ms", _MOVES["write"]),
-    ("store.add_docs_ms", "ms", "op_p50_ms and ops_per_s on serve_write"),
-    ("store.update_docs_ms", "ms", "op_p50_ms and ops_per_s on serve_write"),
-    ("store.delete_docs_ms", "ms", "op_p50_ms and ops_per_s on serve_write"),
-    ("store.archive_wire_ms", "ms", _MOVES["write"]),
-    ("store.flush_wire_archive_ms", "ms",
-     "write tail (in the artifact) on serve_write"),
-    ("store.files_per_write", "count",
-     "bytes_per_user_byte (in the artifact) on serve_write"),
-    ("store.bytes_written_per_write", "bytes",
-     "bytes_per_user_byte (in the artifact) on serve_write"),
-    ("store.live_files", "count", _MOVES["getdoc"]),
-    ("store.get_doc_ms", "ms", _MOVES["getdoc"]),
-    ("store.query_docs_ms", "ms", _MOVES["query"]),
-    ("jql.parse_ms", "ms", _MOVES["query"]),
-    ("jql.compile_ms", "ms", _MOVES["query"]),
-    ("jql.apply_stages_ms", "ms", _MOVES["query"]),
-    ("jql.matched_per_returned", "ratio", _MOVES["query"]),
+        LAYER_METRICS[f"spark.{_f}.{_op}"] = _u
+for _name, _unit in [
+    ("wire.unwrap_verify_ms", "ms"), ("crypto.recover_ms", "ms"),
+    ("wire.translate_ms", "ms"), ("store.lock_wait_ms", "ms"),
+    ("store.lock_hold_ms", "ms"), ("store.state_persist_ms", "ms"),
+    ("store.add_docs_ms", "ms"), ("store.update_docs_ms", "ms"),
+    ("store.delete_docs_ms", "ms"), ("store.archive_wire_ms", "ms"),
+    ("store.flush_wire_archive_ms", "ms"), ("store.files_per_write", "count"),
+    ("store.bytes_written_per_write", "bytes"), ("store.live_files", "count"),
+    ("store.get_doc_ms", "ms"), ("store.query_docs_ms", "ms"),
+    ("jql.parse_ms", "ms"), ("jql.compile_ms", "ms"),
+    ("jql.apply_stages_ms", "ms"), ("jql.matched_per_returned", "ratio"),
 ]:
-    LAYER_METRICS[_name] = (_unit, _moves)
+    LAYER_METRICS[_name] = _unit
 for _q in query_names():
     for _f, _u in [("build_ms", "ms"), ("exec_ms", "ms"), ("jobs", "count"),
                    ("shuffle_bytes", "bytes")]:
-        LAYER_METRICS[f"batch.{_q}.{_f}"] = (
-            _u, "ops_per_s and op_p50_ms on batch_queries")
+        LAYER_METRICS[f"batch.{_q}.{_f}"] = _u
 for _name, _unit in [("host.steal_pct", "%"), ("host.loadavg", "load"),
                      ("proc.cpu_ms_per_op", "ms"),
                      ("trace.overhead_pct", "%")]:
-    LAYER_METRICS[_name] = (_unit, "none: shows a loaded host or tracing cost")
+    LAYER_METRICS[_name] = _unit
 
 # span name -> metric name, for the per-request self-time sums
 _SELF_SPANS = {

@@ -1,14 +1,14 @@
 """Run one benchmark workload and print its result as the last stdout line.
 
-    python3 perfbench/run.py --workload serve_read --seed 1 --seconds 10 \\
+    python3 perfbench/run.py --workload serve_write --seed 1 --seconds 10 \\
         --trace 0
 
 Run it from the root of a checkout: it imports ``rtstore_spark`` and
 ``bench.py`` from the working directory and exits with code 2, printing
 no result, when they are not there. Workloads:
 
-- ``serve_read``: GetDoc and RunQuery through the JSON front;
-- ``serve_write``: signed wire-form mutations and read-your-writes GetDocs;
+- ``serve_write``: signed wire-form mutations, read-your-writes GetDocs
+  and RunQueries through the JSON front;
 - ``batch_queries``: the headline queries plus three operator families.
 
 With ``--trace 0`` the result carries the end-to-end metrics; with
@@ -30,7 +30,7 @@ import time
 
 T_START = time.perf_counter()
 
-WORKLOADS = ["serve_read", "serve_write", "batch_queries"]
+WORKLOADS = ["serve_write", "batch_queries"]
 E2E_UNITS = {"ops_per_s": "1/s", "op_p50_ms": "ms", "setup_s": "s"}
 
 
@@ -96,10 +96,7 @@ def _stop_spark(spark) -> None:
 
 def _e2e(workload: str, res: dict) -> dict:
     m = res["measured"]
-    if workload == "batch_queries":
-        p50 = m["op_p50_ms"]
-    else:
-        p50 = m["query" if workload == "serve_read" else "write"]["p50"]
+    p50 = m["op_p50_ms"] if workload == "batch_queries" else m["write"]["p50"]
     return {"ops_per_s": m["ops_per_s"], "op_p50_ms": p50,
             "setup_s": res["setup_s"]}
 
@@ -111,17 +108,16 @@ def _issue_metrics(workload: str, res: dict) -> dict:
            "error_rate": (m["failed"] / max(1, m["attempted"]), "share"),
            "setup_s": (res["setup_s"], "s"),
            "ready_s": (m["t0"] - T_START, "s")}
-    kinds = {"serve_read": [("getdoc", "getdoc"), ("query", "query")],
-             "serve_write": [("write", "write"), ("getdoc", "getdoc")]}
-    for kind, name in kinds.get(workload, []):
-        out[f"{name}_p50_ms"] = (m[kind]["p50"], "ms")
-        t = m[kind]["tail"]
-        out[f"{name}_tail_ms"] = (t["value"], f"ms@p{t['percentile']}"
-                                  f"/n={t['samples']}")
-    if workload == "serve_write":
-        out["bytes_per_user_byte"] = (res["bytes_per_user_byte"], "ratio")
     if workload == "batch_queries":
         out["op_p50_ms"] = (m["op_p50_ms"], "ms")
+        return out
+    for kind in ("write", "getdoc", "query"):
+        out[f"{kind}_p50_ms"] = (m[kind]["p50"], "ms")
+        t = m[kind]["tail"]
+        out[f"{kind}_tail_ms"] = (t["value"], f"ms@p{t['percentile']}"
+                                  f"/n={t['samples']}")
+    out["bytes_per_user_byte"] = (res["bytes_per_user_byte"], "ratio")
+    out["setup_cold_s"] = (res["setup_cold_s"], "s")
     return out
 
 
@@ -151,8 +147,8 @@ def main(argv=None) -> int:
         else:
             from perfbench.serve import run_serve
 
-            res = run_serve(spark, a.workload, a.seed, a.seconds,
-                            bool(a.trace), workdir, a.size)
+            res = run_serve(spark, a.seed, a.seconds, bool(a.trace), workdir,
+                            a.size)
         layers = None
         span_check = None
         if a.trace:
@@ -179,7 +175,7 @@ def main(argv=None) -> int:
     if a.trace:
         from perfbench.layers import LAYER_METRICS
 
-        metrics = {k: {"value": float(layers[k]), "unit": LAYER_METRICS[k][0]}
+        metrics = {k: {"value": float(layers[k]), "unit": LAYER_METRICS[k]}
                    for k in LAYER_METRICS}
     else:
         metrics = {k: {"value": float(v), "unit": E2E_UNITS[k]}

@@ -1,15 +1,15 @@
-"""The serve workloads: the node in-process behind its JSON front on
-loopback, driven by closed-loop clients on persistent HTTP/1.1
-connections.
+"""The serve_write workload: the node in-process behind its JSON front on
+loopback, under the node's 2000 ms block tick, driven by four closed-loop
+accounts on persistent HTTP/1.1 connections. Each sends signed wire-form
+SendMutations (add, update, delete), read-your-writes GetDocs and
+RunQueries.
 
-- ``serve_read``: GetDoc and RunQuery against one compacted collection.
-- ``serve_write``: signed wire-form SendMutations (add, update, delete)
-  with read-your-writes GetDocs, under the node's 2000 ms block tick.
-
-Every run sets up identically seeded stores: the first takes the untimed
-warm-up, the second the measured window and, in traced runs, a third the
-traced window, so warm-up traffic never touches the measured collection.
-The median of the set-up times is ``setup_s``.
+Every run sets up identically seeded stores. The first set-up is cold and
+takes the untimed warm-up, so warm-up traffic never touches a measured
+collection. The set-ups after the warm-up are warm: the second store takes
+the measured window and a third, in traced runs only, the traced window.
+``setup_s`` is the median of the warm set-ups; the cold one is reported
+apart, because it is mostly the JVM's own warm-up.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ import random
 import shutil
 import threading
 import time
+from collections import Counter
 from dataclasses import dataclass
 
 from perfbench.common import HostSampler, Window, log, median, summarize
@@ -31,15 +32,10 @@ COL = "bench"
 OP_TIMEOUT_S = 60.0
 BLOCK_INTERVAL_S = 2.0  # the node CLI's default block tick
 
-# seeded documents per store and the id range they spread over. The ids of
-# serve_read span three 100k-id doc buckets, so a GetDoc prunes to one
-# bucket of three, as in a 250k-document collection.
-SIZES = {
-    "full": {"serve_read": (60_000, 300_000), "serve_write": (20_000, 20_000),
-             "query_match": 250},
-    "tiny": {"serve_read": (600, 3_000), "serve_write": (200, 200),
-             "query_match": 20},
-}
+# seeded documents per store, and about how many of them share a value of
+# the queried field
+SIZES = {"full": {"docs": 20_000, "query_match": 250},
+         "tiny": {"docs": 200, "query_match": 20}}
 SEED_OWNER = "0x" + "5f" * 20
 CLIENTS = 4
 WORDS = ("alpha bravo delta echo golf hotel india kilo lima mike oscar papa "
@@ -62,6 +58,7 @@ class Op:
     body: dict
     check: object  # callable(response dict) -> str | None (mismatch text)
     on_ack: object = None  # callable(response dict), after a good answer
+    action: str = ""  # add | update | delete | own (a read of an own doc)
 
 
 @dataclass
@@ -73,6 +70,7 @@ class Record:
     ok: bool
     error: str | None
     rid: str
+    action: str = ""
     matched: int | None = None
     returned: int | None = None
 
@@ -102,9 +100,11 @@ class Conn:
 
 
 def run_clients(port: int, plans: list, seconds: float,
-                tracer: Tracer | None, tag: str) -> tuple[list[Record], Window]:
-    """Run one closed-loop window: each plan's ops, back to back."""
-    window = Window(seconds, len(plans))
+                tracer: Tracer | None, tag: str,
+                on_open) -> tuple[list[Record], Window]:
+    """Run one closed-loop window: each plan's ops, back to back.
+    ``on_open`` is called as the window opens, before any client starts."""
+    window = Window(seconds, len(plans), on_open)
     records: list[Record] = []
     errors: list[BaseException] = []
     lock = threading.Lock()
@@ -137,7 +137,8 @@ def run_clients(port: int, plans: list, seconds: float,
                 if tracer is not None:
                     tracer.record(Span(sid, f"client.{op.kind}", start, end,
                                        None, rid))
-                rec = Record(i, op.kind, start, end, err is None, err, rid)
+                rec = Record(i, op.kind, start, end, err is None, err, rid,
+                             op.action)
                 if err is None:
                     mismatch = op.check(resp)
                     if mismatch:
@@ -159,7 +160,7 @@ def run_clients(port: int, plans: list, seconds: float,
                for i, p in enumerate(plans)]
     for t in threads:
         t.start()
-    window.open()
+    window.wait_open()
     for t in threads:
         t.join(seconds + OP_TIMEOUT_S + 30)
         if t.is_alive():
@@ -175,9 +176,11 @@ def run_clients(port: int, plans: list, seconds: float,
 
 
 class Node:
-    """One store behind the JSON front, with an optional block ticker."""
+    """One store behind the JSON front, with the node CLI's block tick once
+    ``start_ticks`` is called. A measured window starts the ticks as it
+    opens, so every window sees its ticks at the same times."""
 
-    def __init__(self, spark, root: str, tick: bool, tracer: Tracer | None):
+    def __init__(self, spark, root: str, tracer: Tracer | None):
         from rtstore_spark.service import NodeServer, NodeService
         from rtstore_spark.store.docstore import DocStore
 
@@ -186,13 +189,12 @@ class Node:
         self.port = self.server.port
         self.tracer = tracer
         self._stop = threading.Event()
-        self._ticker = None
         self._tick_errors: list[BaseException] = []
-        if tick:
-            self._ticker = threading.Thread(target=self._tick_loop,
-                                            name="bench-block-ticker",
-                                            daemon=True)
-            self._ticker.start()
+        self._ticker = threading.Thread(target=self._tick_loop,
+                                        name="bench-block-ticker", daemon=True)
+
+    def start_ticks(self) -> None:
+        self._ticker.start()
 
     def _tick_loop(self) -> None:
         n = 0
@@ -210,10 +212,10 @@ class Node:
 
     def close(self) -> None:
         self._stop.set()
-        if self._ticker is not None:
+        if self._ticker.ident is not None:
             self._ticker.join(timeout=OP_TIMEOUT_S)
-            if self._ticker.is_alive():
-                raise RuntimeError("block ticker did not stop")
+        if self._ticker.is_alive():
+            raise RuntimeError("block ticker did not stop")
         self.server.stop()
         if self._tick_errors:
             raise RuntimeError("block tick failed") from self._tick_errors[0]
@@ -241,14 +243,13 @@ def _dir_bytes(root: str) -> int:
 
 class SeedModel:
     """The seeded collection, derived from the seed alone: ``n`` documents
-    whose ids spread evenly over ``id_span``, each with a field ``k`` that
-    about ``match`` documents share. Client writes never touch these
-    documents, so queries on ``k`` have answers fixed by the seed."""
+    with ids 1..n, each with a field ``k`` that about ``match`` documents
+    share. Client writes never touch these documents, so queries on ``k``
+    have answers fixed by the seed."""
 
-    def __init__(self, seed: int, n: int, id_span: int, match: int):
+    def __init__(self, seed: int, n: int, match: int):
         rng = random.Random(f"docs-{seed}")
-        step = max(1, id_span // n)
-        self.ids = [1 + i * step for i in range(n)]
+        self.ids = list(range(1, n + 1))
         self.keys = max(1, n // match)
         self.docs: dict[int, str] = {}
         self.by_key: dict[int, list[int]] = {}
@@ -312,49 +313,34 @@ def _seed_store(spark, root: str, model: SeedModel) -> float:
     return time.perf_counter() - t
 
 
-def _cycle(pattern: list[str], client: int):
-    """The op kinds one client sends: the pattern over and over, each
-    client starting at its own offset. The mix is fixed; the seed picks
+ACCOUNT_KEYS = [0xB0A7 + 7919 * i for i in range(CLIENTS)]
+# 50% add, 25% update, 5% delete, 10% GetDoc of an own document and 10%
+# RunQuery per 20 ops. Each client starts the cycle at its own offset, so
+# the first two ops of the four clients already hold every kind: client 0
+# adds and reads back, client 1 adds and updates, client 2 adds and
+# deletes, client 3 queries and adds. At about 0.8 ops/s a 10 s window
+# holds only those openings; the whole cycle shows in longer windows.
+WRITE_PATTERN = ["add", "getdoc", "add", "update", "add",
+                 "update", "query", "add", "add", "update",
+                 "add", "delete", "add", "update", "query",
+                 "add", "getdoc", "add", "update", "add"]
+CLIENT_OFFSETS = (0, 2, 10, 14)
+
+
+def _cycle(client: int):
+    """The op kinds one client sends. The mix is fixed; the seed picks
     only what each op reads or writes."""
-    i = client * len(pattern) // CLIENTS
+    i = CLIENT_OFFSETS[client]
     while True:
-        yield pattern[i % len(pattern)]
+        yield WRITE_PATTERN[i % len(WRITE_PATTERN)]
         i += 1
 
 
-# 50% GetDoc on uniform ids, 50% RunQuery, one RunQuery in five a count
-READ_PATTERN = ["getdoc", "query"] * 4 + ["getdoc", "count"]
-
-
-class ReadPlan:
-    def __init__(self, model: SeedModel, seed: int, client: int):
-        self.m = model
-        self.rng = random.Random(f"read-ops-{seed}-{client}")
-        self.kinds = _cycle(READ_PATTERN, client)
-        self.mismatches: list[str] = []
-
-    def next_op(self) -> Op:
-        kind = next(self.kinds)
-        if kind == "getdoc":
-            return self.m.getdoc_op(self.rng.choice(self.m.ids))
-        return self.m.query_op(self.rng, counting=kind == "count")
-
-
-ACCOUNT_KEYS = [0xB0A7 + 7919 * i for i in range(CLIENTS)]
-# 50% add, 25% update, 5% delete, 10% GetDoc, 10% RunQuery per 20 ops. The
-# four clients start at offsets 0, 5, 10 and 15, so the first round holds
-# a GetDoc and a RunQuery besides the writes.
-WRITE_PATTERN = ["add", "update", "add", "query", "add",
-                 "getdoc", "add", "update", "add", "delete",
-                 "query", "add", "add", "update", "add",
-                 "add", "update", "getdoc", "add", "update"]
-
-
 class WritePlan:
-    """serve_write: one account's op sequence. 50% AddDocument, 25%
-    UpdateDocument and 5% DeleteDocument of documents the account added,
-    10% GetDoc of the document it wrote last (read-your-writes) and 10%
-    RunQuery over the seeded documents.
+    """One account's op sequence. 50% AddDocument, 25% UpdateDocument and
+    5% DeleteDocument of documents the account added, 10% GetDoc of the
+    document it wrote last (read-your-writes) and 10% RunQuery over the
+    seeded documents.
 
     Mutations are signed in the reference wire form just before they are
     sent, outside the op's timed span. In a run without failures the
@@ -374,7 +360,7 @@ class WritePlan:
     def reset(self) -> None:
         """Start the sequence again, for a freshly seeded store."""
         self.rng = random.Random(f"write-ops-{self.seed}-{self.client}")
-        self.kinds = _cycle(WRITE_PATTERN, self.client)
+        self.kinds = _cycle(self.client)
         self.nonce = 0
         self.expect: dict[int, dict | None] = {}  # acked state of own docs
         self.live: list[int] = []  # own documents not deleted
@@ -397,13 +383,14 @@ class WritePlan:
             self.nonce, self.priv)
         return {"payload": payload.decode(), "signature": sig}, self.nonce
 
-    def _write(self, body: dict, on_ack) -> Op:
+    def _write(self, action: str, body: dict, on_ack) -> Op:
         def check(resp):
             sender = str(resp.get("sender", "")).lower()
             return None if sender == self.addr.lower() else \
                 f"ack names sender {resp.get('sender')}"
 
-        return Op("write", "/v1/storage/SendMutation", body, check, on_ack)
+        return Op("write", "/v1/storage/SendMutation", body, check, on_ack,
+                  action)
 
     def _acked(self, kind: str, nonce: int, nbytes: int) -> None:
         self.acked[kind] += 1
@@ -430,8 +417,8 @@ class WritePlan:
 
             return Op("getdoc", "/v1/indexer/GetDoc",
                       {"db_addr": DB_ADDR, "col_name": COL, "id": doc_id},
-                      check)
-        if kind in ("query", "count"):
+                      check, action="own")
+        if kind == "query":
             return self.m.query_op(rng, counting=rng.random() < 0.2)
         if kind == "delete" and self.live:
             doc_id = self.live[rng.randrange(len(self.live))]
@@ -445,7 +432,7 @@ class WritePlan:
                     self.last_written = None
                 self._acked("delete", nonce, 0)
 
-            return self._write(body, on_ack)
+            return self._write("delete", body, on_ack)
         if kind == "update" and self.live:
             doc_id = self.live[rng.randrange(len(self.live))]
             patch = {"score": rng.randrange(1_000_000), "note": _name(rng, 4)}
@@ -460,7 +447,7 @@ class WritePlan:
                 self.last_written = doc_id
                 self._acked("update", nonce, nbytes)
 
-            return self._write(body, on_ack)
+            return self._write("update", body, on_ack)
         doc = {"owner": self.client, "seq": self.nonce + 1,
                "tag": rng.randrange(1000), "name": _name(rng, 9)}
         body, nonce = self._signed("AddDocument", {
@@ -476,7 +463,7 @@ class WritePlan:
                     self.last_written = doc_id
             self._acked("add", nonce, nbytes)
 
-        return self._write(body, on_ack)
+        return self._write("add", body, on_ack)
 
 
 def check_reopened(spark, root: str, plans: list[WritePlan]) -> dict:
@@ -513,8 +500,10 @@ def check_reopened(spark, root: str, plans: list[WritePlan]) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _window_metrics(records: list[Record], window: Window,
-                    kinds: list[str]) -> dict:
+KINDS = ["write", "getdoc", "query"]
+
+
+def _window_metrics(records: list[Record], window: Window) -> dict:
     ok = [r for r in records if r.ok]
     credit = sum(window.credit(r.start, r.end) for r in ok)
     out = {
@@ -524,37 +513,26 @@ def _window_metrics(records: list[Record], window: Window,
         "failures": [f"{r.rid}: {r.error}" for r in records if not r.ok][:20],
         "latency_note": "failed ops are excluded from latency samples and "
                         "counted in failed/attempted",
+        # ops started in the window, by kind and what they wrote or read,
+        # and each op's client, start and end relative to the window's open
+        "started": dict(Counter(f"{r.kind}.{r.action or 'seeded'}"
+                                for r in records)),
+        "timeline": [(r.client, f"{r.kind}.{r.action or 'seeded'}",
+                      round(r.start - window.t0, 3), round(r.end - window.t0, 3),
+                      r.ok) for r in sorted(records, key=lambda r: r.start)],
     }
-    for k in kinds:
+    for k in KINDS:
         out[k] = summarize([(r.end - r.start) * 1e3 for r in ok
                             if r.kind == k])
     return out
 
 
-def _warm_up_reads(port: int, plans: list, budget_s: float,
-                   slice_s: float) -> dict:
-    """Untimed warm-up: slices of the same closed loop, each continuing
-    the plans' sequences, until the rate stops rising or the budget ends."""
-    rates: list[float] = []
-    failed = 0
-    t = time.perf_counter()
-    while time.perf_counter() - t < budget_s:
-        recs, win = run_clients(port, plans, slice_s, None, f"w{len(rates)}")
-        failed += sum(not r.ok for r in recs)
-        rates.append(sum(win.credit(r.start, r.end) for r in recs if r.ok)
-                     / slice_s)
-        if len(rates) >= 2 and rates[-1] <= max(rates[:-1]) * 1.03:
-            break
-    return {"seconds": time.perf_counter() - t, "slice_rates": rates,
-            "failed": failed}
-
-
-# the set-ups already run the append, state-window and compaction jobs of
-# an add; an update adds the merge-patch join and its Python workers
+# the cold set-up already ran the append, state-window and compaction jobs
+# of an add; an update adds the merge-patch join and its Python workers
 WRITE_WARMUP_SCRIPT = ["add", "update"]
 
 
-def _warm_up_writes(port: int, plan: "WritePlan") -> dict:
+def _warm_up_writes(port: int, plan: WritePlan) -> dict:
     """Untimed warm-up of the write path: one account adds a document and
     updates it, which also starts the Python workers the update merge
     runs in."""
@@ -576,53 +554,39 @@ def _warm_up_writes(port: int, plan: "WritePlan") -> dict:
             "failed": failed}
 
 
-def run_serve(spark, workload: str, seed: int, seconds: float, trace: bool,
-              workdir: str, size_name: str) -> dict:
+def run_serve(spark, seed: int, seconds: float, trace: bool, workdir: str,
+              size_name: str) -> dict:
     size = SIZES[size_name]
-    reading = workload == "serve_read"
-    n_docs, id_span = size[workload]
-    model = SeedModel(seed, n_docs, id_span, size["query_match"])
-    # store 0 takes the warm-up, store 1 the measured window and store 2,
-    # in traced runs only, the traced window
-    roots = [os.path.join(workdir, f"store{i}") for i in range(3 if trace else 2)]
-    setups = [_seed_store(spark, r, model) for r in roots]
-    log(f"{workload}: set-ups {[round(s, 2) for s in setups]} s")
+    model = SeedModel(seed, size["docs"], size["query_match"])
+    roots = [os.path.join(workdir, f"store{i}")
+             for i in range(3 if trace else 2)]
 
-    if reading:
-        def plans_for(plan_seed):
-            return [ReadPlan(model, plan_seed, c) for c in range(CLIENTS)]
-    else:
-        write_plans = [WritePlan(model, seed, c) for c in range(CLIENTS)]
-
-        def plans_for(plan_seed):
-            # every store is seeded alike, so each replays one sequence
-            for p in write_plans:
-                p.reset()
-            return write_plans
-
-    # the measured collection never sees the warm-up. Read plans draw from
-    # another seed, so measured ops do not repeat warm-up ops.
-    warm_node = Node(spark, roots[0], tick=not reading, tracer=None)
+    # store 0: the cold set-up, then the untimed warm-up on it
+    cold = _seed_store(spark, roots[0], model)
+    warm_node = Node(spark, roots[0], tracer=None)
+    warm_node.start_ticks()
     try:
-        if reading:
-            warm = _warm_up_reads(warm_node.port, plans_for(seed + 10**6),
-                                  budget_s=max(6.0, 1.2 * seconds),
-                                  slice_s=3.0 if size_name == "full" else 1.0)
-        else:
-            warm = _warm_up_writes(warm_node.port,
-                                   WritePlan(model, seed + 10**6, 0))
+        warm = _warm_up_writes(warm_node.port,
+                               WritePlan(model, seed + 10**6, 0))
     finally:
         warm_node.close()
     shutil.rmtree(roots[0], ignore_errors=True)
-    log(f"{workload}: warm-up {warm}")
+    log(f"serve_write: cold set-up {cold:.2f} s, warm-up {warm}")
 
-    kinds = ["getdoc", "query"] if reading else ["write", "getdoc", "query"]
+    # the warm set-ups: store 1 takes the measured window, store 2 the
+    # traced one
+    setups = [_seed_store(spark, r, model) for r in roots[1:]]
+    log(f"serve_write: warm set-ups {[round(s, 2) for s in setups]} s")
+
+    # every store is seeded alike, so each window replays one sequence
+    plans = [WritePlan(model, seed, c) for c in range(CLIENTS)]
 
     def measure(root: str, tracer: Tracer | None, tag: str):
-        node = Node(spark, root, tick=not reading, tracer=tracer)
+        node = Node(spark, root, tracer=tracer)
         before = _tree_stats(root)
         bytes_before = _dir_bytes(root)
-        plans = plans_for(seed)
+        for p in plans:
+            p.reset()
         if tracer is not None:
             tracer.install_serve([node.store.state], spark)
         host = HostSampler()
@@ -636,7 +600,7 @@ def run_serve(spark, workload: str, seed: int, seconds: float, trace: bool,
         sampler.start()
         try:
             records, window = run_clients(node.port, plans, seconds, tracer,
-                                          tag)
+                                          tag, node.start_ticks)
         finally:
             loads.set()
             sampler.join(timeout=5)
@@ -644,28 +608,25 @@ def run_serve(spark, workload: str, seed: int, seconds: float, trace: bool,
             if tracer is not None:
                 tracer.uninstall()
         hostm = host.finish()
-        m = _window_metrics(records, window, kinds)
+        m = _window_metrics(records, window)
         m["host"] = hostm
         m["t0"] = window.t0
         m["cpu_ms_per_op"] = 1e3 * hostm["proc_cpu_s"] / max(1, len(records))
         m["mismatches"] = [x for p in plans for x in p.mismatches]
         m["store_files_before_after"] = [before, _tree_stats(root)]
         m["store_bytes_growth"] = _dir_bytes(root) - bytes_before
-        return records, window, plans, m
+        return m, records
 
-    out = {"setup_s_all": setups, "setup_s": median(setups), "warmup": warm,
-           "size": size_name, "clients": CLIENTS}
-    records, window, plans, m = measure(roots[1], None, "m")
-    out["measured"] = m
-    if not reading:
-        out["reopen"] = check_reopened(spark, roots[1], plans)
-        user = sum(p.user_bytes for p in plans)
-        out["bytes_per_user_byte"] = (m["store_bytes_growth"] / user
-                                      if user else None)
-        m["mismatches"] += out["reopen"]["mismatches"]
+    out = {"setup_cold_s": cold, "setup_s_all": setups,
+           "setup_s": median(setups), "warmup": warm, "size": size_name,
+           "clients": CLIENTS}
+    m = out["measured"] = measure(roots[1], None, "m")[0]
+    out["reopen"] = check_reopened(spark, roots[1], plans)
+    user = sum(p.user_bytes for p in plans)
+    out["bytes_per_user_byte"] = m["store_bytes_growth"] / user if user else None
+    m["mismatches"] += out["reopen"]["mismatches"]
     if trace:
         tracer = Tracer()
-        t_records, t_window, t_plans, tm = measure(roots[2], tracer, "t")
-        out["traced"] = tm
-        out["trace"] = {"tracer": tracer, "records": t_records}
+        out["traced"], records = measure(roots[2], tracer, "t")
+        out["trace"] = {"tracer": tracer, "records": records}
     return out

@@ -21,7 +21,7 @@ sys.path.insert(0, ROOT)
 
 from perfbench.batch import compare_counts  # noqa: E402
 from perfbench.common import Window, tail  # noqa: E402
-from perfbench.serve import SeedModel  # noqa: E402
+from perfbench.serve import CLIENTS, WRITE_PATTERN, SeedModel, _cycle  # noqa: E402
 from perfbench.trace import Span, Tracer  # noqa: E402
 
 
@@ -83,7 +83,7 @@ def test_self_time_subtracts_covered_children():
 
 
 def test_wrong_expected_values_fail_the_checks():
-    m = SeedModel(seed=3, n=50, id_span=50, match=5)
+    m = SeedModel(seed=3, n=50, match=5)
     doc_id = m.ids[7]
     op = m.getdoc_op(doc_id)
     good = {"document": {"id": doc_id, "doc": json.loads(m.docs[doc_id])}}
@@ -103,11 +103,22 @@ def test_wrong_expected_values_fail_the_checks():
     assert compare_counts({"q": 3}, {"q": 4}) != []
 
 
+def test_write_mix_and_openings():
+    counts = {k: WRITE_PATTERN.count(k) for k in set(WRITE_PATTERN)}
+    assert counts == {"add": 10, "update": 5, "delete": 1, "getdoc": 2,
+                      "query": 2}
+    # a short window holds only the openings, so together they hold every
+    # kind, and each GetDoc reads back a document its client just added
+    openings = [[next(k) for _ in range(2)]
+                for k in map(_cycle, range(CLIENTS))]
+    assert {k for o in openings for k in o} == set(WRITE_PATTERN)
+    assert ["add", "getdoc"] in openings and ["add", "delete"] in openings
+
+
 # -- end to end, tiny size ---------------------------------------------------
 
 
-@pytest.mark.parametrize("workload", ["serve_read", "serve_write",
-                                      "batch_queries"])
+@pytest.mark.parametrize("workload", ["serve_write", "batch_queries"])
 def test_smoke_tiny(workload):
     p, result = _bench("--workload", workload, "--seed", "1", "--seconds",
                        "3", "--trace", "0", "--size", "tiny")
@@ -127,11 +138,13 @@ def test_smoke_tiny(workload):
 
 
 def test_traced_span_tree():
+    # 10 s, as in BENCHMARK.json, so the window holds every op kind
     p, result = _bench("--workload", "serve_write", "--seed", "2",
-                       "--seconds", "4", "--trace", "1", "--size", "tiny")
+                       "--seconds", "10", "--trace", "1", "--size", "tiny")
     assert p.returncode == 0, p.stderr[-3000:]
     assert set(result["metrics"]) == _declared("per_layer")
-    chk = _artifact("serve_write", 2, 1)["span_check"]
+    art = _artifact("serve_write", 2, 1)
+    chk = art["span_check"]
     assert chk["requests"] >= 1 and chk["spans"] > chk["requests"]
     assert chk["orphans"] == 0
     assert chk["negative_self"] == 0
@@ -140,24 +153,31 @@ def test_traced_span_tree():
     metrics = result["metrics"]
     assert metrics["store.lock_hold_ms"]["value"] > 0
     assert metrics["spark.jobs.write"]["value"] >= 1
+    # the traced window crossed the delete path, a read-your-writes GetDoc
+    # and a RunQuery
+    assert metrics["store.delete_docs_ms"]["value"] > 0
+    assert art["result"]["traced"]["started"].get("getdoc.own", 0) >= 1
+    assert metrics["store.get_doc_ms"]["value"] > 0
+    assert metrics["jql.parse_ms"]["value"] > 0
 
 
 def test_wrong_expected_value_fails_the_run():
-    # every expected body is altered once the stores are seeded and warmed,
-    # so each GetDoc and RunQuery answer disagrees with the check
+    # after the window, the expected body of every acknowledged add is
+    # altered, so the reopen check finds the store disagreeing with it
     code = (
-        "import json, sys\n"
+        "import sys\n"
         f"sys.path.insert(0, {ROOT!r})\n"
         "import perfbench.serve as s\n"
-        "warm = s._warm_up_reads\n"
-        "def wrong(port, plans, *a, **k):\n"
-        "    out = warm(port, plans, *a, **k)\n"
-        "    for i in plans[0].m.ids:\n"
-        "        plans[0].m.docs[i] = json.dumps({'k': -1})\n"
-        "    return out\n"
-        "s._warm_up_reads = wrong\n"
+        "check = s.check_reopened\n"
+        "def wrong(spark, root, plans):\n"
+        "    for p in plans:\n"
+        "        for i, want in p.expect.items():\n"
+        "            if want is not None:\n"
+        "                p.expect[i] = {**want, 'tag': -1}\n"
+        "    return check(spark, root, plans)\n"
+        "s.check_reopened = wrong\n"
     )
-    p, result = _bench("--workload", "serve_read", "--seed", "3",
+    p, result = _bench("--workload", "serve_write", "--seed", "3",
                        "--seconds", "3", "--trace", "0", "--size", "tiny",
                        code=code)
     assert p.returncode == 1
