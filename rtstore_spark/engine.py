@@ -3,7 +3,11 @@
 Single place that encodes the scale-aware defaults: AQE on (runtime re-plan +
 skew-join handling), shuffle partitions sized for the local harness via
 ``SPARK_GRAFT_CPUS`` (a real cluster deployment overrides these through
-spark-submit conf), Arrow enabled for the Pandas-UDF slow path.
+spark-submit conf), and Arrow for pandas conversions (``toPandas``,
+``createDataFrame(pandas)``). Pandas UDFs use Arrow whatever the conf says,
+and so do the store's driver-row frames: ``DocStore._local_df`` hands Spark
+a ``pyarrow.Table``, which the JVM reads as an Arrow stream, because the
+pickled-list path would run a Python-worker task for every one-row append.
 """
 
 from __future__ import annotations

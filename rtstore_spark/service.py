@@ -43,6 +43,7 @@ Design notes:
 from __future__ import annotations
 
 import json
+import logging
 import queue
 import socket
 import threading
@@ -55,6 +56,8 @@ from rtstore_spark.errors import RTStoreError
 from rtstore_spark.store.docstore import DocStore
 from rtstore_spark.store.ingest import Ingest
 from rtstore_spark.system import SetupError, SystemStore, contract_sync_status
+
+log = logging.getLogger(__name__)
 
 
 class ServiceError(Exception):
@@ -113,6 +116,9 @@ class BlockEventBroadcaster:
         # subscribers attached" as an EVENT instead of a wall-clock sleep
         # — sleeps sized for an idle box flake under load (round-8 gate)
         self._membership = threading.Condition(self._lock)
+        # failed polls over the broadcaster's life; each failure streak
+        # (ended by a successful poll) logs one warning
+        self.poll_errors = 0
 
     def wait_for_subscribers(self, n: int, timeout: float = 60.0) -> bool:
         """Block until at least ``n`` subscribers are attached (True) or
@@ -166,6 +172,7 @@ class BlockEventBroadcaster:
         # thread-local job group: every poll aggregate this thread submits
         # is attributed here (the test's one-job-per-tick counter)
         sc.setJobGroup(self.JOB_GROUP, "shared Subscribe block poll", False)
+        failing = False
         while True:
             with self._lock:
                 if not self._subs:
@@ -174,8 +181,17 @@ class BlockEventBroadcaster:
                 cursor = self._cursor
             try:
                 events = self.node.block_events_after(cursor)
+                failing = False
             except Exception:  # noqa: BLE001 — a failed poll is retried,
                 events = []  # never the death of every subscription
+                self.poll_errors += 1
+                if not failing:
+                    log.warning(
+                        "Subscribe block poll failed after block %s; "
+                        "retrying every %ss", cursor, self.poll_seconds,
+                        exc_info=True,
+                    )
+                failing = True
             if events:
                 with self._lock:
                     self._cursor = max(cursor, events[-1]["block_id"])

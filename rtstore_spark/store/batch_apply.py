@@ -55,6 +55,16 @@ from rtstore_spark.store.docstore import (
 )
 
 
+# the small driver-side offset tables the applier broadcasts into its
+# plans (built through DocStore._local_df, like every driver-row frame)
+FILE_OFFSET_SCHEMA = (
+    T.StructType().add("_f", T.StringType()).add("_off", T.LongType())
+)
+ARRIVAL_START_SCHEMA = (
+    T.StructType().add("_arrival", T.LongType()).add("_start", T.LongType())
+)
+
+
 def _with_doc_bucket(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
@@ -312,11 +322,9 @@ class BatchApplier:
         per_file = rows.groupBy("_f").count().collect()
         offs, cum = [], 0
         for r in sorted(per_file, key=lambda r: r["_f"]):
-            offs.append((r["_f"], cum))
+            offs.append({"_f": r["_f"], "_off": cum})
             cum += r["count"]
-        off_df = self.spark.createDataFrame(
-            offs, schema="_f string, _off long"
-        )
+        off_df = self.store._local_df(offs, FILE_OFFSET_SCHEMA)
         w = Window.partitionBy("_f").orderBy(
             "_s", F.monotonically_increasing_id()
         )
@@ -628,7 +636,7 @@ class BatchApplier:
             # one contiguous reservation per collection (sorted order keeps
             # replica id assignment deterministic), mapped to per-mutation
             # absolute start ids
-            offs: list[tuple[int, int]] = []
+            offs: list[dict] = []
             for (db, col), e in sorted(by_col.items()):
                 if (db, col) not in existing:
                     continue
@@ -637,14 +645,12 @@ class BatchApplier:
                     continue
                 cum = store.state.reserve_doc_ids(db, int(n_docs))
                 for arr, n in sorted(e["adds"]):
-                    offs.append((arr, cum))
+                    offs.append({"_arrival": arr, "_start": cum})
                     cum += n
                 e["n_docs"] = n_docs
             add_rows_all = None
             if offs:
-                off_df = self.spark.createDataFrame(
-                    offs, schema="_arrival long, _start long"
-                )
+                off_df = self.store._local_df(offs, ARRIVAL_START_SCHEMA)
                 add_rows_all = (
                     doc_ops.filter(F.col("_action") == "add_document")
                     .select(

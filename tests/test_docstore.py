@@ -8,6 +8,7 @@ negatives, index add), and the doc-id replay contract
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -22,6 +23,12 @@ from rtstore_spark.errors import (
 )
 from rtstore_spark.functions.merge_patch import merge_patch
 from rtstore_spark.store import DocStore
+from rtstore_spark.store.docstore import (
+    DOC_SCHEMA,
+    LOG_SCHEMA,
+    WIRE_ARCHIVE_SCHEMA,
+    derive_db_addr,
+)
 
 ALICE = "0x" + "aa" * 20
 BOB = "0x" + "bb" * 20
@@ -506,3 +513,260 @@ class TestZOrderManyColumns:
             rows += pq.read_table(f, columns=["doc"]).to_pylist()
         got = [tuple(json.loads(r["doc"])[c] for c in "wxyz") for r in rows]
         assert got == sorted(pts, key=zval)
+
+
+# ---------------------------------------------------------------------------
+# driver-row frames: every frame the store builds from driver rows goes
+# through Arrow (DocStore._local_df); these pin it against the pickled-list
+# path it replaced, table by table
+# ---------------------------------------------------------------------------
+
+DB1 = "0x" + "01" * 20
+PINNED_ROWS = {
+    "databases": (DocStore.DB_SCHEMA, [
+        {"db_addr": DB1, "sender": ALICE, "desc": "d", "db_type": "event",
+         "meta": '{"tables": ["t"]}', "block": 3, "order": 1},
+        {"db_addr": DB1, "sender": BOB, "desc": None, "db_type": "deleted",
+         "meta": None, "block": 2**40, "order": 2**31 - 1},
+    ]),
+    "collections": (DocStore.COL_SCHEMA, [
+        {"db_addr": DB1, "col_name": "c", "sender": ALICE, "block": 1,
+         "index_fields": '[{"path": "/a", "type": "string"}]', "order": 2},
+        {"db_addr": DB1, "col_name": "", "index_fields": None, "sender": "",
+         "block": 0, "order": 0},
+    ]),
+    "docs": (DOC_SCHEMA, [
+        {"doc_id": 7, "owner": ALICE, "doc": '{"x": "é ✓"}', "op": "A",
+         "block": 1, "order": 3},
+        {"doc_id": 2**53 + 1, "owner": None, "doc": None, "op": "D",
+         "block": 1, "order": 4},
+    ]),
+    "log": (LOG_SCHEMA, [
+        {"id": "ab" * 32, "sender": ALICE, "nonce": 5, "action": "add_document",
+         "db_addr": DB1, "col_name": "c", "payload": '{"docs": ["{}"]}',
+         "doc_ids": "[7]", "block": 1, "order": 3},
+        {"id": "cd" * 32, "sender": BOB, "nonce": 0, "action": "add_index",
+         "db_addr": None, "col_name": None, "payload": None, "doc_ids": None,
+         "block": 9, "order": -1},
+    ]),
+    "wire_archive": (WIRE_ARCHIVE_SCHEMA, [
+        {"id": "m1", "payload": b"\x00\xff{}", "signature": "0x" + "5" * 130,
+         "block": 5, "order": 0},
+        {"id": "m2", "payload": b"", "signature": "", "block": 6, "order": 1},
+    ]),
+}
+
+
+class TestDriverRowFrames:
+    @pytest.mark.parametrize("table", sorted(PINNED_ROWS))
+    def test_arrow_frame_matches_list_path(self, spark, store, tmp_path, table):
+        """Same schema (nullability included) and same values as the
+        pickled-list frame, in memory and after a parquet round trip."""
+        import pyarrow.parquet as pq
+
+        schema, rows = PINNED_ROWS[table]
+        old = spark.createDataFrame(rows, schema=schema)
+        new = store._local_df(rows, schema)
+        assert new.schema == old.schema == schema
+        assert [r.asDict() for r in new.collect()] == rows
+        assert new.collect() == old.collect()
+        for name, df in (("old", old), ("new", new)):
+            df.coalesce(1).write.parquet(str(tmp_path / name))
+        back = {
+            name: spark.read.parquet(str(tmp_path / name))
+            for name in ("old", "new")
+        }
+        assert back["new"].schema == back["old"].schema
+        assert back["new"].collect() == back["old"].collect()
+        (f_old,) = (tmp_path / "old").glob("*.parquet")
+        (f_new,) = (tmp_path / "new").glob("*.parquet")
+        assert pq.read_schema(f_new) == pq.read_schema(f_old)
+
+    def test_store_tables_read_back_pinned_rows(self, spark, tmp_path):
+        """Each store table written through the public API reads back the
+        pinned rows, and its files carry the declared nullability."""
+        import pyarrow.parquet as pq
+
+        store = DocStore(spark, str(tmp_path / "w"))
+        db = store.create_database(ALICE, nonce=1, desc="d", seq=(1, 1))
+        idx = [{"path": "/a", "type": "string"}]
+        store.create_collection(db, "c", idx, ALICE, seq=(1, 2))
+        store.add_docs(db, "c", ['{"x": "é"}'], ALICE, doc_ids=[7], seq=(1, 3))
+        store.delete_docs(db, "c", [7], ALICE, seq=(1, 4))
+        store.archive_wire_envelope("m1", b"\x00\xff", "0xsig", 1, 5)
+        store.flush_wire_archive()
+        assert db == derive_db_addr(ALICE, 1)
+
+        def rows(df, drop=()):
+            return sorted(
+                ({k: v for k, v in r.asDict().items() if k not in drop}
+                 for r in df.collect()),
+                key=lambda r: (r["block"], r["order"]),
+            )
+
+        assert rows(store.databases()) == [
+            {"db_addr": db, "sender": ALICE, "desc": "d", "db_type": "doc",
+             "meta": None, "block": 1, "order": 1},
+        ]
+        assert rows(store._read(store._col_path(), store.COL_SCHEMA)) == [
+            {"db_addr": db, "col_name": "c", "index_fields": json.dumps(idx),
+             "sender": ALICE, "block": 1, "order": 2},
+        ]
+        assert rows(store._read_docs(store._data_path(db, "c"))) == [
+            {"doc_id": 7, "owner": ALICE, "doc": '{"x": "é"}', "op": "A",
+             "block": 1, "order": 3, "doc_bucket": 0},
+            {"doc_id": 7, "owner": ALICE, "doc": None, "op": "D",
+             "block": 1, "order": 4, "doc_bucket": 0},
+        ]
+        log = rows(store.mutation_log(), drop=("id", "payload"))
+        assert [
+            (r["action"], r["nonce"], r["col_name"], r["doc_ids"]) for r in log
+        ] == [
+            ("create_doc_db", 1, None, None),
+            ("add_collection", 0, "c", None),
+            ("add_document", 0, "c", "[7]"),
+            ("delete_document", 0, "c", "[7]"),
+        ]
+        assert rows(store.wire_archive()) == [
+            {"id": "m1", "payload": bytearray(b"\x00\xff"), "signature": "0xsig",
+             "block": 1, "order": 5, "block_bucket": 0},
+        ]
+        declared = {
+            "__databases": store.DB_SCHEMA, "__collections": store.COL_SCHEMA,
+            "data": DOC_SCHEMA, "mutation_log": LOG_SCHEMA,
+            "wire_archive": WIRE_ARCHIVE_SCHEMA,
+        }
+        files = [
+            f for f in store.fs.list_files_recursive(store.root)
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1 + 1 + 2 + 4 + 1
+        for f in files:
+            table = os.path.relpath(f, store.root).split(os.sep)[0]
+            want = [(x.name, x.nullable) for x in declared[table].fields]
+            got = [(x.name, x.nullable) for x in pq.read_schema(f)]
+            assert got == want, f
+
+    @pytest.mark.parametrize("table", sorted(PINNED_ROWS))
+    @pytest.mark.parametrize("fault", [None, "1", 1.5])
+    def test_bad_row_raises_before_any_write(self, store, db_col, table, fault):
+        """A None in a non-nullable field or a wrongly typed value raises
+        and leaves no new file in the store. A float in a long column is
+        the case Arrow alone would let through (it truncates)."""
+        db, col = db_col
+        schema, rows = PINNED_ROWS[table]
+        bad = dict(rows[0])
+        if fault is None:
+            field = next(f.name for f in schema.fields if not f.nullable)
+            bad[field] = None
+        else:
+            bad["block"] = fault
+        writers = {
+            "databases": lambda: store._append(
+                [bad], store.DB_SCHEMA, store._db_path()),
+            "collections": lambda: store._append(
+                [bad], store.COL_SCHEMA, store._col_path()),
+            "docs": lambda: store._append_doc_rows(
+                [bad], store._data_path(db, col)),
+            "log": lambda: store._log(*(bad[f.name] for f in LOG_SCHEMA.fields[1:]),
+                                      mid=bad["id"]),
+            "wire_archive": lambda: store._flush_wire_rows([bad]),
+        }
+        if table == "log" and fault is None:
+            bad["sender"] = None  # _log derives the id; null a plain field
+        before = store.fs.list_files_recursive(store.root)
+        with pytest.raises((TypeError, ValueError)):
+            writers[table]()
+        assert store.fs.list_files_recursive(store.root) == before
+
+
+def _count_jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; (result, jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestCatalogCache:
+    def test_second_instance_writes_are_seen(self, spark, store, db_col):
+        db, col = db_col
+        assert store._col_row(db, "c2") is None  # cache warm, without c2
+        other = DocStore(spark, store.root)
+        other.create_collection(db, "c2", [{"path": "/k", "type": "string"}],
+                                ALICE)
+        assert store._indexed_paths(db, "c2") == [("/k", "string")]
+        (i,) = store.add_docs(db, "c2", ['{"k": "v"}'], ALICE)
+        assert json.loads(store.get_doc(db, "c2", i)["doc"]) == {"k": "v"}
+
+    def test_add_index_visible_at_once(self, store, db_col):
+        db, col = db_col
+        assert store._indexed_paths(db, col) == [("/city", "string")]
+        store.add_index(db, col, [{"path": "/age", "type": "int64"}], ALICE)
+        assert store._indexed_paths(db, col) == [
+            ("/city", "string"), ("/age", "int64"),
+        ]
+        with pytest.raises(IndexAlreadyExists):
+            store.add_index(db, col, [{"path": "/age", "type": "int64"}], ALICE)
+
+    def test_pointer_flip_reloads(self, store, db_col, monkeypatch):
+        db, col = db_col
+        loads = []
+        collections = store.collections
+        monkeypatch.setattr(
+            store, "collections",
+            lambda *a: loads.append(a) or collections(*a),
+        )
+        before = store._col_row(db, col)
+        assert store._col_row(db, col) == before and len(loads) == 1
+        store.compact_catalogs()
+        assert store._col_row(db, col) == before and len(loads) == 2
+        assert store._col_cache[0][0].endswith("gen-000001")
+        assert store._col_row(db, col) == before and len(loads) == 2
+
+    def test_missing_collection_still_raises(self, store, db_col):
+        db, col = db_col
+        store._require_col(db, col)  # warm
+        with pytest.raises(CollectionNotFound):
+            store.add_docs(db, "nope", ['{"a": 1}'], ALICE)
+        with pytest.raises(CollectionNotFound):
+            store.get_doc("0x" + "00" * 20, col, 1)
+        with pytest.raises(CollectionNotFound):
+            store.add_index(db, "nope", [{"path": "/a"}], ALICE)
+
+    def test_cache_hit_submits_no_jobs(self, spark, store, db_col):
+        db, col = db_col
+        store._require_col(db, col)  # warm
+        _, jobs = _count_jobs(
+            spark, "catalog-cache-hit",
+            lambda: (store._require_col(db, col),
+                     store._indexed_paths(db, col),
+                     store._col_row(db, "absent")),
+        )
+        assert jobs == 0
+
+
+class TestWritePathJobCounts:
+    """Spark jobs per store call — the per-layer attribution the traced
+    benchmark reports (spark.jobs.write / spark.jobs.getdoc)."""
+
+    def test_one_doc_add_is_two_jobs_and_get_at_most_two(
+        self, spark, store, db_col
+    ):
+        db, col = db_col
+        store.add_docs(db, col, ['{"city": "warm"}'], ALICE)
+        (i,), add_jobs = _count_jobs(
+            spark, "pin-add-docs",
+            lambda: store.add_docs(db, col, ['{"city": "x"}'], ALICE),
+        )
+        assert add_jobs == 2  # the doc-row append and the log append
+        row, get_jobs = _count_jobs(
+            spark, "pin-get-doc", lambda: store.get_doc(db, col, i)
+        )
+        assert json.loads(row["doc"]) == {"city": "x"}
+        assert get_jobs <= 2
