@@ -4,10 +4,12 @@ Single place that encodes the scale-aware defaults: AQE on (runtime re-plan +
 skew-join handling), shuffle partitions sized for the local harness via
 ``SPARK_GRAFT_CPUS`` (a real cluster deployment overrides these through
 spark-submit conf), and Arrow for pandas conversions (``toPandas``,
-``createDataFrame(pandas)``). Pandas UDFs use Arrow whatever the conf says,
-and so do the store's driver-row frames: ``DocStore._local_df`` hands Spark
-a ``pyarrow.Table``, which the JVM reads as an Arrow stream, because the
-pickled-list path would run a Python-worker task for every one-row append.
+``createDataFrame(pandas)``). Pandas UDFs use Arrow whatever the conf says.
+The store's online appends do not use the session at all: ``DocStore``
+writes the rows it holds on the driver as parquet objects itself
+(``_write_rows``). The few driver-row frames that feed a Spark plan
+(``DocStore._local_df``) hand Spark a ``pyarrow.Table``, which the JVM
+reads as an Arrow stream with no Python-worker task.
 """
 
 from __future__ import annotations

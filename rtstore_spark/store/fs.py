@@ -1,18 +1,28 @@
-"""Swappable filesystem interface for the storage plane's control files.
+"""Swappable filesystem interface for the storage plane.
 
 The storage plane has two kinds of file traffic:
 
-- **data plane** — parquet reads/writes. These are Spark jobs and already
-  speak every Hadoop-supported scheme (``file:``, ``hdfs:``, ``s3a:``, …);
+- **Spark jobs** — collection, log and catalog reads, compaction, batch
+  applies and every other set-wise write. Spark speaks every
+  Hadoop-supported scheme (``file:``, ``hdfs:``, ``s3a:``, …) itself;
   nothing here touches them.
-- **control plane** — pointer files, directory listings, sizes, cleanup.
-  These used to be raw ``os.*`` calls, which only work on a driver-local
-  POSIX filesystem. They now go through this interface: ``LocalFS`` for a
-  local root, ``HadoopFS`` for any URI the Spark session's Hadoop
-  configuration can reach (public `org.apache.hadoop.fs.FileSystem` API via
-  the JVM gateway — the same client Spark's own reads use).
+- **driver file ops** — pointer files, directory listings, sizes, cleanup,
+  and the online write path's appends: each append of rows ``DocStore``
+  holds on the driver (a SendMutation's doc, log and catalog rows, a
+  block's wire envelopes) is one parquet object per partition, serialised
+  on the driver and put in place with ``write_bytes_atomic``, with no
+  Spark job. These go through this interface: ``LocalFS`` for a local
+  root, ``HadoopFS`` for any URI the Spark session's Hadoop configuration
+  can reach (public `org.apache.hadoop.fs.FileSystem` API via the JVM
+  gateway — the same client Spark's own reads use).
 
-Crucially the interface has **no atomic-rename requirement**. Snapshot
+``write_bytes_atomic`` publishes a whole object or nothing: it writes a
+``.``-prefixed temp object next to the target and renames it into place.
+Readers (``DocStore``'s listings) and Spark's file index skip names that
+start with ``.`` or ``_``, so a reader never sees a torn file, and a crash
+before the rename leaves only an invisible temp.
+
+Crucially the interface has **no directory-rename requirement**. Snapshot
 swaps (compaction, log GC) are *manifest-pointer flips*: the replacement
 snapshot is written to a fresh generation directory and a tiny ``_current``
 file naming the live generation is overwritten last. Overwriting one small
@@ -29,6 +39,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 
 class LocalFS:
@@ -70,11 +81,21 @@ class LocalFS:
             return None
 
     def write_text_atomic(self, path: str, text: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-        with os.fdopen(fd, "w") as f:
-            f.write(text)
-        os.replace(tmp, path)
+        self.write_bytes_atomic(path, text.encode("utf-8"))
+
+    def write_bytes_atomic(self, path: str, data: bytes) -> None:
+        """Publish ``data`` at ``path`` whole: a ``.``-prefixed temp file
+        in the target directory, then ``os.replace``."""
+        directory = os.path.dirname(path)
+        os.makedirs(directory, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=directory, prefix=".")
+        try:
+            with os.fdopen(fd, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            self.delete(tmp)
+            raise
 
     def delete(self, path: str, recursive: bool = False) -> None:
         """Best-effort delete; missing paths are fine."""
@@ -183,6 +204,28 @@ class HadoopFS:
             out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
+
+    def write_bytes_atomic(self, path: str, data: bytes) -> None:
+        """Publish ``data`` at the fresh path ``path`` whole: a
+        ``.``-prefixed temp object in the target directory, then
+        ``rename`` (Hadoop's rename does not replace an existing
+        target)."""
+        fs, jp = self._fs(path), self._jpath(path)
+        tmp = self._jpath(os.path.join(
+            os.path.dirname(path),
+            f".{os.path.basename(path)}.{uuid.uuid4().hex[:8]}.tmp",
+        ))
+        try:
+            out = fs.create(tmp, False)
+            try:
+                out.write(bytearray(data))
+            finally:
+                out.close()
+            if not fs.rename(tmp, jp):
+                raise OSError(f"rename to {path} failed")
+        except BaseException:
+            self.delete(tmp.toString())
+            raise
 
     def delete(self, path: str, recursive: bool = False) -> None:
         fs, jp = self._fs(path), self._jpath(path)

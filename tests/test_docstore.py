@@ -394,6 +394,69 @@ class TestMergePatchUnit:
         assert merge_patch(None, {"a": 1}) == {"a": 1}
 
 
+# UpdateDocument's written doc text: (case, base doc, patch, text). Each text
+# is what the pandas-UDF merge (make_json_merge_patch) wrote through
+# update_docs, pinned byte for byte.
+MERGE_CASES = [
+    ("nested_merge", '{"a": {"b": 1, "c": 2}, "x": 1}',
+     '{"a": {"b": 9, "d": {"e": 1}}}',
+     '{"a":{"b":9,"c":2,"d":{"e":1}},"x":1}'),
+    ("null_deletes", '{"a": 1, "b": 2, "n": {"k": 1, "j": 2}}',
+     '{"a": null, "n": {"k": null}, "zz": null}',
+     '{"b":2,"n":{"j":2}}'),
+    ("non_object_list", '{"a": 1}', '[1, {"a": null}]', '[1,{"a":null}]'),
+    ("non_object_scalar", '{"a": 1}', '"text"', '"text"'),
+    ("array_replaced", '{"arr": [1, 2, 3], "o": {"arr": [{"x": 1}]}}',
+     '{"arr": [4], "o": {"arr": []}}',
+     '{"arr":[4],"o":{"arr":[]}}'),
+    ("unicode", '{"name": "é ✓", "k": "\\ud83d\\ude00"}',
+     '{"emoji": "\U0001F600", "name": "ü", "é": {"✓": 1}}',
+     '{"emoji":"\\ud83d\\ude00","k":"\\ud83d\\ude00","name":"\\u00fc",'
+     '"\\u00e9":{"\\u2713":1}}'),
+    ("empty_base", "{}", '{"a": {"b": null, "c": 1}, "d": null}',
+     '{"a":{"c":1}}'),
+    ("numbers", '{"f": 1.5, "big": 12345678901234567890, "e": 1e400}',
+     '{"g": -0.0, "i": 10}',
+     '{"big":12345678901234567890,"e":Infinity,"f":1.5,"g":-0.0,"i":10}'),
+]
+
+# one UpdateDocument naming the same id twice: each patch merges against
+# the stored version, and both merged versions are written
+DUP_BASE = '{"d": {"k": 1}}'
+DUP_PATCHES = ['{"d": {"p": 1}}', '{"d": null, "q": [2]}']
+DUP_TEXTS = ['{"d":{"k":1,"p":1}}', '{"q":[2]}']
+
+
+class TestUpdateMergePin:
+    def test_udf_still_produces_pinned_texts(self, spark):
+        from rtstore_spark.functions.merge_patch import make_json_merge_patch
+
+        pairs = [(b, p) for _, b, p, _ in MERGE_CASES]
+        pairs += [(DUP_BASE, p) for p in DUP_PATCHES]
+        df = spark.createDataFrame(pairs, "d string, p string")
+        got = [r[0] for r in df.select(make_json_merge_patch()("d", "p"))
+               .collect()]
+        assert got == [t for *_, t in MERGE_CASES] + DUP_TEXTS
+
+    def test_update_docs_writes_pinned_texts(self, store, db_col):
+        db, col = db_col
+        ids = store.add_docs(
+            db, col, [b for _, b, _, _ in MERGE_CASES] + [DUP_BASE], ALICE
+        )
+        store.update_docs(db, col, ids[:-1], [p for _, _, p, _ in MERGE_CASES],
+                          ALICE, seq=(7, 1))
+        store.update_docs(db, col, [ids[-1]] * 2, DUP_PATCHES, ALICE,
+                          seq=(7, 2))
+        written = sorted(
+            (r["doc_id"], r["order"], r["doc"], r["owner"], r["block"])
+            for r in store._read_docs(store._data_path(db, col))
+            .filter("op = 'U'").collect()
+        )
+        want = [(i, 1, t, ALICE, 7) for i, (*_, t) in zip(ids, MERGE_CASES)]
+        want += sorted((ids[-1], 2, t, ALICE, 7) for t in DUP_TEXTS)
+        assert written == want
+
+
 class TestZOrderCompaction:
     def test_two_numeric_indexes_interleave(self, spark, tmp_path):
         """With two numeric indexes registered, compact() lays rows out in
@@ -755,18 +818,106 @@ class TestWritePathJobCounts:
     """Spark jobs per store call — the per-layer attribution the traced
     benchmark reports (spark.jobs.write / spark.jobs.getdoc)."""
 
-    def test_one_doc_add_is_two_jobs_and_get_at_most_two(
-        self, spark, store, db_col
-    ):
+    def test_write_jobs_and_get_at_most_two(self, spark, store, db_col):
         db, col = db_col
         store.add_docs(db, col, ['{"city": "warm"}'], ALICE)
         (i,), add_jobs = _count_jobs(
             spark, "pin-add-docs",
             lambda: store.add_docs(db, col, ['{"city": "x"}'], ALICE),
         )
-        assert add_jobs == 2  # the doc-row append and the log append
+        assert add_jobs == 0  # doc and log rows are written by the driver
+        _, update_jobs = _count_jobs(
+            spark, "pin-update-docs",
+            lambda: store.update_docs(db, col, [i], ['{"n": 1}'], ALICE),
+        )
+        assert update_jobs == 1  # the owner point read
         row, get_jobs = _count_jobs(
             spark, "pin-get-doc", lambda: store.get_doc(db, col, i)
         )
-        assert json.loads(row["doc"]) == {"city": "x"}
+        assert json.loads(row["doc"]) == {"city": "x", "n": 1}
         assert get_jobs <= 2
+        _, delete_jobs = _count_jobs(
+            spark, "pin-delete-docs",
+            lambda: store.delete_docs(db, col, [i], ALICE),
+        )
+        assert delete_jobs == 1  # the owner point read
+        assert store.get_doc(db, col, i) is None
+
+
+class TestTornWrite:
+    """A driver-row append whose rename fails after the temp bytes are
+    written publishes nothing: readers see exactly what they saw before."""
+
+    @staticmethod
+    def _snapshot(store, db, col):
+        return (
+            sorted(
+                (r["doc_id"], r["doc"])
+                for r in store.current_state(db, col).collect()
+            ),
+            sorted(
+                (r["block"], r["order"], r["action"])
+                for r in store.mutation_log().collect()
+            ),
+            store._col_row(db, col),
+        )
+
+    @staticmethod
+    def _visible_parquet(store):
+        return [
+            f for f in store.fs.list_files_recursive(store.root)
+            if f.endswith(".parquet")
+            and not os.path.basename(f).startswith((".", "_"))
+        ]
+
+    def test_failed_rename_publishes_nothing(self, spark, tmp_path, monkeypatch):
+        import rtstore_spark.store.fs as fsmod
+
+        store = DocStore(spark, str(tmp_path / "torn"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        (i,) = store.add_docs(db, "c", ['{"v": 1}'], ALICE)
+        store.archive_wire_envelope("m1", b"\x01", "0xsig", 1, 0)
+        store.flush_wire_archive()
+        before = self._snapshot(store, db, "c")
+        files = self._visible_parquet(store)
+
+        temps = []
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if not dst.endswith(".parquet"):  # the state file still commits
+                return real_replace(src, dst)
+            temps.append((os.path.basename(src), os.path.getsize(src)))
+            raise OSError("simulated crash before rename")
+
+        monkeypatch.setattr(fsmod.os, "replace", replace)
+        with pytest.raises(OSError, match="simulated crash"):
+            store.add_docs(db, "c", ['{"v": 2}'], ALICE)
+        with pytest.raises(OSError, match="simulated crash"):
+            store.update_docs(db, "c", [i], ['{"v": 3}'], ALICE)
+        with pytest.raises(OSError, match="simulated crash"):
+            store.create_collection(db, "c2", [], ALICE)
+        with pytest.raises(OSError, match="simulated crash"):
+            store._log(ALICE, 0, "add_index", db, "c", None, None, 9, 0)
+        store.archive_wire_envelope("m2", b"\x02", "0xsig", 2, 0)
+        with pytest.raises(OSError, match="simulated crash"):
+            store.flush_wire_archive()
+        # every attempt wrote its temp bytes, under a hidden name
+        assert len(temps) == 5
+        assert all(name.startswith(".") and size > 0 for name, size in temps)
+        assert self._visible_parquet(store) == files
+        assert not [
+            f for f in store.fs.list_files_recursive(store.root)
+            if os.path.basename(f).startswith(".")
+        ]
+        assert self._snapshot(store, db, "c") == before
+        assert store._col_row(db, "c2") is None
+        # the failed flush put its rows back; the next flush writes them
+        assert [r["id"] for r in store._wire_buffer] == ["m2"]
+        monkeypatch.undo()
+        store.flush_wire_archive()
+        assert store._wire_buffer == []
+        assert sorted(
+            r["id"] for r in store.wire_archive().collect()
+        ) == ["m1", "m2"]

@@ -28,8 +28,10 @@ from rtstore_spark.store.fs import HadoopFS, LocalFS, fs_for
 ALICE = "0x" + "aa" * 20
 
 
-def _exercise_fs(fs, root: str) -> dict:
-    """Run the whole interface against one root; return observations."""
+def _exercise_fs(fs, root: str, failing_rename) -> dict:
+    """Run the whole interface against one root; return observations.
+    ``failing_rename()`` is a context manager under which ``fs``'s rename
+    step fails; it yields the list of temp names the rename was given."""
     fs.makedirs(os.path.join(root, "d1", "d2"))
     fs.write_text_atomic(os.path.join(root, "d1", "a.txt"), "alpha")
     fs.write_text_atomic(os.path.join(root, "d1", "d2", "b.txt"), "beta")
@@ -50,23 +52,84 @@ def _exercise_fs(fs, root: str) -> dict:
         ],
         "du": fs.du(os.path.join(root, "d1")),
     }
+    # a fresh object lands whole, in a directory the call creates
+    blob = bytes(range(256)) * 3
+    fs.write_bytes_atomic(os.path.join(root, "d3", "c.bin"), blob)
+    obs["bytes_roundtrip"] = fs.read_binary(os.path.join(root, "d3", "c.bin"))
+    obs["bytes_listdir"] = fs.listdir(os.path.join(root, "d3"))
+    # a failed rename publishes nothing and leaves no temp behind; the
+    # temp it wrote was a hidden (.-prefixed) sibling of the target
+    with failing_rename() as temps:
+        try:
+            fs.write_bytes_atomic(os.path.join(root, "d3", "e.bin"), b"torn")
+        except OSError:
+            obs["failed_write_raised"] = True
+    obs["failed_temp_names_hidden"] = [
+        t.startswith(".") and t != "e.bin" for t in temps
+    ]
+    obs["after_failed_write"] = fs.listdir(os.path.join(root, "d3"))
     fs.delete(os.path.join(root, "d1", "d2"), recursive=True)
     obs["after_delete"] = fs.listdir(os.path.join(root, "d1"))
     fs.delete(os.path.join(root, "nope"))  # missing: no error
     return obs
 
 
+class _RenameFails:
+    """A Hadoop ``FileSystem`` proxy whose ``rename`` reports failure."""
+
+    def __init__(self, fs, temps):
+        self._fs, self._temps = fs, temps
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        self._temps.append(src.getName())
+        return False
+
+
 class TestFSInterface:
     def test_local_and_hadoop_parity(self, spark, tmp_path):
         """HadoopFS over a local root must observe exactly what LocalFS
         observes — the storage plane cannot care which one it got."""
-        local = _exercise_fs(LocalFS(), str(tmp_path / "l"))
-        hadoop = _exercise_fs(HadoopFS(spark), str(tmp_path / "h"))
+        import contextlib
+
+        import rtstore_spark.store.fs as fsmod
+
+        @contextlib.contextmanager
+        def local_rename_fails():
+            temps = []
+
+            def replace(src, dst):
+                temps.append(os.path.basename(src))
+                raise OSError("simulated rename failure")
+
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(fsmod.os, "replace", replace)
+                yield temps
+
+        hfs = HadoopFS(spark)
+
+        @contextlib.contextmanager
+        def hadoop_rename_fails():
+            temps = []
+            real = hfs._fs
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(hfs, "_fs", lambda p: _RenameFails(real(p), temps))
+                yield temps
+
+        local = _exercise_fs(LocalFS(), str(tmp_path / "l"), local_rename_fails)
+        hadoop = _exercise_fs(hfs, str(tmp_path / "h"), hadoop_rename_fails)
         assert local == hadoop
         assert local["read"] == "alpha2"
         assert local["listdir"] == ["a.txt", "d2"]
         assert local["recursive"] == ["a.txt", "b.txt"]
         assert local["du"] == len("alpha2") + len("beta")
+        assert local["bytes_roundtrip"] == bytes(range(256)) * 3
+        assert local["bytes_listdir"] == ["c.bin"]
+        assert local["failed_write_raised"] is True
+        assert local["failed_temp_names_hidden"] == [True]
+        assert local["after_failed_write"] == ["c.bin"]
         assert local["after_delete"] == ["a.txt"]
 
     def test_fs_for_scheme_routing(self, spark):
