@@ -196,12 +196,9 @@ def run_rollup(args) -> None:
         while not stop.is_set():
             try:
                 if store.state.order > 0:  # open block holds mutations
-                    store.state.next_block()  # the reference's timer tick
-                    # persist the closed block's buffered wire envelopes
-                    # NOW (one file per closed block) — without this,
-                    # rows sit in memory until the next block's first
-                    # mutation or an archive read triggers the flush
-                    store.flush_wire_archive()
+                    # the reference's timer tick; every 16th block also
+                    # folds the small files the online writes left
+                    store.close_block()
                     policy_due = True
                 if policy_due:
                     row = executor.maybe_rollup(
@@ -247,13 +244,6 @@ def run_rollup(args) -> None:
         http.stop()
         if h2:
             h2.stop()
-        try:
-            # orderly shutdown persists the OPEN block's buffered
-            # envelopes too — losing them is acceptable only for a
-            # crash, never for a clean SIGINT
-            store.flush_wire_archive()
-        except Exception as e:  # noqa: BLE001 — shutdown must not hang
-            print(f"wire-archive flush on shutdown failed: {e}", flush=True)
 
 
 def run_index(args) -> None:

@@ -7,9 +7,10 @@ spark-submit conf), and Arrow for pandas conversions (``toPandas``,
 ``createDataFrame(pandas)``). Pandas UDFs use Arrow whatever the conf says.
 The store's online appends do not use the session at all: ``DocStore``
 writes the rows it holds on the driver as parquet objects itself
-(``_write_rows``). The few driver-row frames that feed a Spark plan
-(``DocStore._local_df``) hand Spark a ``pyarrow.Table``, which the JVM
-reads as an Arrow stream with no Python-worker task.
+(``_write_rows``). The only driver-row frames that feed a Spark plan,
+``BatchApplier``'s offset tables (``store.batch_apply._local_df``), hand
+Spark a ``pyarrow.Table``, which the JVM reads as an Arrow stream with no
+Python-worker task.
 """
 
 from __future__ import annotations

@@ -490,8 +490,8 @@ def compact_bm25_index(spark, path: str, keep: int = 1) -> None:
     term-df parquet union into ``<path>/gen-(N+1)``, per-term dfs
     summed, (n_docs, avgdl) folded from the integer ``sum_dl`` totals
     (exact, no float accumulation) — so maintenance is self-contained,
-    the same role ``compact_wire_archive`` plays for the envelope
-    buffer (store/docstore.py). After compaction a reader sees ONE
+    the same role ``compact_wire_archive`` plays for the wire-envelope
+    archive (store/docstore.py). After compaction a reader sees ONE
     union-free generation: no per-arm scans, one row per term. Search
     results are identical by construction (same posting rows, same
     summed dfs, same stats). No-op when the live generation has no

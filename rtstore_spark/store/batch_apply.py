@@ -41,7 +41,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,17 +52,27 @@ from rtstore_spark.store.docstore import (
     DOC_READ_SCHEMA,
     DOC_SCHEMA,
     LOG_BLOCKS_PER_BUCKET,
+    _arrow_table,
 )
 
 
-# the small driver-side offset tables the applier broadcasts into its
-# plans (built through DocStore._local_df, like every driver-row frame)
+# the small driver-side offset tables the applier broadcasts into its plans
 FILE_OFFSET_SCHEMA = (
     T.StructType().add("_f", T.StringType()).add("_off", T.LongType())
 )
 ARRIVAL_START_SCHEMA = (
     T.StructType().add("_arrival", T.LongType()).add("_start", T.LongType())
 )
+
+
+def _local_df(
+    spark: SparkSession, rows: list[dict], schema: T.StructType
+) -> DataFrame:
+    """A DataFrame over rows held on the driver (the applier's offsets).
+    A ``pyarrow.Table`` is read as an Arrow stream by the JVM and starts
+    no Python worker, where ``createDataFrame(<list>)`` would pickle the
+    rows into a Python RDD task."""
+    return spark.createDataFrame(_arrow_table(rows, schema), schema=schema)
 
 
 def _with_doc_bucket(df: DataFrame) -> DataFrame:
@@ -324,7 +334,7 @@ class BatchApplier:
         for r in sorted(per_file, key=lambda r: r["_f"]):
             offs.append({"_f": r["_f"], "_off": cum})
             cum += r["count"]
-        off_df = self.store._local_df(offs, FILE_OFFSET_SCHEMA)
+        off_df = _local_df(self.store.spark, offs, FILE_OFFSET_SCHEMA)
         w = Window.partitionBy("_f").orderBy(
             "_s", F.monotonically_increasing_id()
         )
@@ -650,7 +660,7 @@ class BatchApplier:
                 e["n_docs"] = n_docs
             add_rows_all = None
             if offs:
-                off_df = self.store._local_df(offs, ARRIVAL_START_SCHEMA)
+                off_df = _local_df(self.store.spark, offs, ARRIVAL_START_SCHEMA)
                 add_rows_all = (
                     doc_ops.filter(F.col("_action") == "add_document")
                     .select(

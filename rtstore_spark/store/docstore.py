@@ -30,7 +30,7 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -164,7 +164,6 @@ def _merged_doc(doc: str | None, patch: str | None) -> str | None:
 class DocStore:
     def __init__(
         self, spark: SparkSession, root: str, network: int = 1, fs=None,
-        auto_compact_every: int | None = None, auto_compact_max_files: int = 32,
     ):
         self.spark = spark
         self.root = root
@@ -175,15 +174,10 @@ class DocStore:
         # and batch writes are Spark jobs and need no adapter
         self.fs = fs or fs_for(root, spark)
         self.fs.makedirs(root)
+        # the sequencer. Every online append (doc and log rows, catalog
+        # rows, wire envelopes) is one small parquet object; close_block
+        # is the one policy that folds them back into few files
         self.state = StateStore(root, fs=self.fs)
-        # sequential-API maintenance: every Nth append to a collection,
-        # check its live file count and compact past the threshold. The
-        # streaming ingest has its own per-N-blocks sweep (maybe_compact);
-        # this opt-in covers long-lived direct-API writers, whose
-        # one-file-per-mutation appends otherwise accumulate unboundedly.
-        self.auto_compact_every = auto_compact_every
-        self.auto_compact_max_files = auto_compact_max_files
-        self._append_counts: dict[tuple[str, str], int] = {}
         # collection-name length cap: collection_key.rs:21-33
         self.max_col_name = 20
         # latest catalog row per (db_addr, col_name), keyed by the catalog's
@@ -192,17 +186,6 @@ class DocStore:
         # bounded FIFO of persisted RunQuery matched-sets (see query_docs)
         self._query_caches: list = []
         self.query_cache_slots = 8
-        # wire-envelope archive buffer: rows accumulate in memory and
-        # flush ONE parquet file per closed block (the reference's
-        # natural batching unit, mutation_store.rs:444-481) instead of
-        # one file per SendMutation — see archive_wire_envelope
-        import threading as _threading
-
-        self._wire_buffer: list[dict] = []
-        self._wire_buffer_lock = _threading.Lock()
-        # safety valve: a pathological block holding more rows than this
-        # flushes early (>1 file for THAT block, never unbounded memory)
-        self.wire_buffer_cap = 4096
 
     # ------------------------------------------------------------------
     # paths & small helpers
@@ -306,17 +289,6 @@ class DocStore:
         for name in self.fs.listdir(root):
             if name not in keep:
                 self.fs.delete(os.path.join(root, name), recursive=True)
-
-    def _local_df(self, rows: list[dict], schema: T.StructType) -> DataFrame:
-        """A DataFrame over rows held on the driver, for the few such rows
-        that feed a Spark plan (the wire archive's in-memory union,
-        ``BatchApplier``'s offsets). A ``pyarrow.Table`` is read as an
-        Arrow stream by the JVM and starts no Python worker, where
-        ``createDataFrame(<list>)`` would pickle the rows into a Python
-        RDD task."""
-        return self.spark.createDataFrame(
-            _arrow_table(rows, schema), schema=schema
-        )
 
     def _write_rows(
         self, rows: list[dict], schema: T.StructType, path: str,
@@ -764,18 +736,18 @@ class DocStore:
         self._append_doc_rows(rows, self._data_path(db_addr, col))
         self._log(sender, nonce or 0, "add_document", db_addr, col,
                   {"docs": docs}, ids, block, order, mid=mid)
-        self._note_append(db_addr, col)
         return ids
 
-    def _owned_docs(
-        self, db_addr: str, col: str, ids: list[int], sender: str
-    ) -> dict[int, str | None]:
-        """Owner-only guard for update/delete — db_store_v2.rs:819-846.
+    def _latest_live(
+        self, db_addr: str, col: str, ids: list[int]
+    ) -> dict[int, Row]:
+        """Each id's latest live version, as a ``current_state`` row.
 
-        One bucket-pruned point read (one Spark job) collects the target
-        ids' stored versions; the latest per id is picked here, as
+        One bucket-pruned point read (one Spark job) collects the ids'
+        stored versions; the latest per id is picked here, as
         ``current_state``'s window would, without the window's shuffle
-        job. Returns doc_id → live doc text, for the merge."""
+        job. Ids whose latest version is a tombstone, or that were never
+        stored, are absent."""
         latest = {}
         for r in self._doc_versions(db_addr, col, ids).select(
             "doc_id", "owner", "doc", "op", "block", "order"
@@ -783,7 +755,18 @@ class DocStore:
             cur = latest.get(r["doc_id"])
             if cur is None or (r["block"], r["order"]) > (cur["block"], cur["order"]):
                 latest[r["doc_id"]] = r
-        live = {i: r for i, r in latest.items() if r["op"] != "D"}
+        return {
+            i: Row(doc_id=i, owner=r["owner"], doc=r["doc"],
+                   block=r["block"], order=r["order"])
+            for i, r in latest.items() if r["op"] != "D"
+        }
+
+    def _owned_docs(
+        self, db_addr: str, col: str, ids: list[int], sender: str
+    ) -> dict[int, str | None]:
+        """Owner-only guard for update/delete — db_store_v2.rs:819-846.
+        Returns doc_id → live doc text, for the merge."""
+        live = self._latest_live(db_addr, col, ids)
         missing = [i for i in ids if i not in live]
         if missing:
             raise InvalidMutation(f"documents not found: {missing}")
@@ -824,7 +807,6 @@ class DocStore:
         self._append_doc_rows(rows, self._data_path(db_addr, col))
         self._log(sender, nonce or 0, "update_document", db_addr, col,
                   {"patches": patches}, ids, block, order, mid=mid)
-        self._note_append(db_addr, col)
 
     def delete_docs(
         self, db_addr: str, col: str, ids: list[int], sender: str,
@@ -847,7 +829,6 @@ class DocStore:
         self._append_doc_rows(rows, self._data_path(db_addr, col))
         self._log(sender, nonce or 0, "delete_document", db_addr, col,
                   None, ids, block, order, mid=mid)
-        self._note_append(db_addr, col)
 
     # ------------------------------------------------------------------
     # reads — S6 point get, JQL queries (RunQuery)
@@ -855,9 +836,8 @@ class DocStore:
 
     def get_doc(self, db_addr: str, col: str, doc_id: int):
         """S6 point get — doc_store.rs:240-250. Bucket-pruned: touches one
-        partition directory, not the collection."""
-        rows = self.current_state(db_addr, col, doc_ids=[doc_id]).head(1)
-        return rows[0] if rows else None
+        partition directory, not the collection, in one Spark job."""
+        return self._latest_live(db_addr, col, [doc_id]).get(int(doc_id))
 
     def query_docs(
         self, db_addr: str, col: str, query: str, params=None
@@ -981,24 +961,24 @@ class DocStore:
             ),
         )
 
-    def _note_append(self, db_addr: str, col: str) -> None:
-        """Sequential-path auto-compaction hook (see __init__). Counting
-        appends driver-side keeps the common case free: the file listing
-        runs only every Nth append, the compaction only past the
-        threshold."""
-        if not self.auto_compact_every:
-            return
-        key = (db_addr, col)
-        n = self._append_counts.get(key, 0) + 1
-        if n < self.auto_compact_every:
-            self._append_counts[key] = n
-            return
-        self._append_counts[key] = 0
-        if (
-            self._live_file_count(self._data_root(db_addr, col))
-            > self.auto_compact_max_files
-        ):
-            self.compact(db_addr, col)
+    def close_block(
+        self, compact_every: int = 16, max_files: int = 32
+    ) -> list[tuple[str, str]]:
+        """Close the open block and, on every ``compact_every``-th block
+        (0: never), run the ``maybe_compact(max_files)`` sweep; returns
+        what it compacted.
+
+        The one small-file policy of the store: every online write lands
+        as its own small parquet object, and this fold bounds them. Both
+        steps run under the sequencer lock, so no mutation, and no
+        envelope append (``Ingest.send_wire_mutation`` archives inside
+        the same lock), lands in a table while its snapshot is rewritten.
+        """
+        with self.state.lock:
+            block = self.state.next_block()
+            if compact_every and block % compact_every == 0:
+                return self.maybe_compact(max_files)
+            return []
 
     def _live_file_count(self, root: str) -> int:
         """Parquet files in a table's live (pointer-resolved) directory."""
@@ -1157,71 +1137,39 @@ class DocStore:
     def archive_wire_envelope(
         self, mid: str, payload: bytes, signature: str, block: int, order: int
     ) -> None:
-        """Buffer one original client envelope; rows persist ONE parquet
-        file per CLOSED block, not one per mutation (a sustained
-        SendMutation burst used to create thousands of single-row files
-        between compactions). Flush triggers: the first row of a LATER
-        block (lazy block-close detection), the node ticker's block
-        close and clean shutdown (__main__.py), compact_wire_archive(),
-        and the in-memory cap; reads need no flush — wire_archive()
-        unions the in-memory snapshot. Durability trade,
-        explicit: a crash loses only the OPEN block's buffered envelopes
-        — their decoded mutations are already in the durable log, and
-        the rollup export re-attests log rows whose verbatim envelope is
-        missing (sources/wire_export.py), so custody narrows to the
-        open block instead of failing."""
-        with self._wire_buffer_lock:
-            closed = [r for r in self._wire_buffer if r["block"] < block]
-            if closed or len(self._wire_buffer) >= self.wire_buffer_cap:
-                keep = [r for r in self._wire_buffer if r["block"] >= block]
-                if len(self._wire_buffer) >= self.wire_buffer_cap:
-                    closed, keep = self._wire_buffer, []
-                self._wire_buffer = keep
-                self._flush_wire_rows(closed)
-            self._wire_buffer.append({
+        """Write one original client envelope, as one parquet object in
+        the live generation's ``block_bucket=`` directory, before the
+        SendMutation is acknowledged. ``Ingest.send_wire_mutation`` calls
+        this inside the sequencer-lock span, after the mutation's doc and
+        log rows: the envelope is the last of its durable writes, and no
+        ``close_block`` sweep can rewrite the archive while it is in
+        flight. A crash between the log row and this write leaves a
+        logged mutation without its envelope; the rollup export
+        re-attests such rows (sources/wire_export.py). ``close_block``
+        folds the one-object-per-mutation files."""
+        self._write_rows(
+            [{
                 "id": mid, "payload": payload, "signature": signature,
                 "block": block, "order": order,
-            })
+            }],
+            WIRE_ARCHIVE_SCHEMA, self._resolve(self._wire_archive_path()),
+            ("block_bucket", "block", LOG_BLOCKS_PER_BUCKET),
+        )
 
     def flush_wire_archive(self) -> None:
-        """Persist every buffered envelope, including the open block's.
-        Called by the node ticker on block close, by clean shutdown, by
-        compaction, and by the in-memory cap; plain reads do NOT flush
-        (wire_archive unions the in-memory snapshot instead)."""
-        with self._wire_buffer_lock:
-            rows, self._wire_buffer = self._wire_buffer, []
-            self._flush_wire_rows(rows)
-
-    def _flush_wire_rows(self, rows: list[dict]) -> None:
-        # caller holds _wire_buffer_lock; one parquet object per
-        # block_bucket partition touched (normally exactly one)
-        if not rows:
-            return
-        # appends land in the live generation (pointer-resolved) so
-        # compact_wire_archive's snapshot rewrites fold them in
-        try:
-            self._write_rows(
-                rows, WIRE_ARCHIVE_SCHEMA,
-                self._resolve(self._wire_archive_path()),
-                ("block_bucket", "block", LOG_BLOCKS_PER_BUCKET),
-            )
-        except Exception:
-            # callers swap rows OUT of the buffer before flushing; if the
-            # parquet write fails transiently (fs hiccup), losing closed-
-            # block envelopes for the life of the process would be a
-            # stronger loss than the documented crash-loses-open-block
-            # trade. Put them back (front, preserving block order) so the
-            # next flush retries, then surface the failure.
-            self._wire_buffer = rows + self._wire_buffer
-            raise
+        """No-op: every envelope is on disk when ``archive_wire_envelope``
+        returns. Kept because the benchmark's block tick
+        (perfbench/serve.py) and its trace wrappers call it."""
 
     def compact_wire_archive(self) -> None:
         """Collapse the per-mutation envelope files — the wire ingest path
         appends one single-row parquet per SendMutation, so a busy node
         accumulates tiny files every export/GetBlock scan must open.
         Same pointer-flip rewrite as ``compact``: one file per
-        block_bucket partition afterwards, bucket pruning preserved."""
-        self.flush_wire_archive()
+        block_bucket partition afterwards, bucket pruning preserved.
+        The single writer runs it under the sequencer lock
+        (``close_block``), so no envelope lands in the generation it
+        supersedes."""
         root = self._wire_archive_path()
         if not self.fs.exists(root):
             return
@@ -1239,38 +1187,23 @@ class DocStore:
 
     def wire_archive(self, block_start: int = 0, block_end: int | None = None) -> DataFrame:
         """Archived original envelopes in [block_start, block_end) —
-        empty-safe, partition-pruned like the log. Read-your-writes for
-        buffered rows comes from a UNION with an in-memory snapshot,
-        NOT a flush — a read-heavy GetBlock poller would otherwise
-        write one tiny file per poll, re-creating the fragmentation the
-        buffer exists to prevent. No double counting: the buffer
-        snapshot AND the parquet leaf-FILE list both resolve under
-        _wire_buffer_lock (flushes hold the same lock), so a concurrent
-        flush either lands entirely before this scan (rows in files,
-        not in the snapshot) or entirely after (rows in the snapshot,
-        in files this frozen list never names) — never both. The scan
-        is then built from those EXPLICIT file paths outside the lock:
-        the DataFrame construction is the expensive part (driver-side
-        file-index build — listStatus round trips on a remote fs), and
-        holding the lock through it would serialize every
-        archive_wire_envelope on the ingest hot path behind a read-only
-        GetBlock poll."""
+        empty-safe, partition-pruned like the log. Every acknowledged
+        envelope is already a file, so this is a plain read of the live
+        generation's listed ``block_bucket=`` files (hidden temp objects
+        of in-flight writes excluded)."""
         path = self._resolve(self._wire_archive_path())
         read_schema = T.StructType(
             WIRE_ARCHIVE_SCHEMA.fields
             + [T.StructField("block_bucket", T.LongType(), True)]
         )
-        with self._wire_buffer_lock:
-            pending = [dict(r) for r in self._wire_buffer]
-            if not self.fs.exists(path):
-                files = []
-            else:
-                sep = "/" if "://" in path else os.sep
-                files = [
-                    f for f in self.fs.list_files_recursive(path)
-                    if f"{sep}block_bucket=" in f
-                    and not f.rsplit(sep, 1)[-1].startswith(("_", "."))
-                ]
+        files = []
+        if self.fs.exists(path):
+            sep = "/" if "://" in path else os.sep
+            files = [
+                f for f in self.fs.list_files_recursive(path)
+                if f"{sep}block_bucket=" in f
+                and not f.rsplit(sep, 1)[-1].startswith(("_", "."))
+            ]
         if not files:
             df = self.spark.createDataFrame([], schema=read_schema)
         else:
@@ -1279,11 +1212,6 @@ class DocStore:
                 .option("basePath", path)
                 .parquet(*files)
             )
-        if pending:
-            mem = self._local_df(pending, WIRE_ARCHIVE_SCHEMA).withColumn(
-                "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-            )
-            df = df.unionByName(mem)
         end = block_end if block_end is not None else (1 << 62)
         lo = block_start // LOG_BLOCKS_PER_BUCKET
         hi = (max(end - 1, block_start)) // LOG_BLOCKS_PER_BUCKET

@@ -218,15 +218,17 @@ class Ingest:
             raise InvalidMutation(str(e)) from e
         with self.store.state.lock:
             out = self._apply(ingest_payload, wm.sender, wm.nonce, wm.mutation_id)
-        if archive:
-            # keep the ORIGINAL envelope bytes so the rollup export can
-            # emit this mutation exactly as the client signed it (the
-            # reference persists payload+signature verbatim,
-            # ar_toolbox.rs:83-127) — custody survives the round trip
-            raw = payload if isinstance(payload, bytes) else payload.encode("utf-8")
-            self.store.archive_wire_envelope(
-                wm.mutation_id, raw, signature, out["block"], out["order"]
-            )
+            if archive:
+                # keep the ORIGINAL envelope bytes so the rollup export
+                # can emit this mutation exactly as the client signed it
+                # (the reference persists payload+signature verbatim,
+                # ar_toolbox.rs:83-127). Written inside the lock: the ack
+                # follows the write, and close_block's sweep (same lock)
+                # never rewrites the archive under it
+                raw = payload if isinstance(payload, bytes) else payload.encode("utf-8")
+                self.store.archive_wire_envelope(
+                    wm.mutation_id, raw, signature, out["block"], out["order"]
+                )
         out["sender"] = wm.sender
         return out
 

@@ -1,13 +1,15 @@
 """Set-wise replica replay — the scale path for log/rollup catch-up.
 
 The reference's indexer re-applies logged mutations one at a time
-(indexer_impl.rs:259-324), which is fine on a single RocksDB node but a
-scale-killer through Spark: each ``apply_mutation`` call issues at least one
-Spark job (a createDataFrame + parquet append per mutation), so catching a
-replica up on an N-mutation log costs O(N) driver round-trips while the
-cluster idles. This module applies a whole micro-batch of ORIGIN LOG ROWS
-set-wise, so the Spark job count is O(collections touched + control ops) —
-independent of the mutation count:
+(indexer_impl.rs:259-324), which is fine on a single RocksDB node but
+O(N) work here: each ``apply_mutation`` call writes its own doc and log
+objects from the driver (no Spark job for an add, two small parquet files),
+and each update or delete first runs a one-job Spark point read for its
+owner check, so catching a replica up on an N-mutation log costs O(N) small
+files and up to O(N) Spark jobs while the cluster idles. This module
+applies a whole micro-batch of ORIGIN LOG ROWS set-wise, so the Spark job
+count is O(collections touched + control ops) — independent of the
+mutation count:
 
 1. control ops (create_*_db / add_collection / add_index) are rare; they are
    collected and applied driver-side in (block, order) order through
@@ -170,8 +172,6 @@ def _replay_collection(
         _with_doc_bucket(del_rows).repartition(
             F.col("doc_bucket")
         ).write.mode("append").partitionBy("doc_bucket").parquet(path)
-
-    replica._note_append(db, col)
 
 
 def replay_log_batch(replica, batch_df: DataFrame) -> int:

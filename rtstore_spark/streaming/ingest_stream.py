@@ -98,12 +98,11 @@ class StreamingIngest:
 
         self.rejected.extend(BatchApplier(self.ingest).apply(batch_df))
         # micro-batch boundary = block boundary
-        store = self.ingest.store
-        store.state.next_block()
-        if self.compact_every and store.state.block % self.compact_every == 0:
-            self.compacted.extend(
-                store.maybe_compact(max_files=self.compact_max_files)
+        self.compacted.extend(
+            self.ingest.store.close_block(
+                self.compact_every, self.compact_max_files
             )
+        )
         with self._block_closed:
             self.blocks_closed += 1
             self._block_closed.notify_all()

@@ -285,20 +285,19 @@ class TestGcAndCatalogRewrite:
 
 class TestSequentialAutoCompact:
     def test_direct_api_writer_stays_bounded(self, spark, tmp_path):
-        """Opt-in sequential-path auto-compaction: a long-lived direct-API
-        writer (one file per mutation) must keep its collection's live
-        file count bounded, with no document ever lost."""
-        s = DocStore(
-            spark, str(tmp_path / "seqac"),
-            auto_compact_every=3, auto_compact_max_files=2,
-        )
+        """A long-lived direct-API writer (one file per mutation) that
+        closes a block after each mutation keeps its collection's live
+        file count bounded through close_block's sweep, with no document
+        ever lost."""
+        s = DocStore(spark, str(tmp_path / "seqac"))
         db = s.create_database(ALICE, nonce=1)
         s.create_collection(db, "c", [], ALICE)
         for i in range(9):
             s.add_docs(db, "c", [json.dumps({"v": i})], ALICE)
-        # 9 one-file appends; every 3rd append checked, threshold 2 → at
-        # most (threshold + check interval) live files at any point
-        assert s._live_file_count(s._data_root(db, "c")) <= 2 + 3
+            s.close_block(compact_every=3, max_files=2)
+            # every 3rd block sweeps past 2 files → at most (threshold +
+            # sweep interval) live files at any point
+            assert s._live_file_count(s._data_root(db, "c")) <= 2 + 3
         vals = sorted(
             json.loads(r["doc"])["v"] for r in s.current_state(db, "c").collect()
         )

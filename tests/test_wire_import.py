@@ -384,11 +384,9 @@ class TestArchivedEnvelopeExport:
 
 
 class TestWireArchiveCompaction:
-    """Round-8 contract: envelopes BUFFER in memory and flush one parquet
-    file per closed block (the old path wrote one single-row file per
-    SendMutation — thousands of tiny files under a burst). Compaction
-    still folds the per-block files per bucket and must not change a
-    byte of any archived envelope."""
+    """Every acknowledged envelope is its own parquet object, written
+    before the ack; ``close_block``'s sweep folds them per bucket and
+    must not change a byte of any archived envelope."""
 
     PRIV = 0x6370FD033278C143179D81C5526140625662B8DAA446C22EE2D73DB3707E620C
 
@@ -430,37 +428,37 @@ class TestWireArchiveCompaction:
             for r in store.wire_archive().collect()
         )
 
-    def test_one_archive_file_per_closed_block(self, spark):
-        # the round-8 done-gate: N mutations across K blocks leave ≤K
-        # archive files BEFORE any compaction (the old path left N)
+    def test_one_archive_object_per_mutation_until_close_block(self, spark):
+        # N mutations across K blocks leave N archive objects, one per
+        # acknowledged envelope; close_block's sweep folds them
         from rtstore_spark.store.ingest import Ingest
 
         store = fresh_store(spark)
         ingest = Ingest(store)
         db, nonce = self._send_n(ingest, 1, None, 4)   # block 0: 4 rows
-        store.state.next_block()
+        assert store.close_block() == []  # block 1 is no sweep block
         db, nonce = self._send_n(ingest, nonce, db, 3)  # block 1: 3 rows
         store.state.next_block()
         db, nonce = self._send_n(ingest, nonce, db, 2)  # block 2: 2 rows
 
-        # blocks 0 and 1 are CLOSED but flush lazily — their rows hit
-        # disk when the next block's first row arrived; the open block's
-        # rows are still in memory
         root = store._wire_archive_path()
-        assert store._live_file_count(root) <= 2
-
-        # reads see the open block's buffered rows WITHOUT flushing
-        # them (in-memory union — a GetBlock poller must not write a
-        # tiny file per poll)
-        files_before_read = store._live_file_count(root)
+        assert store._live_file_count(root) == 9
         rows = self._archive_rows(store)
         assert len(rows) == 9
-        assert store._live_file_count(root) == files_before_read
         assert sorted({r[3] for r in rows}) == [0, 1, 2]
 
         # GetBlock equivalence: per-block slices carry exactly that
         # block's envelopes
         assert len(store.wire_archive(1, 2).collect()) == 3
+
+        # block 3 is a sweep block: the archive (9 files > 8) folds into
+        # one file for its one bucket, every envelope byte-identical
+        assert store.close_block(compact_every=3, max_files=8) == [
+            ("__wire_archive", ""),
+        ]
+        assert store.state.block == 3
+        assert store._live_file_count(root) == 1
+        assert self._archive_rows(store) == rows
 
     def test_compaction_collapses_files_preserves_envelopes(self, spark):
         from rtstore_spark.store.ingest import Ingest
@@ -471,11 +469,11 @@ class TestWireArchiveCompaction:
         store.state.next_block()
         db, nonce = self._send_n(ingest, nonce, db, 2)
 
-        before = self._archive_rows(store)  # read → full flush
+        before = self._archive_rows(store)
         assert len(before) == 6
         root = store._wire_archive_path()
         before_files = store._live_file_count(root)
-        assert 1 <= before_files <= 2  # one per flushed block
+        assert before_files == 6  # one per mutation
 
         store.compact_wire_archive()
         assert self._archive_rows(store) == before  # byte-identical envelopes
@@ -496,7 +494,7 @@ class TestWireArchiveCompaction:
         store = fresh_store(spark)
         ingest = Ingest(store)
         db, nonce = self._send_n(ingest, 1, None, 3)
-        for _ in range(3):  # one archive file lands per closed block
+        for _ in range(3):  # one archive file lands per mutation
             store.state.next_block()
             db, nonce = self._send_n(ingest, nonce, db, 1)
         before = self._archive_rows(store)

@@ -19,28 +19,11 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import BENCH_QUERIES  # noqa: E402
 from rtstore_spark import inventory  # noqa: E402
 from rtstore_spark.engine import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_revenue_change",
-    "q_top_orders_per_customer",
-    "q_events_hourly",
-    "q_user_sessions",
-    "q_order_priority",
-    "jql_filter_eq",
-    "jql_json_subfield",
-    "dedup_exact",
-    "minhash_lsh_pairs",
-    "simhash32",
-    "text_quality",
-    "ann_cosine_topk",
-]
 
 
 def capture_plans(tag: str, names: list[str]) -> None:
