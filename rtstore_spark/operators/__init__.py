@@ -19,7 +19,7 @@ Generic DataFrame transforms (no testdata coupling):
                    tf-idf keywords, hashed-TF-IDF content clustering,
                    blocklist term filtering (C4-style)
 - ``retrieval``  — persisted BM25 inverted index (bucket-partitioned
-                   postings, generation-pointer rebuilds, delta-append
+                   postings, generation-pointer rebuilds, increment-append
                    incremental + streaming maintenance) + one-job batch
                    search with two-phase top-k and static bucket
                    pruning (decontamination-search shape)

@@ -150,34 +150,6 @@ def minhash_signatures(
     ).select("id", F.col("h").cast("int"), "minhash")
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 2
-) -> DataFrame:
-    """Band the signature and self-join on (band, band signature).
-
-    Docs agreeing on ALL rows of any band become a candidate pair — the
-    probability curve is the standard (1 - (1 - s^r)^b). Returns distinct
-    (id_a, id_b) with id_a < id_b. Accepts long-form signatures
-    (id, h, minhash); see ``lsh_candidate_pairs_wide`` for the
-    shuffle-minimal path from wide signatures.
-    """
-    banded = (
-        signatures.withColumn("band", F.expr(f"h div {rows_per_band}"))
-        .filter(F.col("band") < bands)
-        .groupBy("id", "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.expr(
-                    "transform(array_sort(collect_list(struct(h, minhash))),"
-                    " s -> cast(s.minhash as string))"
-                ),
-            ).alias("band_sig")
-        )
-    )
-    return _band_join(banded)
-
-
 def _band_join(banded: DataFrame) -> DataFrame:
     a, b = banded.alias("a"), banded.alias("b")
     return (
@@ -210,7 +182,10 @@ def _band_wide(wide: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
 def lsh_candidate_pairs_wide(
     wide: DataFrame, bands: int = 4, rows_per_band: int = 2
 ) -> DataFrame:
-    """Candidate pairs straight from wide signatures — see ``_band_wide``."""
+    """Band the wide signatures (``_band_wide``) and self-join on (band,
+    band signature): docs agreeing on ALL rows of any band become a
+    candidate pair — the standard (1 - (1 - s^r)^b) probability curve.
+    Returns distinct (id_a, id_b) with id_a < id_b."""
     return _band_join(_band_wide(wide, bands, rows_per_band))
 
 

@@ -12,21 +12,29 @@ to brute-force cosine:
   per-term document frequencies, and the global (n_docs, avgdl) stats;
 - ``write_bm25_index`` / ``read_bm25_index`` — durable form, postings
   PARTITIONED BY a term-hash bucket so a search's scan prunes to the
-  buckets its query terms hash into; atomic generation-pointer rebuilds
-  (same single-writer protocol as the ANN index);
+  buckets its query terms hash into; atomic generation-pointer rebuilds;
 - ``bm25_search_batch`` — (qid, text) queries → top-k (qid, id, score)
   in ONE job: query terms broadcast against the pruned postings scan,
   IDF folded in via a broadcast join on the O(matched-vocab) term-df
   table, per-(qid, id) partial-agg sum, TWO-PHASE per-qid top-k
   (per-(qid, shard) partial top-k, then a merge over the ≤ shards·k
   survivors — no single reducer ever sees a query's full matched set);
-- ``append_bm25_index`` — incremental maintenance: new documents land
-  as a delta generation unioned at read (one delta-scoped build, no
-  O(corpus) rebuild), folded away by ``compact_bm25_index`` (persisted
-  parquet fold, no corpus needed) or the next full rebuild.
+- ``append_bm25_index`` / ``compact_bm25_index`` / ``bm25_index_sink``
+  — incremental maintenance: new documents land as an increment
+  (``<gen>/inc/gen-N-*``, one increment-scoped build, no O(corpus)
+  rebuild) unioned at read, folded away by compaction (persisted
+  parquet fold, no corpus needed) or the next full rebuild; exactly-once
+  under ``foreachBatch`` replay.
+
+The maintenance protocol — increment manifest, batch-tag ledger,
+append / rebuild / compact commits, the sink loop — is
+``store/increments.py``, shared with the IVF-PQ index; this module
+supplies BM25's build, fold and read, plus its own checks (``n_buckets``
+agreement across parts, the empty-rebuild refusal, the exact ``sum_dl``
+stats fold).
 
 Maintained-index search costs what fresh-index search costs: the term
-dfs of base+deltas stay UNFOLDED at read and are summed only AFTER the
+dfs of base+increments stay UNFOLDED at read and are summed only AFTER the
 search restricts them to the broadcast query vocabulary — never an
 O(total vocab) shuffle per batch (see read_bm25_index's docstring).
 
@@ -101,103 +109,119 @@ def bm25_build(
     return postings, term_df, stats
 
 
+def _build_into(fs, df, text_col, id_col, n_buckets, out) -> int:
+    """Build ``df`` into ``out`` (``postings`` partitioned by bucket,
+    ``_termdf``, ``_stats.json``); returns n_docs, writing nothing when
+    it is 0."""
+    postings, term_df, stats = bm25_build(df, text_col, id_col, n_buckets)
+    if stats["n_docs"] == 0:
+        return 0
+    # the two writes share the corpus-wide tokenize + (term, id)
+    # aggregate — cache it so term_df reuses postings' computation
+    # instead of re-running the dominant shuffle
+    postings = postings.persist()
+    try:
+        postings.write.mode("overwrite").partitionBy("bucket").parquet(
+            out + "/postings"
+        )
+        term_df.write.mode("overwrite").parquet(out + "/_termdf")
+    finally:
+        postings.unpersist()
+    fs.write_text_atomic(out + "/_stats.json", json.dumps(stats))
+    return stats["n_docs"]
+
+
 def write_bm25_index(
     df: DataFrame, text_col: str, id_col: str, path: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
     carry_ledger: bool = False,
 ) -> None:
     """Materialize the index: ``<gen>/postings`` partitioned by bucket,
-    ``<gen>/_termdf``, ``<gen>/_stats.json`` — committed behind the same
-    atomic root ``_current`` pointer flip as ``write_pq_index`` (a crash
-    anywhere before the flip leaves the previous generation fully live;
-    concurrent rebuilds fail loudly on the maintenance lease and the
-    single-writer pointer backstop).
-    Protocol mechanics live in store.fs.begin/commit_generation.
+    ``<gen>/_termdf``, ``<gen>/_stats.json`` — a full rebuild committed
+    behind the root ``_current`` pointer flip (``store.increments.
+    rebuild``: a crash before the flip leaves the previous generation
+    live; concurrent writers fail loudly). The rebuild folds every
+    increment away by construction.
 
-    ``carry_ledger`` — STREAMING-SAFE rebuild. By default a rebuild
-    resets the exactly-once batch-tag ledger, which forces every
-    ``bm25_index_sink`` stream feeding this index through a checkpoint
-    reset (batch ids restart at 0 only after a checkpoint wipe — the
-    worst operation at 100 TB with continuous ingest). With
-    ``carry_ledger=True`` the rebuild CARRIES the live generation's
-    full committed-tag set (its ``_tags`` ledger plus the tags riding
-    in committed delta names, digit tags folded to one watermark line)
-    into the fresh generation — the same invariant compaction
-    preserves — so a mid-flight sink's replayed batches still no-op
-    and the stream NEVER restarts; mirrors the reference indexer's
-    never-stop-tailing stance (indexer_impl.rs:147-196). Caller
-    contract it rests on: the rebuild corpus ``df`` must CONTAIN every
-    committed batch's documents (true by definition for a "rebuild
-    from the whole corpus" — the rebuild is how those docs get
-    re-indexed). Tokens from the retired pre-hash sanitizer are
-    DROPPED during the carry: they can never match a replay anyway
-    (the raw tag is unrecoverable), and carrying them would keep
-    tripping the appenders' legacy-token guard forever — the rebuild
-    IS the advised repair."""
-    from rtstore_spark.store.fs import (
-        begin_generation,
-        commit_generation,
-        fs_for,
-        is_current_tag_token,
-        maintenance_lease,
-    )
+    ``carry_ledger``: carry the live generation's exactly-once batch-tag
+    ledger into the rebuild, so a ``bm25_index_sink`` stream running
+    through it never needs a checkpoint reset (the rebuild corpus must
+    contain every committed batch's documents). The default resets the
+    ledger.
+
+    An EMPTY corpus is refused: the postings directory would hold zero
+    part files (unreadable) and the flip would replace a working index."""
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
 
     spark = df.sparkSession
     fs = fs_for(path, spark)
-    fs.makedirs(path)
-    with maintenance_lease(fs, path, op="write_bm25_index"):
-        prev_gen, prev_name, gen_name = begin_generation(fs, path)
-        base = f"{path}/{gen_name}"
-        ledger: list[str] = []
-        if carry_ledger and prev_name is not None:
-            pbase = f"{path}/{prev_name}"
-            manifest = fs.read_text(pbase + "/_deltas") or ""
-            names = [ln.strip() for ln in manifest.splitlines() if ln.strip()]
-            ledger = [
-                ln for ln in _committed_ledger_lines(fs, pbase, names)
-                if ln.startswith("w") or is_current_tag_token(ln[1:])
-            ]
-        postings, term_df, stats = bm25_build(df, text_col, id_col, n_buckets)
-        if stats["n_docs"] == 0:
-            # an empty build must never flip the pointer: the postings
-            # directory would hold zero part files (unreadable — schema
-            # inference fails) and the sweep would have destroyed the last
-            # GOOD generation. A rebuild fed an accidentally-empty filtered
-            # corpus fails loudly instead of replacing a working index.
+    if carry_ledger:
+        base = increments.live_base(spark, path)
+        if base is not None:
+            _refuse_retired_layout(fs, path, base)
+
+    def write(out: str) -> None:
+        if _build_into(fs, df, text_col, id_col, n_buckets, out) == 0:
             raise ValueError(
                 f"write_bm25_index: refusing to commit an EMPTY corpus over "
                 f"{path} — the live generation stays untouched"
             )
-        # the two writes share the corpus-wide tokenize + (term, id)
-        # aggregate — cache it so term_df reuses postings' computation
-        # instead of re-running the dominant shuffle
-        postings = postings.persist()
-        try:
-            postings.write.mode("overwrite").partitionBy("bucket").parquet(
-                base + "/postings"
-            )
-            term_df.write.mode("overwrite").parquet(base + "/_termdf")
-        finally:
-            postings.unpersist()
-        fs.write_text_atomic(base + "/_stats.json", json.dumps(stats))
-        if ledger:
-            fs.write_text_atomic(base + "/_tags", "\n".join(ledger) + "\n")
-        # grace-of-one retention: a reader holding lazy plans against the
-        # immediate predecessor must not lose its files mid-query; the
-        # predecessor retires on the NEXT rebuild
-        commit_generation(
-            fs, path, prev_gen, gen_name,
-            op="write_bm25_index", keep=(prev_name,),
-        )
 
-
-def _read_index_dir(spark, fs, base: str) -> tuple[DataFrame, DataFrame, dict]:
-    postings = spark.read.option("basePath", base + "/postings").parquet(
-        base + "/postings"
+    increments.rebuild(
+        spark, path, op="write_bm25_index", carry_ledger=carry_ledger,
+        write=write,
     )
-    term_df = spark.read.parquet(base + "/_termdf")
-    stats = json.loads(fs.read_text(base + "/_stats.json"))
-    return postings, term_df, stats
+
+
+def _refuse_retired_layout(fs, path: str, base: str) -> None:
+    # generations written before the shared increment manifest kept their
+    # deltas in a `_deltas` file and their folded tag ledger in `_tags`,
+    # neither of which this version reads: serving, appending or carrying
+    # the ledger would silently drop deltas or re-append replayed batches
+    for f in ("_deltas", "_tags"):
+        if fs.exists(f"{base}/{f}"):
+            raise RuntimeError(
+                f"bm25 index {path}: the live generation {base} keeps "
+                f"state in the retired `{f}` file, which this version "
+                "does not read — its deltas and batch tags would be "
+                "silently ignored. Rebuild the index (write_bm25_index) "
+                "from the whole corpus before further use"
+            )
+
+
+def _live_base(spark, path: str) -> str:
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
+
+    base = increments.live_base(spark, path)
+    if base is None:
+        raise FileNotFoundError(
+            f"no live bm25 index at {path} — write_bm25_index builds the "
+            "base generation first"
+        )
+    _refuse_retired_layout(fs_for(path, spark), path, base)
+    return base
+
+
+def _read_parts(spark, fs, dirs) -> list[tuple[DataFrame, DataFrame, dict]]:
+    """[(postings, term_df, stats)] of a base and its increments, in
+    order; increments built with another ``n_buckets`` are refused."""
+    parts = []
+    for d in dirs:
+        postings = spark.read.option("basePath", d + "/postings").parquet(
+            d + "/postings"
+        )
+        stats = json.loads(fs.read_text(d + "/_stats.json"))
+        if parts and stats.get("n_buckets") != parts[0][2]["n_buckets"]:
+            raise RuntimeError(
+                f"bm25 increment {d} was built with n_buckets="
+                f"{stats.get('n_buckets')} != base "
+                f"{parts[0][2]['n_buckets']} — bucket pruning would "
+                "silently miss postings; rebuild"
+            )
+        parts.append((postings, spark.read.parquet(d + "/_termdf"), stats))
+    return parts
 
 
 def _stats_sum_dl(stats: dict) -> int:
@@ -208,100 +232,17 @@ def _stats_sum_dl(stats: dict) -> int:
     return int(round(int(stats["n_docs"]) * float(stats["avgdl"])))
 
 
-def _live_index_parts(spark, fs, path: str):
-    """The LIVE generation's pieces: (base dir, delta names, [(postings,
-    term_df, stats), ...] — base first, then each committed delta in
-    manifest order). Shared by ``read_bm25_index`` (lazy union) and
-    ``compact_bm25_index`` (persisted fold)."""
-    from rtstore_spark.store.fs import parse_gen_pointer
-
-    cur = fs.read_text(f"{path}/_current")
-    _, live = parse_gen_pointer(cur)
-    if not live:
-        raise FileNotFoundError(f"no live bm25 index at {path}")
-    base = f"{path}/{live}"
-    parts = [_read_index_dir(spark, fs, base)]
-    manifest = fs.read_text(base + "/_deltas") or ""
-    names = [ln.strip() for ln in manifest.splitlines() if ln.strip()]
-    n_buckets = int(parts[0][2]["n_buckets"])
-    for name in names:
-        part = _read_index_dir(spark, fs, f"{base}/{name}")
-        if int(part[2].get("n_buckets", -1)) != n_buckets:
-            raise RuntimeError(
-                f"bm25 delta {name} was built with n_buckets="
-                f"{part[2].get('n_buckets')} != base {n_buckets} — "
-                "bucket pruning would silently miss postings; rebuild"
-            )
-        parts.append(part)
-    return base, names, parts
-
-
-def _union_parts(parts) -> tuple[DataFrame, DataFrame]:
-    """(postings, term_df) as the unionByName of every part's arms —
-    the ONE definition of how base+delta pieces combine, shared by
-    ``read_bm25_index`` (lazy plan) and ``compact_bm25_index``
-    (persisted fold). term_df stays UNFOLDED (per-part partials)."""
+def _union_parts(parts) -> tuple[DataFrame, DataFrame, dict]:
+    """(postings, term_df, stats) of base + increments: the arms'
+    unionByName — term_df UNFOLDED (per-part partial dfs) — and
+    (n_docs, avgdl) folded EXACTLY from the integer ``sum_dl`` totals."""
     postings, term_df = parts[0][0], parts[0][1]
     for p2, t2, _ in parts[1:]:
         postings = postings.unionByName(p2)
         term_df = term_df.unionByName(t2)
-    return postings, term_df
-
-
-def _read_tag_ledger(fs, base: str) -> tuple[int | None, set[str]]:
-    """The generation's ``_tags`` ledger → (watermark, carried tokens).
-
-    ``w<int>`` lines are a WATERMARK: micro-batch ids are monotone
-    under foreachBatch (batch N+1 never runs before N committed), so
-    one integer subsumes every folded digit tag ≤ it — the ledger
-    stays O(1) for sink-driven streams no matter how many compactions
-    chain. ``t…`` lines are individually-carried tokens (hashed
-    non-digit tags, which have no order); these are rare (only the
-    public API emits them) and accumulate until a full rebuild."""
-    wm: int | None = None
-    toks: set[str] = set()
-    for ln in (fs.read_text(base + "/_tags") or "").splitlines():
-        ln = ln.strip()
-        if not ln:
-            continue
-        if ln.startswith("w") and ln[1:].isdigit():
-            wm = max(wm if wm is not None else 0, int(ln[1:]))
-        else:
-            toks.add(ln)
-    return wm, toks
-
-
-def _ledger_contains(token: str, wm: int | None, toks: set[str]) -> bool:
-    if token in toks:
-        return True
-    body = token[1:]
-    return wm is not None and body.isdigit() and int(body) <= wm
-
-
-def _committed_ledger_lines(fs, base: str, names) -> list[str]:
-    """A generation's FULL committed-tag set as ``_tags`` ledger lines:
-    the parked ledger (watermark + carried tokens) plus the tags riding
-    in the given committed delta names, digit tags folded into one
-    watermark line. The ONE definition of "every batch this generation
-    has committed", shared by ``compact_bm25_index`` (parks it in the
-    folded generation) and ``write_bm25_index(carry_ledger=True)``
-    (carries it into a rebuild so mid-flight sinks never restart)."""
-    wm, toks = _read_tag_ledger(fs, base)
-    for n in names:
-        sfx = n.rsplit("-", 1)[-1]
-        if sfx.startswith("t"):
-            body = sfx[1:]
-            if body.isdigit():
-                wm = max(wm if wm is not None else 0, int(body))
-            else:
-                toks.add(sfx)
-    return ([f"w{wm}"] if wm is not None else []) + sorted(toks)
-
-
-def _fold_stats(parts) -> dict:
     n_docs = sum(int(s["n_docs"]) for _, _, s in parts)
     sum_dl = sum(_stats_sum_dl(s) for _, _, s in parts)
-    return {
+    return postings, term_df, {
         "n_docs": n_docs,
         "sum_dl": sum_dl,
         "avgdl": (sum_dl / n_docs) if n_docs else 1.0,
@@ -311,30 +252,30 @@ def _fold_stats(parts) -> dict:
 
 def read_bm25_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """Load the LIVE generation — base postings UNIONED with every
-    committed delta (``append_bm25_index``), (n_docs, avgdl) folded
-    EXACTLY from the integer ``sum_dl`` totals. With no deltas the plan
-    is the plain base scan (no union node is added).
+    committed increment (``append_bm25_index``), (n_docs, avgdl) folded
+    EXACTLY from the integer ``sum_dl`` totals. With no increments the
+    plan is the plain base scan (no union node is added).
 
     On a maintained index the returned ``term_df`` is the RAW
-    base+delta union — per-term partial dfs that ADD (ids are unique
-    across base and deltas by the append contract), NOT one row per
-    term. It is deliberately left unfolded: an aggregate here would run
-    over the FULL vocabulary on every search batch, because Catalyst
-    does not push the search's query-vocab join below an aggregate —
+    base+increment union — per-term partial dfs that ADD (ids are unique
+    across parts by the append contract), NOT one row per term. It is
+    deliberately left unfolded: an aggregate here would run over the
+    FULL vocabulary on every search batch, because Catalyst does not
+    push the search's query-vocab join below an aggregate —
     ``bm25_search_batch`` folds the partials AFTER restricting to the
     broadcast query terms, an O(query vocab) aggregation instead of
     O(total vocab). A direct consumer that wants the classic (term, df)
     table folds it the same way:
     ``term_df.groupBy("term").agg(F.sum("df").alias("df"))``.
     ``compact_bm25_index`` persists that fold into a fresh generation."""
+    from rtstore_spark.store import increments
     from rtstore_spark.store.fs import fs_for
 
     fs = fs_for(path, spark)
-    _, _, parts = _live_index_parts(spark, fs, path)
-    if len(parts) == 1:
-        return parts[0]
-    postings, term_df = _union_parts(parts)
-    return postings, term_df, _fold_stats(parts)
+    base = _live_base(spark, path)
+    dirs = [base, *increments.increment_dirs(fs, base)]
+    parts = _read_parts(spark, fs, dirs)
+    return parts[0] if len(parts) == 1 else _union_parts(parts)
 
 
 def append_bm25_index(
@@ -342,257 +283,72 @@ def append_bm25_index(
     batch_tag: str | None = None,
 ) -> None:
     """Incremental maintenance: index NEW documents without the
-    O(corpus) rebuild ``write_bm25_index`` performs. The delta's
-    postings/termdf/stats are built from ``df`` ALONE (one scan of the
-    new docs), written under ``<live-gen>/delta-N-<uuid>/``, and made
-    visible by an atomic rewrite of the ``_deltas`` manifest — the
-    mirror of how the reference's index node tails new blocks instead
-    of re-indexing (indexer_impl.rs:147-196). A crash before the
-    manifest write leaves an orphan directory no reader ever sees
-    (retired with its generation). The next full rebuild folds all
-    deltas away by construction (it rebuilds from the whole corpus into
-    a fresh generation).
+    O(corpus) rebuild ``write_bm25_index`` performs — one scan of
+    ``df`` alone into a committed increment (``store.increments.
+    append``: a crash before the manifest write leaves an invisible
+    orphan; a concurrent writer fails loudly). An empty ``df`` is a
+    no-op (unlike an empty REBUILD, which is refused).
 
-    Append contract: ``df``'s ids must be NEW (not present in the base
-    or any prior delta). A re-appended id would double-count its term
-    dfs and surface twice in results — dedup upstream; this operator
-    does not scan the O(corpus) base to check.
-
-    Single-writer, enforced loudly: the generation pointer and the
-    delta manifest must both be unchanged across the build, else the
-    append raises and its directory is left orphaned (harmless).
+    Append contract: ``df``'s ids must be NEW (not in the base or any
+    prior increment). A re-appended id would double-count its term dfs
+    and surface twice in results — dedup upstream; this operator does
+    not scan the O(corpus) base to check.
 
     ``batch_tag``: an idempotence token for EXACTLY-ONCE streaming
-    maintenance. A tag lands in the delta directory name; an append
-    whose tag is already in the manifest is a committed-earlier replay
-    and no-ops — the contract Structured Streaming's foreachBatch
-    replay model needs (``bm25_index_sink``), same stance as the
-    engine's other checkpointed sinks. Non-digit tags are hashed to a
-    filesystem-safe token (``store.fs.safe_batch_tag``) so two DISTINCT
-    raw tags can never alias into one idempotence token.
-
-    DIGIT-tag contract — single monotone stream. Compaction folds all
-    committed digit tags into one WATERMARK (max), after which any
-    digit tag ≤ the watermark is treated as a replay and no-ops. That
-    is exactly right for the one producer that emits digit tags —
-    ``bm25_index_sink``'s foreachBatch batch ids, monotone within one
-    checkpointed stream — and exactly wrong for anything else: TWO
-    sinks sharing one index, or caller-chosen digit tags that are not
-    monotone, will have later appends silently subsumed by the
-    watermark and DROPPED. One index, one stream. Callers tagging
-    appends by hand should use non-digit tags (e.g. ``crawl/2026-08``),
-    which hash and carry individually — they never fall under the
-    watermark."""
-    import uuid
-
-    from rtstore_spark.store.fs import (
-        fs_for,
-        is_current_tag_token,
-        maintenance_lease,
-        parse_gen_pointer,
-        safe_batch_tag,
-    )
+    maintenance (``bm25_index_sink``): an append whose tag the ledger
+    already holds is a replay and no-ops. Digit tags are one monotone
+    stream's batch ids (folded into a watermark on compaction — one
+    sink per index); hand-tagged appends should use non-digit tags,
+    which hash and carry individually."""
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
 
     spark = df.sparkSession
     fs = fs_for(path, spark)
-    with maintenance_lease(fs, path, op="append_bm25_index"):
-        cur = fs.read_text(f"{path}/_current")
-        _, live = parse_gen_pointer(cur)
-        if not live:
-            raise FileNotFoundError(
-                f"append_bm25_index: no live bm25 index at {path} — "
-                "write_bm25_index builds the base generation first"
-            )
-        base = f"{path}/{live}"
-        base_stats = json.loads(fs.read_text(base + "/_stats.json"))
-        n_buckets = int(base_stats.get("n_buckets", N_BUCKETS_DEFAULT))
-        manifest0 = fs.read_text(base + "/_deltas") or ""
-        names0 = [ln.strip() for ln in manifest0.splitlines() if ln.strip()]
-        if batch_tag is not None:
-            batch_tag = safe_batch_tag(batch_tag)
-            # committed tags live in two places: live delta dir names, and
-            # the generation's _tags ledger where compact_bm25_index parks
-            # folded-away batches (digit tags as one watermark, hashed tags
-            # individually) — so compaction never forgets a committed batch
-            # (only a full rebuild resets)
-            wm, toks = _read_tag_ledger(fs, base)
-            committed_tokens = [t[1:] for t in toks] + [
-                n.rsplit("-", 1)[-1][1:] for n in names0
-                if n.rsplit("-", 1)[-1].startswith("t")
-            ]
-            legacy = [t for t in committed_tokens if not is_current_tag_token(t)]
-            if legacy:
-                raise RuntimeError(
-                    f"append_bm25_index: {path} carries batch tag "
-                    f"token(s) committed under the retired strip-to-"
-                    f"alnum sanitizer (e.g. {legacy[0]!r}) — replay "
-                    "detection cannot match them, so a replayed "
-                    "pre-upgrade batch would silently re-append. "
-                    "Rebuild the index (write_bm25_index; carry_ledger "
-                    "drops the unmatchable tokens) before further "
-                    "tagged appends"
-                )
-            token = f"t{batch_tag}"
-            if _ledger_contains(token, wm, toks) or any(
-                n.rsplit("-", 1)[-1] == token for n in names0
-            ):
-                return  # replayed micro-batch: already committed
-        postings, term_df, stats = bm25_build(df, text_col, id_col, n_buckets)
-        if stats["n_docs"] == 0:
-            return  # appending nothing is a no-op (unlike an empty
-            # REBUILD, which would destroy a live index and is refused)
-        suffix = (
-            f"t{batch_tag}" if batch_tag is not None else uuid.uuid4().hex[:8]
-        )
-        delta_name = f"delta-{len(names0) + 1}-{suffix}"
-        dbase = f"{base}/{delta_name}"
-        postings = postings.persist()
-        try:
-            postings.write.mode("overwrite").partitionBy("bucket").parquet(
-                dbase + "/postings"
-            )
-            term_df.write.mode("overwrite").parquet(dbase + "/_termdf")
-        finally:
-            postings.unpersist()
-        fs.write_text_atomic(dbase + "/_stats.json", json.dumps(stats))
-        cur2 = fs.read_text(f"{path}/_current")
-        if parse_gen_pointer(cur2)[1] != live:
-            raise RuntimeError(
-                f"append_bm25_index: a rebuild advanced {path} to "
-                f"{(cur2 or '').strip()} during this append — the delta "
-                "targets a retired generation; re-run against the new one"
-            )
-        if (fs.read_text(base + "/_deltas") or "") != manifest0:
-            raise RuntimeError(
-                f"append_bm25_index: concurrent append detected on {path} — "
-                "indexes have a single-writer contract; re-run the append"
-            )
-        fs.write_text_atomic(
-            base + "/_deltas", "\n".join([*names0, delta_name]) + "\n"
-        )
-        # sweep crash orphans: delta-* directories the committed manifest
-        # does not list were written by attempts that never committed (no
-        # reader resolves them) — without this, retries of a flaky append
-        # leak one uniquely-suffixed directory per crash until the next
-        # rebuild retires the generation
-        committed = {delta_name, *names0}
-        for d in fs.listdir(base):
-            if d.startswith("delta-") and d not in committed:
-                fs.delete(f"{base}/{d}", recursive=True)
+
+    def write(base: str, out: str) -> bool:
+        stats = json.loads(fs.read_text(base + "/_stats.json"))
+        n_buckets = int(stats.get("n_buckets", N_BUCKETS_DEFAULT))
+        return _build_into(fs, df, text_col, id_col, n_buckets, out) > 0
+
+    increments.append(
+        spark, path, op="append_bm25_index", batch_tag=batch_tag,
+        resolve_base=_live_base, write=write,
+    )
 
 
 def compact_bm25_index(spark, path: str, keep: int = 1) -> None:
-    """Fold committed deltas into a fresh generation WITHOUT the corpus.
-
-    ``write_bm25_index`` folds deltas too, but it needs the ORIGINAL
-    corpus DataFrame and pays a full re-tokenize; this compaction reads
-    only what the index already persists — the base+delta postings and
-    term-df parquet union into ``<path>/gen-(N+1)``, per-term dfs
-    summed, (n_docs, avgdl) folded from the integer ``sum_dl`` totals
-    (exact, no float accumulation) — so maintenance is self-contained,
-    the same role ``compact_wire_archive`` plays for the wire-envelope
-    archive (store/docstore.py). After compaction a reader sees ONE
-    union-free generation: no per-arm scans, one row per term. Search
-    results are identical by construction (same posting rows, same
-    summed dfs, same stats). No-op when the live generation has no
-    deltas.
-
-    Streaming note — shared with ``compact_pq_index``: compaction
-    PRESERVES the exactly-once batch-tag ledger. The folded deltas'
-    tag tokens are parked in the new generation's ``_tags`` file
-    (chained with any tokens already parked there by earlier
-    compactions), and ``append_bm25_index`` checks that ledger on
-    replay — so a micro-batch committed-but-not-yet-checkpointed
-    before a compaction still no-ops after it, which is what makes
-    in-sink auto-compaction (``bm25_index_sink(compact_every=…)``)
-    safe. A FULL rebuild (``write_bm25_index``) resets the ledger by
-    default; rebuilding with a stream mid-flight uses
-    ``carry_ledger=True``, which carries this same committed-tag set
-    into the fresh generation so the stream never restarts.
-
-    Crash safety is the standard generation protocol
-    (store.fs.begin/commit_generation): a crash anywhere before the
-    pointer flip leaves the delta'd generation fully live. The index's
-    single-writer contract (ONE maintenance process at a time) is
-    enforced at operation START by the maintenance lease
-    (store.fs.acquire_maintenance_lease — a concurrent writer fails
-    fast, naming the holder) and backstopped after the fact at two
-    points — ``commit_generation`` re-checks the generation pointer,
-    and the delta manifest is compared against the PRE-ENUMERATION
-    snapshot both after the parts load and just before the flip. The
-    instants between that final re-read and the flip itself remain
-    uncheckable (two separate small files cannot be CAS'd together),
-    but reaching them now requires a writer that already bypassed the
-    lease's loud error — e.g. a stale-lease takeover racing a holder
-    that outlived the TTL."""
-    from rtstore_spark.store.fs import (
-        begin_generation,
-        commit_generation,
-        fs_for,
-        maintenance_lease,
-        retained_generations,
-    )
+    """Fold committed increments into a fresh generation WITHOUT the
+    corpus (``store.increments.compact``): the persisted base+increment
+    postings and term-df parquet union into the new generation, per-term
+    dfs summed, (n_docs, avgdl) folded from the integer ``sum_dl``
+    totals — the same role ``compact_wire_archive`` plays for the
+    wire-envelope archive. A reader then sees ONE union-free generation;
+    search results are identical by construction. The exactly-once
+    ledger carries forward, so in-sink auto-compaction is safe
+    mid-stream. ``keep``: predecessor generations retained for readers'
+    lazy plans. No-op when there are no increments."""
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
 
     fs = fs_for(path, spark)
-    with maintenance_lease(fs, path, op="compact_bm25_index"):
-        prev_gen, prev_name, gen_name = begin_generation(fs, path)
-        # snapshot the manifest BEFORE enumerating parts: _live_index_parts
-        # does real per-delta I/O, so a delta committed during it must be
-        # caught by comparison against this snapshot, not one taken after
-        manifest0 = (
-            fs.read_text(f"{path}/{prev_name}/_deltas") or ""
-        ) if prev_name else ""
-        base, names, parts = _live_index_parts(spark, fs, path)
-        if base != f"{path}/{prev_name}":  # pointer moved between reads
-            raise RuntimeError(
-                f"compact_bm25_index: a rebuild advanced {path} during "
-                "this compaction — re-run against the new generation"
-            )
-        names0 = [ln.strip() for ln in manifest0.splitlines() if ln.strip()]
-        if names != names0:
-            raise RuntimeError(
-                f"compact_bm25_index: a concurrent append committed on "
-                f"{path} while its deltas were being enumerated — re-run "
-                "the compaction"
-            )
-        if not names:
-            return  # union-free already: nothing to fold
-        out = f"{path}/{gen_name}"
-        postings, term_df = _union_parts(parts)
+
+    def fold(base: str, dirs: list[str], out: str) -> None:
+        postings, term_df, stats = _union_parts(
+            _read_parts(spark, fs, [base, *dirs])
+        )
         postings.write.mode("overwrite").partitionBy("bucket").parquet(
             out + "/postings"
         )
         term_df.groupBy("term").agg(F.sum("df").alias("df")).write.mode(
             "overwrite"
         ).parquet(out + "/_termdf")
-        fs.write_text_atomic(
-            out + "/_stats.json", json.dumps(_fold_stats(parts))
-        )
-        # park the folded deltas' tags (plus the old generation's ledger)
-        # so replays still no-op after the fold. Digit tags — the sink's
-        # monotone batch ids — compress into ONE watermark line, so the
-        # ledger stays O(1) across unbounded chained compactions; hashed
-        # (non-digit) tags carry individually. An untagged delta's uuid
-        # suffix is hex-only, never 't'-prefixed.
-        ledger = _committed_ledger_lines(fs, base, names)
-        if ledger:
-            fs.write_text_atomic(out + "/_tags", "\n".join(ledger) + "\n")
-        if (fs.read_text(base + "/_deltas") or "") != manifest0:
-            raise RuntimeError(
-                f"compact_bm25_index: a concurrent append committed on "
-                f"{path} during this compaction — its delta is not in the "
-                "folded generation; re-run the compaction"
-            )
-        # retention: keep the newest `keep` predecessor generations, not
-        # just one — a frequently-folding sink (compact_every on a fast
-        # stream) would otherwise sweep the files under a reader whose
-        # lazy plan is older than two folds
-        retained = set(retained_generations(fs, path, keep, exclude=gen_name))
-        retained.add(prev_name)  # the LIVE predecessor survives regardless
-        commit_generation(
-            fs, path, prev_gen, gen_name,
-            op="compact_bm25_index", keep=tuple(retained),
-        )
+        fs.write_text_atomic(out + "/_stats.json", json.dumps(stats))
+
+    increments.compact(
+        spark, path, op="compact_bm25_index", keep=keep,
+        resolve_base=_live_base, fold=fold,
+    )
 
 
 def bm25_search_batch(
@@ -849,7 +605,7 @@ def bm25_index_sink(
     compact_keep: int = 2,
 ):
     """Streaming index maintenance: a ``foreachBatch`` body that appends
-    each micro-batch of NEW documents as a delta generation —
+    each micro-batch of NEW documents as a committed increment —
 
         (docs_stream.writeStream
             .option("checkpointLocation", chk)
@@ -858,48 +614,31 @@ def bm25_index_sink(
             .trigger(availableNow=True).start())
 
     — so a continuously-ingested training corpus becomes searchable
-    without O(corpus) rebuilds, mirroring how the reference's index
-    node tails new blocks (indexer_impl.rs:147-196). Exactly-once under
-    Structured Streaming's replay model: the micro-batch id is the
-    delta's ``batch_tag``, so a batch re-delivered after a crash
-    no-ops once its delta is committed (the append itself is atomic
-    behind the ``_deltas`` manifest write).
+    without O(corpus) rebuilds. Exactly-once under Structured
+    Streaming's replay model: the micro-batch id is the append's
+    ``batch_tag``, so a batch re-delivered after a crash no-ops once
+    committed (``store.increments.sink``).
 
     ``compact_every``: when set, the sink runs ``compact_bm25_index``
-    whenever the live generation's delta count reaches this bound — a
+    whenever the live generation lists this many increments — a
     SELF-MAINTAINING index whose read plan never exceeds
-    ``compact_every`` union arms. Safe mid-stream because compaction
-    parks the folded tags in the ``_tags`` ledger (replays of folded
-    batches still no-op; digit batch ids fold to one watermark line,
-    so the ledger stays O(1) forever), and crash-safe at every point:
-    a compaction that dies before its flip leaves the delta'd
-    generation live and retries on a later batch.
+    ``compact_every`` union arms. ``compact_keep``: predecessor
+    generations retained per fold (default 2, vs the manual path's
+    grace-of-one) — size it to (longest expected query) /
+    (compact_every x batch interval). The base index must exist
+    (``write_bm25_index``); mid-stream rebuilds use
+    ``carry_ledger=True`` so the stream never needs a checkpoint
+    reset. A checkpoint WIPE restarts batch ids at 0, so it needs a
+    fresh ledger-resetting rebuild, not more appends."""
+    from rtstore_spark.store import increments
 
-    ``compact_keep``: predecessor generations retained per fold
-    (default 2, vs the manual path's grace-of-one) — a concurrent
-    reader's lazy plan survives ``compact_keep`` subsequent folds, so
-    size it to (longest expected query) / (compact_every x batch
-    interval). The base index must exist (``write_bm25_index``); full
-    rebuilds remain the deep-maintenance path — run them MID-STREAM
-    with ``write_bm25_index(..., carry_ledger=True)``, which carries
-    the committed batch-tag ledger into the fresh generation so this
-    sink's replayed batches still no-op and the stream never needs a
-    checkpoint reset. Checkpoint-reset rule (shared with the streaming
-    state tables): batch ids restart at 0 after a checkpoint WIPE, so
-    wiping the checkpoint requires a fresh ledger-resetting rebuild,
-    not more appends."""
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        append_bm25_index(
-            batch_df, text_col, id_col, path, batch_tag=str(batch_id)
-        )
-        if compact_every is not None:
-            from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-            fs = fs_for(path, spark)
-            _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-            manifest = fs.read_text(f"{path}/{live}/_deltas") or ""
-            if sum(1 for ln in manifest.splitlines() if ln.strip()) >= compact_every:
-                compact_bm25_index(spark, path, keep=compact_keep)
-
-    return apply
+    return increments.sink(
+        path,
+        resolve_base=_live_base,
+        append_batch=lambda batch_df, tag: append_bm25_index(
+            batch_df, text_col, id_col, path, batch_tag=tag
+        ),
+        compact_index=compact_bm25_index,
+        compact_every=compact_every,
+        compact_keep=compact_keep,
+    )

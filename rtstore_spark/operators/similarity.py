@@ -1145,13 +1145,13 @@ def write_pq_index(
     """Materialize an IVF-PQ index — the durable form of the full ANN
     stack for a corpus that will be queried many times:
 
-    - ``<path>/codes``      — (id, codes, route) parquet, PARTITIONED BY
+    - ``<gen>/codes``      — (id, codes, route) parquet, PARTITIONED BY
       route, so an ``nprobe``-probe query is a partition-pruned scan of
       nprobe directories over m-byte codes (at m=8 the whole index for a
       billion vectors is ~8 GB + ids — a single executor's disk);
-    - ``<path>/_centroids`` — the coarse router (``compute_centroids``);
-    - ``<path>/_model``     — the PQ codebooks (``pq_save``);
-    - ``<path>/_stats.json``— ``{"n", "train_mse"}``: the corpus size
+    - ``<gen>/_centroids`` — the coarse router (``compute_centroids``);
+    - ``<gen>/_model``     — the PQ codebooks (``pq_save``);
+    - ``<gen>/_stats.json``— ``{"n", "train_mse"}``: the corpus size
       and mean squared reconstruction error under these codebooks at
       build time — the frozen-quantizer quality reference every later
       increment's drift ratio is measured against (``pq_index_drift``).
@@ -1161,55 +1161,25 @@ def write_pq_index(
     ``read_pq_index`` and query via ``ivf_pq_topk``; exact re-ranking,
     when wanted, joins survivors back to the raw vectors by id.
 
-    ``carry_ledger`` — STREAMING-SAFE rebuild, mirroring
-    ``retrieval.write_bm25_index``: by default a rebuild resets the
-    exactly-once batch-tag ledger, forcing every ``pq_index_sink``
-    stream through a checkpoint reset. With ``carry_ledger=True`` the
-    live generation's committed-tag set (its increment pointer's
-    watermark + tag lines) is carried into the fresh generation's
-    pointer, so a mid-flight sink's replayed batches still no-op and
-    the stream never restarts — this is THE rebuild mode for the
-    retrain-on-drift playbook (README), since periodic retrains are
-    mandatory while ingest never stops. Contract: the rebuild corpus
-    must contain every committed batch's vectors (true by definition
-    of a full rebuild). Tokens from the retired pre-hash sanitizer are
-    dropped (unmatchable; the rebuild is the advised repair).
+    A full rebuild behind the root ``_current`` pointer flip
+    (``store.increments.rebuild``): a crash before the flip leaves the
+    previous generation — base AND its increments — fully live, and
+    the flip retires the old generation's increments with its base.
+    ``carry_ledger`` carries the exactly-once batch-tag ledger into the
+    rebuild so a ``pq_index_sink`` stream never needs a checkpoint
+    reset — THE rebuild mode for the retrain-on-drift playbook
+    (README), since periodic retrains are mandatory while ingest never
+    stops. Contract: the rebuild corpus contains every committed
+    batch's vectors.
     """
-    from rtstore_spark.store.fs import (
-        begin_generation,
-        commit_generation,
-        fs_for,
-        is_current_tag_token,
-        maintenance_lease,
-    )
+    import json as _json
 
-    # Atomic in-place REBUILD — the storage plane's generation protocol
-    # applied to the whole base: the new codes/centroids/model land in a
-    # fresh <path>/gen-N directory, and only when all three writes have
-    # committed does the tiny root _current pointer flip. A crash
-    # ANYWHERE before the flip leaves the previous generation — base AND
-    # its committed increments — fully live; readers never see a torn or
-    # increment-less index. Increments nest under their own generation
-    # (resolve_index_base), so a flip atomically retires the old
-    # generation's increments along with its base. Protocol mechanics in
-    # store.fs.begin/commit_generation; legacy root-layout artifacts are
-    # swept last, best-effort.
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
+
     spark = df.sparkSession
-    fs = fs_for(path, spark)
-    fs.makedirs(path)
-    with maintenance_lease(fs, path, op="write_pq_index"):
-        prev_gen, prev_name, gen_name = begin_generation(fs, path)
-        base = f"{path}/{gen_name}"
-        ledger: list[str] = []
-        if carry_ledger and prev_name is not None:
-            _, tags0, wm0 = _parse_inc_pointer(
-                fs.read_text(f"{path}/{prev_name}/inc/_current")
-            )
-            ledger = _folded_ledger_lines(tags0, wm0)
-            ledger = [
-                ln for ln in ledger
-                if ln.startswith("w") or is_current_tag_token(ln[1:])
-            ]
+
+    def write(base: str) -> None:
         coded = _pq_encode_impl(
             df, vec_col, id_col, model, with_error=True
         ).persist()
@@ -1232,40 +1202,32 @@ def write_pq_index(
             "overwrite"
         ).parquet(base + "/_centroids")
         pq_save(spark, model, base + "/_model")
-        import json as _json
-
-        fs.write_text_atomic(
+        fs_for(base, spark).write_text_atomic(
             base + "/_stats.json",
             _json.dumps(
                 {"n": int(estats["n"]),
                  "train_mse": float(estats["mse"] or 0.0)}
             ),
         )
-        if ledger:
-            fs.write_text_atomic(
-                f"{base}/inc/_current", "\n".join(["v2", *ledger]) + "\n"
-            )
-        # flip + sweep with GRACE-OF-ONE retention (round 9 converged all
-        # three index writers on it — pq previously swept the predecessor
-        # immediately, which could yank files out from under a reader
-        # holding lazy plans against the old generation); then the
-        # pre-pointer root-layout artifacts, best-effort
-        commit_generation(
-            fs, path, prev_gen, gen_name,
-            op="write_pq_index", keep=(prev_name,),
-        )
-        # ONE-TIME MIGRATION HAZARD, documented: these root-layout
-        # artifacts predate the generation pointer, so a reader still
-        # holding a lazy plan against the legacy layout loses its files
-        # at this first generational rebuild — the grace-of-one window
-        # cannot cover a layout the pointer protocol never managed.
-        # Quiesce legacy readers before the first rebuild; from then on
-        # retention behaves normally.
-        for legacy in ("codes", "_centroids", "_model", "inc"):
-            fs.delete(f"{path}/{legacy}", recursive=True)
+
+    increments.rebuild(
+        spark, path, op="write_pq_index", carry_ledger=carry_ledger,
+        write=write,
+    )
+    _retire_root_layout(spark, path)
 
 
+def _retire_root_layout(spark, path: str) -> None:
+    # ONE-TIME MIGRATION HAZARD, documented: the pre-pointer root-layout
+    # artifacts predate the generation pointer, so a reader still holding
+    # a lazy plan against them loses its files at the first generational
+    # rebuild or fold — grace-of-one retention cannot cover a layout the
+    # pointer protocol never managed. Quiesce legacy readers first.
+    from rtstore_spark.store.fs import fs_for
 
+    fs = fs_for(path, spark)
+    for legacy in ("codes", "_centroids", "_model", "inc"):
+        fs.delete(f"{path}/{legacy}", recursive=True)
 
 
 def resolve_index_base(spark, path: str) -> str:
@@ -1273,84 +1235,9 @@ def resolve_index_base(spark, path: str) -> str:
     root ``_current`` pointer, or (legacy pre-pointer layout) ``path``
     itself. Every reader and appender resolves through this, so a
     rebuild's pointer flip atomically retargets them all."""
-    from rtstore_spark.store.fs import fs_for, parse_gen_pointer
+    from rtstore_spark.store import increments
 
-    cur = fs_for(path, spark).read_text(f"{path}/_current")
-    _, live = parse_gen_pointer(cur)
-    if live is None:
-        return path
-    return f"{path}/{live}"
-
-
-def _parse_inc_pointer(
-    cur: str | None,
-) -> tuple[list[str], list[str], int | None]:
-    """The increment pointer file → (committed increment dir NAMES in
-    commit order, committed batch-tag tokens, folded-batch watermark).
-
-    Current ("v2") format: header line ``v2``, then one ``gen-*`` line
-    per committed increment directory (uniquely-suffixed names — two
-    racing appends can never write the same directory), one
-    ``t<token>`` line per tagged append (the exactly-once ledger
-    ``pq_index_sink`` replays check against), and at most one
-    ``w<int>`` WATERMARK line: micro-batch ids are monotone under
-    foreachBatch, so compaction folds every digit tag into one max —
-    the ledger stays O(1) across unbounded chained compactions, while
-    hashed (non-digit) tags carry individually. Legacy format — a bare
-    count N on line 1 (directories named exactly ``gen-1..gen-N``),
-    optional tag lines after — still parses; the first v2 write
-    upgrades it in place."""
-    if cur is None:
-        return [], [], None
-    lines = [ln.strip() for ln in cur.splitlines() if ln.strip()]
-    if not lines:
-        return [], [], None
-    wm: int | None = None
-    if lines[0] == "v2":
-        body = lines[1:]
-    else:
-        n = int(lines[0])
-        return [f"gen-{i}" for i in range(1, n + 1)], lines[1:], None
-    names = [ln for ln in body if ln.startswith("gen-")]
-    tags = [ln for ln in body if ln.startswith("t")]
-    for ln in body:
-        if ln.startswith("w") and ln[1:].isdigit():
-            wm = max(wm if wm is not None else 0, int(ln[1:]))
-    return names, tags, wm
-
-
-def _folded_ledger_lines(tags: list, wm: "int | None") -> list[str]:
-    """Committed tag tokens as pointer ledger lines with every digit
-    (sink batch-id) tag folded into ONE ``w<max>`` watermark line —
-    micro-batch ids are monotone under foreachBatch, so the max
-    subsumes them and the ledger stays O(1) across unbounded chained
-    compactions; hashed non-digit tags carry individually. The ONE
-    definition of the folded ledger, shared by ``compact_pq_index``
-    and ``write_pq_index(carry_ledger=True)``."""
-    toks = []
-    for t in tags:
-        body = t[1:]
-        if body.isdigit():
-            wm = max(wm if wm is not None else 0, int(body))
-        else:
-            toks.append(t)
-    return ([f"w{wm}"] if wm is not None else []) + sorted(set(toks))
-
-
-def _live_increments(spark, base: str) -> list[str]:
-    """Paths of the COMMITTED increment generations of an index base —
-    ``<base>/inc/<name>`` for each name the increment ``_current``
-    pointer lists. A ``gen-*`` directory absent from the pointer is an
-    orphan a crashed ``append_pq_index`` left behind: it is never read
-    and retires with its base generation (same manifest-pointer
-    protocol as the storage plane — see ``store/fs.py`` module doc).
-    Increments live UNDER the base generation, so a rebuilt base can
-    never union another generation's increments."""
-    from rtstore_spark.store.fs import fs_for
-
-    fs = fs_for(base, spark)
-    names, _, _ = _parse_inc_pointer(fs.read_text(f"{base}/inc/_current"))
-    return [f"{base}/inc/{name}" for name in names]
+    return increments.live_base(spark, path) or path
 
 
 def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
@@ -1360,9 +1247,12 @@ def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     ``append_pq_index`` increment of THAT generation; each union arm is
     its own route-partitioned parquet read, so nprobe pruning still
     skips directories in every arm."""
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
+
     base = resolve_index_base(spark, path)
     codes = spark.read.parquet(base + "/codes")
-    for inc in _live_increments(spark, base):
+    for inc in increments.increment_dirs(fs_for(base, spark), base):
         codes = codes.unionByName(spark.read.parquet(inc))
     return (
         codes,
@@ -1444,46 +1334,15 @@ def append_pq_index(
     Caller contract: ids must be new (the index does no upsert — append
     of an existing id yields two code rows and duplicate hits).
 
-    ``batch_tag``: an idempotence token for EXACTLY-ONCE streaming
-    maintenance (``pq_index_sink``), mirroring
-    ``retrieval.append_bm25_index``. Committed tags ride in the
-    increment pointer file itself (line 1 = count, lines 2+ = tags), so
-    the tag ledger and the commit are ONE atomic small-object write —
-    a micro-batch re-delivered after a crash either finds its tag (the
-    pointer flipped: full no-op) or doesn't (the retry runs as a fresh
-    append; the crashed attempt's orphan directory is never read).
-    Non-digit tags hash via ``store.fs.safe_batch_tag`` so distinct raw
-    tags never alias. An empty ``df`` is a no-op (a zero-row increment
-    directory would be schema-less and unreadable). The pointer file
-    grows one name (+ one tag line) per append SINCE THE LAST
-    compaction/rebuild: ``compact_pq_index`` clears the names and
-    folds all digit (sink) tags into a single watermark line, keeping
-    the ledger O(1) for a periodically-compacted stream (hashed
-    non-digit tags carry individually until a full ``write_pq_index``
-    rebuild — the only full reset). Same contract as the bm25
-    ``_deltas`` manifest + ``_tags`` ledger.
-
-    Crash safety — the storage plane's manifest-pointer protocol: the
-    increment is written to a fresh UNIQUELY-SUFFIXED directory
-    ``<base>/inc/gen-N-<tag|nonce>`` under the LIVE base generation
-    (unique names mean two racing appends can never clobber each
-    other's data; the pointer re-check below picks the winner), and
-    only then is the tiny ``<base>/inc/_current`` pointer rewritten to
-    list it — an atomic-enough single-object PUT on every filesystem.
-    A crash between the data write and the flip leaves an orphan
-    directory that ``read_pq_index`` never reads (it retires with the
-    base generation); no torn/partial increment is ever visible, even
-    on object-store committers that surface partially-committed task
-    files.
-
-    DIGIT-tag contract — single monotone stream (mirrors
-    ``append_bm25_index``): compaction folds digit tags into a
-    watermark, after which any digit tag ≤ it no-ops as a replay.
-    Right for ONE ``pq_index_sink`` stream's monotone batch ids; wrong
-    for two sinks sharing an index or hand-chosen non-monotone digit
-    tags — those appends would be silently dropped. One index, one
-    stream; hand-tagged appends should use non-digit tags, which hash
-    and carry individually.
+    Commit and crash safety are ``store.increments.append``: the
+    increment lands in ``<base>/inc/gen-N-<tag|nonce>`` and becomes
+    visible with one manifest write; a crash before it leaves an
+    invisible orphan. ``batch_tag`` is the exactly-once token
+    (``pq_index_sink``): a tag the ledger already holds no-ops. Digit
+    tags are one monotone stream's batch ids (one sink per index);
+    hand-tagged appends should use non-digit tags. An empty ``df`` is a
+    no-op (a zero-row increment directory would be schema-less and
+    unreadable).
 
     Drift stat: each increment's ``_stats.json`` records its row count
     and mean squared reconstruction error under the frozen codebooks —
@@ -1492,52 +1351,15 @@ def append_pq_index(
     append, so growing error is the one silent degradation this family
     has; see the README retrain playbook)."""
     import json as _json
-    import uuid
 
-    from rtstore_spark.store.fs import (
-        fs_for,
-        is_current_tag_token,
-        maintenance_lease,
-        safe_batch_tag,
-    )
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
 
     spark = df.sparkSession
-    root_fs = fs_for(path, spark)
-    with maintenance_lease(root_fs, path, op="append_pq_index"):
-        base = resolve_index_base(spark, path)
-        fs = fs_for(base, spark)
-        cur0 = fs.read_text(f"{base}/inc/_current")
-        names0, tags0, wm0 = _parse_inc_pointer(cur0)
-        token = None
-        if batch_tag is not None:
-            legacy = [
-                t[1:] for t in tags0 if not is_current_tag_token(t[1:])
-            ]
-            if legacy:
-                raise RuntimeError(
-                    f"append_pq_index: {path} carries batch tag token(s) "
-                    f"committed under the retired strip-to-alnum sanitizer "
-                    f"(e.g. {legacy[0]!r}) — replay detection cannot match "
-                    "them, so a replayed pre-upgrade batch would silently "
-                    "re-append. Rebuild the index (write_pq_index; "
-                    "carry_ledger drops the unmatchable tokens) before "
-                    "further tagged appends"
-                )
-            token = f"t{safe_batch_tag(batch_tag)}"
-            body = token[1:]
-            folded = (
-                wm0 is not None and body.isdigit() and int(body) <= wm0
-            )  # compaction folded this batch's digit tag into the watermark
-            if token in tags0 or folded:
-                return  # replayed micro-batch: already committed
+
+    def write(base: str, out: str) -> bool:
         if df.isEmpty():
-            return
-        # uniquely-suffixed increment dir (tag-derived when tagged, for
-        # debuggability): two racing appends write DISTINCT directories, so
-        # neither can clobber data the other already committed — only the
-        # pointer (re-checked below) decides the winner
-        suffix = token if token is not None else uuid.uuid4().hex[:8]
-        inc_name = f"gen-{len(names0) + 1}-{suffix}"
+            return False
         model = pq_load(spark, base + "/_model")
         cents = spark.read.parquet(
             base + "/_centroids"
@@ -1560,79 +1382,42 @@ def append_pq_index(
             codes = coded.drop("_qerr").join(
                 routed.select("id", "route"), "id"
             )
-            codes.write.mode("overwrite").partitionBy("route").parquet(
-                f"{base}/inc/{inc_name}"
-            )
+            codes.write.mode("overwrite").partitionBy("route").parquet(out)
             estats = coded.agg(
                 F.count(F.lit(1)).alias("n"), F.avg("_qerr").alias("mse")
             ).collect()[0]
         finally:
             coded.unpersist()
-        fs.write_text_atomic(
-            f"{base}/inc/{inc_name}/_stats.json",
+        fs_for(out, spark).write_text_atomic(
+            f"{out}/_stats.json",
             _json.dumps(
                 {"n": int(estats["n"]), "mse": float(estats["mse"] or 0.0)}
             ),
         )
-        # single-writer backstop, enforced loudly (mirrors
-        # append_bm25_index): a rebuild that retargeted the root pointer,
-        # or a concurrent append that advanced the increment pointer, must
-        # fail THIS append — a blind flip would either target a retired
-        # generation or discard the racer's committed increment (both
-        # pointers are re-read just before the one atomic write that
-        # commits; this append's own directory is unique, so the loser
-        # leaves only an unreferenced orphan)
-        if resolve_index_base(spark, path) != base:
-            raise RuntimeError(
-                f"append_pq_index: a rebuild advanced {path} during this "
-                "append — the increment targets a retired generation; "
-                "re-run against the new one"
-            )
-        if fs.read_text(f"{base}/inc/_current") != cur0:
-            raise RuntimeError(
-                f"append_pq_index: concurrent append detected on {path} — "
-                "indexes have a single-writer contract; re-run the append"
-            )
-        lines = ["v2", *names0, inc_name]
-        if wm0 is not None:
-            lines.append(f"w{wm0}")
-        lines.extend(tags0)
-        if token is not None:
-            lines.append(token)
-        fs.write_text_atomic(f"{base}/inc/_current", "\n".join(lines) + "\n")
-        # sweep crash orphans: any gen-* directory the committed pointer
-        # does not list was written by an attempt that never flipped (no
-        # reader ever resolved it — unreferenced dirs are invisible by
-        # construction). Without this, uniquely-suffixed retries of a
-        # flaky untagged append would leak one directory per crash until
-        # the next rebuild. Under the single-writer contract nothing live
-        # can be here.
-        committed = {inc_name, *names0}
-        for d in fs.listdir(f"{base}/inc"):
-            if d.startswith("gen-") and d not in committed:
-                fs.delete(f"{base}/inc/{d}", recursive=True)
+        return True
+
+    increments.append(
+        spark, path, op="append_pq_index", batch_tag=batch_tag,
+        resolve_base=resolve_index_base, write=write,
+    )
 
 
 def compact_pq_index(spark, path: str, keep: int = 1) -> None:
     """Fold committed increments into a fresh base generation WITHOUT
-    the corpus — the ANN mirror of ``retrieval.compact_bm25_index``.
+    the corpus — the ANN mirror of ``retrieval.compact_bm25_index``,
+    both through ``store.increments.compact``.
 
     ``write_pq_index`` folds increments too, but it re-encodes the
     whole corpus; this compaction reads only what the index already
-    persists: the base+increment code rows union into
-    ``<path>/gen-(N+1)/codes`` (no re-encode, no re-route — every row
-    was produced under the SAME codebooks/centroids, which copy over
-    verbatim), committed behind the standard pointer flip. A reader
-    then sees ONE union-free generation — one route-partitioned scan
-    per probe instead of one per increment arm. The batch-tag ledger
-    is PRESERVED: the new generation's increment pointer starts with
-    zero increments but carries every committed tag forward, so a
-    micro-batch committed-but-not-yet-checkpointed before the
-    compaction still no-ops after it — which is what makes in-sink
-    auto-compaction (``pq_index_sink(compact_every=…)``) safe. Only a
-    full rebuild (``write_pq_index``) resets the ledger. Search
-    results are identical by construction (same code rows, same model,
-    same centroids). No-op when there are no committed increments.
+    persists: the base+increment code rows union into the new
+    generation's ``codes`` (no re-encode, no re-route — every row was
+    produced under the SAME codebooks/centroids, which copy over
+    verbatim). A reader then sees ONE union-free generation — one
+    route-partitioned scan per probe instead of one per increment arm.
+    The exactly-once ledger carries forward, so in-sink auto-compaction
+    is safe mid-stream. Search results are identical by construction.
+    ``keep``: predecessor generations retained for readers' lazy plans.
+    No-op when there are no committed increments.
 
     Drift bookkeeping: the base generation's ``_stats.json`` (build-time
     ``train_mse`` — the frozen quantizer's quality reference) carries
@@ -1641,50 +1426,15 @@ def compact_pq_index(spark, path: str, keep: int = 1) -> None:
     delivered at append time — ``pq_index_drift`` / the sink warning).
     Compaction never RETRAINS the codebooks, so a drifting embedding
     distribution degrades recall until a ``write_pq_index`` rebuild —
-    that is exactly what the drift ratio exists to surface.
-
-    Crash safety: standard generation protocol — a crash before the
-    flip leaves the increment-stacked generation fully live. The
-    index's single-writer contract (ONE maintenance process at a time)
-    is enforced at operation START by the maintenance lease
-    (store.fs.acquire_maintenance_lease — a concurrent writer fails
-    fast, naming the holder) and backstopped after the fact at two
-    points — ``commit_generation`` re-checks the root pointer (a
-    rebuild raced us) and the increment pointer is re-read just before
-    the flip (an append raced us). The instants between that final
-    re-read and the flip remain uncheckable (two separate small files
-    cannot be CAS'd together), but reaching them now requires a writer
-    that already bypassed the lease's loud error — e.g. a stale-lease
-    takeover racing a holder that outlived the TTL."""
-    from rtstore_spark.store.fs import (
-        begin_generation,
-        commit_generation,
-        fs_for,
-        maintenance_lease,
-        retained_generations,
-    )
+    that is exactly what the drift ratio exists to surface."""
+    from rtstore_spark.store import increments
+    from rtstore_spark.store.fs import fs_for
 
     fs = fs_for(path, spark)
-    with maintenance_lease(fs, path, op="compact_pq_index"):
-        prev_gen, prev_name, gen_name = begin_generation(fs, path)
-        base = resolve_index_base(spark, path)
-        if prev_name is not None and base != f"{path}/{prev_name}":
-            raise RuntimeError(
-                f"compact_pq_index: a rebuild advanced {path} during this "
-                "compaction — re-run against the new generation"
-            )
-        # ONE pointer read: the increment list folded below derives from
-        # this exact snapshot (a second read could see an append that
-        # landed in between — the fold would include it while the pre-flip
-        # check flagged it as missing, a false alarm that discards work)
-        inc0 = fs.read_text(f"{base}/inc/_current")
-        names0, tags0, wm0 = _parse_inc_pointer(inc0)
-        incs = [f"{base}/inc/{name}" for name in names0]
-        if not incs:
-            return  # union-free already: nothing to fold
-        out = f"{path}/{gen_name}"
+
+    def fold(base: str, dirs: list[str], out: str) -> None:
         codes = spark.read.parquet(base + "/codes")
-        for inc in incs:
+        for inc in dirs:
             codes = codes.unionByName(spark.read.parquet(inc))
         codes.write.mode("overwrite").partitionBy("route").parquet(
             out + "/codes"
@@ -1696,41 +1446,14 @@ def compact_pq_index(spark, path: str, keep: int = 1) -> None:
         base_stats = fs.read_text(base + "/_stats.json")
         if base_stats is not None:
             fs.write_text_atomic(out + "/_stats.json", base_stats)
-        # carry the exactly-once ledger forward: zero increments, digit
-        # (sink) tags folded into ONE watermark line — micro-batch ids
-        # are monotone under foreachBatch, so max subsumes them and the
-        # ledger stays O(1) across unbounded chained compactions — and
-        # hashed (non-digit) tags carried individually
-        ledger = _folded_ledger_lines(tags0, wm0)
-        if ledger:
-            fs.write_text_atomic(
-                f"{out}/inc/_current", "\n".join(["v2", *ledger]) + "\n"
-            )
-        if fs.read_text(f"{base}/inc/_current") != inc0:
-            raise RuntimeError(
-                f"compact_pq_index: a concurrent append committed on "
-                f"{path} during this compaction — its increment is not in "
-                "the folded generation; re-run the compaction"
-            )
-        commit_generation(
-            fs, path, prev_gen, gen_name,
-            op="compact_pq_index",
-            keep=tuple({
-                *retained_generations(fs, path, keep, exclude=gen_name),
-                *((prev_name,) if prev_name else ()),
-            }),
-        )
-        if base == path:
-            # legacy pre-pointer root layout: artifacts now stale.
-            # ONE-TIME MIGRATION HAZARD (same as write_pq_index's sweep,
-            # documented per round-10 advice): a reader holding a lazy
-            # plan against the legacy ROOT layout loses its files at
-            # this first generational fold — the grace-of-one retention
-            # only covers generations the pointer protocol manages.
-            # Quiesce legacy readers before the first fold; thereafter
-            # retention behaves normally.
-            for legacy in ("codes", "_centroids", "_model", "inc"):
-                fs.delete(f"{path}/{legacy}", recursive=True)
+
+    legacy = increments.live_base(spark, path) is None
+    increments.compact(
+        spark, path, op="compact_pq_index", keep=keep,
+        resolve_base=resolve_index_base, fold=fold,
+    )
+    if legacy and increments.live_base(spark, path) is not None:
+        _retire_root_layout(spark, path)  # the root layout's first fold
 
 
 class PQDriftWarning(UserWarning):
@@ -1766,6 +1489,7 @@ def pq_index_drift(spark, path: str) -> dict:
     so the report covers appends since the last fold."""
     import json as _json
 
+    from rtstore_spark.store import increments
     from rtstore_spark.store.fs import fs_for
 
     base = resolve_index_base(spark, path)
@@ -1773,7 +1497,7 @@ def pq_index_drift(spark, path: str) -> dict:
     bs = fs.read_text(base + "/_stats.json")
     train = _json.loads(bs) if bs else None
     train_mse = float(train["train_mse"]) if train else None
-    names, _, _ = _parse_inc_pointer(fs.read_text(f"{base}/inc/_current"))
+    names = increments.read_manifest(fs, base).names
     incs = []
     tot_n, tot_err = 0, 0.0
     for name in names:
@@ -1815,39 +1539,23 @@ def pq_index_sink(
             .foreachBatch(pq_index_sink(path, "embedding", "vec_id"))
             .trigger(availableNow=True).start())
 
-    — the ANN mirror of ``retrieval.bm25_index_sink`` and of the
-    reference index node's tail-don't-reindex stance
-    (indexer_impl.rs:147-196): a continuously-ingested embedding corpus
-    becomes searchable without O(corpus) re-encodes. Exactly-once under
-    Structured Streaming's replay model: the micro-batch id is the
-    increment's ``batch_tag``, recorded in the same atomic pointer
-    write that commits the increment, so a batch re-delivered after a
-    crash no-ops (``append_pq_index`` would otherwise append duplicate
-    code rows → duplicate hits). The base index must exist
-    (``write_pq_index``); periodic rebuilds retrain/fold as the corpus
-    distribution moves.
+    — the ANN mirror of ``retrieval.bm25_index_sink``, both built on
+    ``store.increments.sink``: a continuously-ingested embedding corpus
+    becomes searchable without O(corpus) re-encodes, exactly-once under
+    Structured Streaming's replay model (the micro-batch id is the
+    increment's ``batch_tag``). The base index must exist
+    (``write_pq_index``).
 
     ``compact_every``: when set, the sink runs ``compact_pq_index``
     whenever the committed increment count reaches this bound — a
     SELF-MAINTAINING index whose read plan never exceeds
-    ``compact_every`` union arms. Safe mid-stream because compaction
-    carries the tag ledger into the folded generation (replays of
-    folded batches still no-op; digit batch ids fold to one watermark
-    line, so the ledger stays O(1) forever) and crash-safe at every
-    point (a compaction that dies before its flip leaves the stacked
-    generation live and retries on a later batch).
-
-    ``compact_keep``: predecessor generations retained per fold
-    (default 2, vs the manual path's grace-of-one) — a concurrent
-    reader's lazy plan survives ``compact_keep`` subsequent folds;
-    size it to (longest expected query) / (compact_every x batch
-    interval). Periodic RETRAINING rebuilds
-    (``write_pq_index(..., carry_ledger=True)``) run mid-stream
-    without a checkpoint reset — the carried tag ledger keeps this
-    sink's replayed batches no-ops across the rebuild. Checkpoint-
-    reset rule (shared with ``bm25_index_sink``): batch ids restart at
-    0 after a checkpoint WIPE, so wiping the checkpoint requires a
-    fresh ledger-resetting rebuild, not more appends.
+    ``compact_every`` union arms. ``compact_keep``: predecessor
+    generations retained per fold (default 2, vs the manual path's
+    grace-of-one) — size it to (longest expected query) /
+    (compact_every x batch interval). Periodic RETRAINING rebuilds
+    (``write_pq_index(..., carry_ledger=True)``) run mid-stream without
+    a checkpoint reset. A checkpoint WIPE restarts batch ids at 0, so
+    it needs a fresh ledger-resetting rebuild, not more appends.
 
     ``drift_warn_ratio``: after each committed batch the sink reads
     the index's drift report (``pq_index_drift`` — the codes' mean
@@ -1856,41 +1564,37 @@ def pq_index_sink(
     exceeds this multiple of the base generation's ``train_mse`` —
     the operator's rebuild-time signal (recall degrades silently
     otherwise; README retrain playbook). None disables."""
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        append_pq_index(
-            batch_df, vec_col, id_col, path, batch_tag=str(batch_id)
-        )
-        if drift_warn_ratio is not None:
-            import warnings
+    from rtstore_spark.store import increments
 
-            report = pq_index_drift(spark, path)
-            if report["increments"]:
-                last = report["increments"][-1]
-                if (
-                    last["ratio"] is not None
-                    and last["ratio"] > drift_warn_ratio
-                ):
-                    warnings.warn(
-                        f"pq_index_sink: increment {last['name']} of "
-                        f"{path} reconstructs at {last['mse']:.3g} MSE = "
-                        f"{last['ratio']:.2f}x the codebooks' training "
-                        f"error ({report['train_mse']:.3g}) — the "
-                        "embedding distribution has drifted from the "
-                        "training corpus and recall is degrading; "
-                        "schedule write_pq_index(carry_ledger=True) with "
-                        "retrained codebooks (README retrain playbook)",
-                        PQDriftWarning,
-                        stacklevel=2,
-                    )
-        if compact_every is not None:
-            from rtstore_spark.store.fs import fs_for
+    def append_batch(batch_df: DataFrame, tag: str) -> None:
+        append_pq_index(batch_df, vec_col, id_col, path, batch_tag=tag)
+        if drift_warn_ratio is None:
+            return
+        import warnings
 
-            base = resolve_index_base(spark, path)
-            names, _, _ = _parse_inc_pointer(
-                fs_for(base, spark).read_text(f"{base}/inc/_current")
+        report = pq_index_drift(batch_df.sparkSession, path)
+        last = report["increments"][-1] if report["increments"] else None
+        if last and last["ratio"] is not None and (
+            last["ratio"] > drift_warn_ratio
+        ):
+            warnings.warn(
+                f"pq_index_sink: increment {last['name']} of "
+                f"{path} reconstructs at {last['mse']:.3g} MSE = "
+                f"{last['ratio']:.2f}x the codebooks' training "
+                f"error ({report['train_mse']:.3g}) — the "
+                "embedding distribution has drifted from the "
+                "training corpus and recall is degrading; "
+                "schedule write_pq_index(carry_ledger=True) with "
+                "retrained codebooks (README retrain playbook)",
+                PQDriftWarning,
+                stacklevel=3,  # the foreachBatch caller of the sink
             )
-            if len(names) >= compact_every:
-                compact_pq_index(spark, path, keep=compact_keep)
 
-    return apply
+    return increments.sink(
+        path,
+        resolve_base=resolve_index_base,
+        append_batch=append_batch,
+        compact_index=compact_pq_index,
+        compact_every=compact_every,
+        compact_keep=compact_keep,
+    )

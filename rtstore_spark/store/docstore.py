@@ -116,6 +116,9 @@ DOC_READ_SCHEMA = T.StructType(
     DOC_SCHEMA.fields + [T.StructField("doc_bucket", T.LongType(), True)]
 )
 
+# RunQuery matched-set snapshots the store keeps referenced (see query_docs)
+QUERY_CACHE_SLOTS = 8
+
 
 def derive_db_addr(sender: str, nonce: int, network: int = 1) -> str:
     """Deterministic 20-byte database address from (sender, nonce, network).
@@ -185,7 +188,6 @@ class DocStore:
         self._col_cache: tuple[tuple, dict] | None = None
         # bounded FIFO of persisted RunQuery matched-sets (see query_docs)
         self._query_caches: list = []
-        self.query_cache_slots = 8
 
     # ------------------------------------------------------------------
     # paths & small helpers
@@ -861,7 +863,7 @@ class DocStore:
         diverge from the count returned with them. A checkpointed result
         can never drift — it no longer references the source files at all.
 
-        The bounded FIFO (``query_cache_slots``, 8 by default) holds OUR
+        The bounded FIFO (``QUERY_CACHE_SLOTS`` entries) holds OUR
         references so a long-lived node's query traffic cannot accumulate
         snapshots it no longer serves; eviction just drops the store's
         reference — a caller still holding the result keeps its snapshot
@@ -883,7 +885,7 @@ class DocStore:
         pred = compile_predicate(q, state_df, params=params, doc_col="doc")
         matched_df = state_df.filter(pred).localCheckpoint(eager=True)
         self._query_caches.append(matched_df)
-        while len(self._query_caches) > self.query_cache_slots:
+        while len(self._query_caches) > QUERY_CACHE_SLOTS:
             self._query_caches.pop(0)
         matched = matched_df.count()
         out = apply_stages(matched_df, q, doc_col="doc", order_col="doc_id")

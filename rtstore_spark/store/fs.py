@@ -270,7 +270,9 @@ def read_parquet_or_empty(spark, path: str, schema):
 
 def begin_generation(fs, path: str) -> tuple[int, str | None, str]:
     """Open a generation-pointer commit (the manifest protocol shared by
-    ``save_seen_filter``, ``write_pq_index`` and ``write_bm25_index``):
+    ``pipeline.save_seen_filter`` and ``store/increments.py``, whose
+    rebuild and compact commits back both maintained indexes —
+    ``write_/compact_bm25_index`` and ``write_/compact_pq_index``):
     read the current pointer and mint a uniquely-suffixed next-generation
     directory name. Returns ``(prev_gen, prev_name, new_gen_name)``. The
     caller writes its whole payload under ``<path>/<new_gen_name>`` and
@@ -511,7 +513,9 @@ def is_current_tag_token(body: str) -> bool:
 def parse_gen_pointer(cur: str | None) -> tuple[int, str | None]:
     """(generation number, directory name) from a manifest ``_current``
     pointer whose target is a ``gen-<N>[-<nonce>]`` directory — the
-    shared format of ``save_seen_filter`` and ``write_pq_index``. Legacy
+    shared format of ``save_seen_filter`` and the maintained indexes'
+    root pointers (``store/increments.py``, used by the BM25 and IVF-PQ
+    indexes). Legacy
     pointers hold the bare number (directory ``gen-<N>``); current
     pointers hold the full uniquely-suffixed directory name, so two
     racing writers that pick the same generation number still write to

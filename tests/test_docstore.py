@@ -27,6 +27,7 @@ from rtstore_spark.store.batch_apply import _local_df
 from rtstore_spark.store.docstore import (
     DOC_SCHEMA,
     LOG_SCHEMA,
+    QUERY_CACHE_SLOTS,
     WIRE_ARCHIVE_SCHEMA,
     derive_db_addr,
 )
@@ -207,9 +208,9 @@ class TestDocumentCRUD:
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)
         results = [
             store.query_docs(db, col, "/[city = cached]")
-            for _ in range(store.query_cache_slots + 3)
+            for _ in range(QUERY_CACHE_SLOTS + 3)
         ]
-        assert len(store._query_caches) == store.query_cache_slots
+        assert len(store._query_caches) == QUERY_CACHE_SLOTS
         first_df, first_count = results[0]  # evicted by now
         # a write AFTER the query must not leak into the held result
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)

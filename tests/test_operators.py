@@ -39,15 +39,16 @@ class TestDedup:
     def test_minhash_finds_neardups(self, corpus):
         sig = dedup.minhash_signatures(corpus, "text", "id", num_hashes=8)
         assert sig.count() == 6 * 8
-        cand = dedup.lsh_candidate_pairs(sig, bands=4, rows_per_band=2)
+        wide = dedup.minhash_signatures_wide(corpus, "text", "id", num_hashes=8)
+        cand = dedup.lsh_candidate_pairs_wide(wide, bands=4, rows_per_band=2)
         pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
         assert (0, 1) in pairs  # exact dup always a candidate
         assert (0, 2) in pairs or (0, 5) in pairs  # near-dups surface
         assert not any(3 in p or 4 in p for p in pairs)  # unrelated stay out
 
     def test_jaccard_verify_on_candidates(self, corpus):
-        sig = dedup.minhash_signatures(corpus, "text", "id", num_hashes=8)
-        cand = dedup.lsh_candidate_pairs(sig)
+        wide = dedup.minhash_signatures_wide(corpus, "text", "id", num_hashes=8)
+        cand = dedup.lsh_candidate_pairs_wide(wide)
         ver = dedup.jaccard_verify(corpus, cand, "text", "id", threshold=0.5)
         rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in ver.collect()}
         assert rows[(0, 1)] == 1.0
@@ -57,8 +58,8 @@ class TestDedup:
         # the persist fast path minhash_dedup drives: a caller-provided
         # candidate_shingle_hashes frame must verify identically to the
         # default (internally built) one
-        sig = dedup.minhash_signatures(corpus, "text", "id", num_hashes=8)
-        cand = dedup.lsh_candidate_pairs(sig)
+        wide = dedup.minhash_signatures_wide(corpus, "text", "id", num_hashes=8)
+        cand = dedup.lsh_candidate_pairs_wide(wide)
         sh = dedup.candidate_shingle_hashes(corpus, cand, "text", "id")
         ver_pre = dedup.jaccard_verify(
             corpus, cand, "text", "id", threshold=0.5, shingle_hashes=sh
@@ -73,8 +74,8 @@ class TestDedup:
     def test_jaccard_verify_refuses_mismatched_shingle_hashes(self, corpus):
         # a shingle_hashes frame built at another window size intersects
         # near-randomly — the provenance column must make that loud
-        sig = dedup.minhash_signatures(corpus, "text", "id", num_hashes=8)
-        cand = dedup.lsh_candidate_pairs(sig)
+        wide = dedup.minhash_signatures_wide(corpus, "text", "id", num_hashes=8)
+        cand = dedup.lsh_candidate_pairs_wide(wide)
         sh4 = dedup.candidate_shingle_hashes(
             corpus, cand, "text", "id", shingle_n=4
         )

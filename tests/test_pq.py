@@ -627,12 +627,12 @@ class TestStreamingMaintenance:
         self, spark, emb, stream_index
     ):
         from rtstore_spark.operators.similarity import (
-            _parse_inc_pointer,
             pq_index_sink,
             read_pq_index,
             resolve_index_base,
         )
         from rtstore_spark.store.fs import fs_for
+        from rtstore_spark.store.increments import read_manifest
 
         sink = pq_index_sink(
             stream_index, "embedding", "vec_id", compact_every=2
@@ -640,9 +640,8 @@ class TestStreamingMaintenance:
         sink(emb.filter("vec_id >= 40 and vec_id < 50"), 0)
         sink(emb.filter("vec_id >= 50 and vec_id < 60"), 1)  # bound → fold
         base = resolve_index_base(spark, stream_index)
-        names, tags, wm = _parse_inc_pointer(
-            fs_for(base, spark).read_text(f"{base}/inc/_current")
-        )
+        m = read_manifest(fs_for(base, spark), base)
+        names, tags, wm = list(m.names), list(m.tags), m.watermark
         # folded: zero increments; the digit batch ids compress into
         # ONE watermark line (batch ids are monotone), not per-tag lines
         assert names == [] and tags == [] and wm == 1
@@ -1222,7 +1221,6 @@ class TestStreamingSafeRebuildPQ:
         self, spark, emb, model, tmp_path
     ):
         from rtstore_spark.operators.similarity import (
-            _parse_inc_pointer,
             compact_pq_index,
             pq_index_sink,
             read_pq_index,
@@ -1230,6 +1228,7 @@ class TestStreamingSafeRebuildPQ:
             write_pq_index,
         )
         from rtstore_spark.store.fs import fs_for
+        from rtstore_spark.store.increments import read_manifest
 
         path = str(tmp_path / "pq-carry-chain")
         base = emb.filter("vec_id < 40").select(
@@ -1250,9 +1249,8 @@ class TestStreamingSafeRebuildPQ:
             carry_ledger=True,
         )
         gen = resolve_index_base(spark, path)
-        names, tags, wm = _parse_inc_pointer(
-            fs_for(gen, spark).read_text(f"{gen}/inc/_current")
-        )
+        m = read_manifest(fs_for(gen, spark), gen)
+        names, tags, wm = list(m.names), list(m.tags), m.watermark
         assert names == [] and tags == [] and wm == 1  # carried+folded
         sink(emb.filter("vec_id >= 40 and vec_id < 50"), 0)
         sink(emb.filter("vec_id >= 50 and vec_id < 60"), 1)
@@ -1412,8 +1410,11 @@ class TestDriftMonitor:
             # an in-distribution batch must NOT warn
             warnings.simplefilter("error", PQDriftWarning)
             sink(self._in_dist(spark, 100, 120), 0)
-        with pytest.warns(PQDriftWarning, match="drifted"):
+        with pytest.warns(PQDriftWarning, match="drifted") as rec:
             sink(self._shifted(spark, 200, 220), 1)
+        # attributed to the sink's caller, not to library internals
+        drift = [w for w in rec if issubclass(w.category, PQDriftWarning)]
+        assert [w.filename for w in drift] == [__file__]
 
     def test_sink_drift_warning_disabled(self, spark, drift_index):
         import warnings
@@ -1500,3 +1501,88 @@ class TestLegacyTagGuardPQ:
             "embedding", "vec_id", path, batch_tag="9",
         )
         assert read_pq_index(spark, path)[0].count() == 60
+
+
+class TestLifecyclePinPQ:
+    """The maintained IVF-PQ lifecycle through the public API — rebuild
+    → three tagged appends → replayed tag → compact → append →
+    carry_ledger rebuild → replay — with the all-probe search rows of
+    every distinct state pinned literally (recorded before the increment
+    protocol moved to store/increments.py) and every replay asserted to
+    be a no-op. All-probe keeps the rows independent of routing, so the
+    rebuild (whose centroids come from the larger corpus) must reproduce
+    them exactly."""
+
+    def test_rows_pinned_and_replays_noop(self, spark, emb, model, tmp_path):
+        from rtstore_spark.operators.similarity import (
+            append_pq_index,
+            compact_pq_index,
+            read_pq_index,
+            write_pq_index,
+        )
+
+        path = str(tmp_path / "pq-lifecycle")
+        q = emb.filter("vec_id = 55").collect()[0]["embedding"]
+
+        def rows(lo, hi):
+            return emb.filter(f"vec_id >= {lo} and vec_id < {hi}")
+
+        def state():
+            codes, cents, loaded = read_pq_index(spark, path)
+            hits = ivf_pq_topk(
+                codes, loaded, cents, q, k=5, nprobe=cents.count()
+            ).collect()
+            return codes.count(), [
+                (r["id"], round(r["score"], 6)) for r in hits
+            ]
+
+        def routed(hi):
+            return emb.filter(f"vec_id < {hi}").select(
+                F.col("vec_id").alias("id"), "embedding",
+                F.col("label").alias("route"),
+            )
+
+        write_pq_index(routed(40), "embedding", "id", "route", model, path)
+        seen = [state()]
+        for tag, (lo, hi) in enumerate([(40, 50), (50, 60), (60, 70)]):
+            append_pq_index(
+                rows(lo, hi), "embedding", "vec_id", path, batch_tag=str(tag)
+            )
+            seen.append(state())
+        append_pq_index(
+            rows(50, 60), "embedding", "vec_id", path, batch_tag="1"
+        )
+        assert state() == seen[-1]  # replayed tag
+        compact_pq_index(spark, path)
+        assert state() == seen[-1]
+        append_pq_index(
+            rows(70, 80), "embedding", "vec_id", path, batch_tag="crawl/a"
+        )
+        seen.append(state())
+        write_pq_index(
+            routed(80), "embedding", "id", "route", model, path,
+            carry_ledger=True,
+        )
+        assert state() == seen[-1]
+        for tag, (lo, hi) in [("0", (40, 50)), ("2", (60, 70)),
+                              ("crawl/a", (70, 80))]:
+            append_pq_index(
+                rows(lo, hi), "embedding", "vec_id", path, batch_tag=tag
+            )
+            assert state() == seen[-1]  # carried ledger: replay no-ops
+        assert seen == PQ_LIFECYCLE_ROWS
+
+
+# (code rows, [(id, score), ...]) of each distinct lifecycle state
+PQ_LIFECYCLE_ROWS = [
+    (40, [(37, 0.181269), (21, 0.149176), (8, 0.140128), (33, 0.126066),
+          (9, 0.094386)]),
+    (50, [(40, 0.183183), (37, 0.181269), (21, 0.149176), (8, 0.140128),
+          (33, 0.126066)]),
+    (60, [(55, 0.545632), (40, 0.183183), (37, 0.181269), (21, 0.149176),
+          (58, 0.146393)]),
+    (70, [(55, 0.545632), (40, 0.183183), (37, 0.181269), (61, 0.172624),
+          (21, 0.149176)]),
+    (80, [(55, 0.545632), (40, 0.183183), (37, 0.181269), (61, 0.172624),
+          (21, 0.149176)]),
+]

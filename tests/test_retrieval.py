@@ -117,6 +117,34 @@ def _group(rows):
     return g
 
 
+def _manifest(spark, path):
+    """The live generation's increment manifest (store/increments.py)."""
+    from rtstore_spark.store.fs import fs_for
+    from rtstore_spark.store.increments import live_base, read_manifest
+
+    return read_manifest(fs_for(path, spark), live_base(spark, path))
+
+
+def _stored_ledger(spark, path):
+    """The ledger lines the live manifest STORES (watermark, then tags)
+    — not ``Manifest.ledger()``'s folded view, so a fold that stopped
+    compressing digit tags shows up here as extra ``t`` lines."""
+    m = _manifest(spark, path)
+    wm = [] if m.watermark is None else [f"w{m.watermark}"]
+    return wm + list(m.tags)
+
+
+def _inc_dirs_on_disk(spark, path):
+    """Every increment directory under the live generation, committed
+    or orphaned."""
+    from rtstore_spark.store.increments import live_base
+
+    inc = os.path.join(live_base(spark, path), "inc")
+    if not os.path.isdir(inc):
+        return []
+    return sorted(d for d in os.listdir(inc) if d.startswith("gen-"))
+
+
 class TestDuckDbReplay:
     def test_bm25_arithmetic_matches_duckdb(self, spark):
         corpus = [
@@ -462,7 +490,7 @@ class TestIncrementalAppend:
         real = fsmod.LocalFS.write_text_atomic
 
         def dying(self, p, text):
-            if p.endswith("/_deltas"):
+            if p.endswith("/inc/_current"):
                 raise RuntimeError("injected crash before manifest write")
             return real(self, p, text)
 
@@ -475,18 +503,14 @@ class TestIncrementalAppend:
         monkeypatch.undo()
         _, _, stats = read_bm25_index(spark, path)
         assert stats["n_docs"] == 50  # orphan delta dir never read
+        assert len(_inc_dirs_on_disk(spark, path)) == 1
+        assert _manifest(spark, path).names == ()
         # a later successful append sweeps the crashed attempt's orphan
         append_bm25_index(
             docs.limit(60).subtract(docs.limit(50)), "text", "doc_id", path
         )
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        deltas = [
-            d for d in os.listdir(os.path.join(path, live))
-            if d.startswith("delta-")
-        ]
+        deltas = _inc_dirs_on_disk(spark, path)
+        assert deltas == list(_manifest(spark, path).names)
         assert len(deltas) == 1  # committed one only; orphan swept
         _, _, s2 = read_bm25_index(spark, path)
         assert s2["n_docs"] == 60
@@ -498,11 +522,7 @@ class TestIncrementalAppend:
             docs.limit(50).subtract(docs.limit(30)), "text", "doc_id", path
         )
         write_bm25_index(docs.limit(50), "text", "doc_id", path)
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        assert fs.read_text(f"{path}/{live}/_deltas") is None
+        assert _manifest(spark, path).names == ()
         _, _, stats = read_bm25_index(spark, path)
         assert stats["n_docs"] == 50
 
@@ -514,13 +534,8 @@ class TestIncrementalAppend:
         )
         _, _, stats = read_bm25_index(spark, path)
         assert stats["n_docs"] == 20
-        base = [
-            d for d in os.listdir(path) if d.startswith("gen-")
-        ]
-        assert not any(
-            e.startswith("delta-")
-            for e in os.listdir(os.path.join(path, base[0]))
-        )
+        assert _inc_dirs_on_disk(spark, path) == []
+        assert _manifest(spark, path).names == ()
 
     def test_append_without_base_raises(self, spark, docs, tmp_path):
         with pytest.raises(FileNotFoundError, match="no live bm25 index"):
@@ -548,21 +563,18 @@ class TestStreamingMaintenance:
         assert s2 == s1
         # the replay committed NO second delta (one delta dir total),
         # so every term's partial dfs sum to a single-counted df
-        gen = [d for d in os.listdir(path) if d.startswith("gen-")]
-        deltas = [
-            d for d in os.listdir(os.path.join(path, gen[0]))
-            if d.startswith("delta-")
-        ]
-        assert len(deltas) == 1
+        assert len(_inc_dirs_on_disk(spark, path)) == 1
+        assert len(_manifest(spark, path).names) == 1
         sink(batch.limit(0), 1)  # empty batch is also a no-op
         _, _, s3 = read_bm25_index(spark, path)
         assert s3 == s1
 
     def test_compaction_preserves_tag_ledger(self, spark, docs, tmp_path):
-        """Compaction parks the folded deltas' tags in the _tags
-        ledger, so a micro-batch replayed AFTER a compaction still
-        no-ops — the property that makes in-sink auto-compaction safe
-        mid-stream (only a full rebuild resets the ledger)."""
+        """Compaction carries the folded deltas' tags into the new
+        generation's ledger, so a micro-batch replayed AFTER a
+        compaction still no-ops — the property that makes in-sink
+        auto-compaction safe mid-stream (only a full rebuild resets the
+        ledger)."""
         from rtstore_spark.operators.retrieval import bm25_index_sink
 
         path = str(tmp_path / "bm25-ledger")
@@ -589,7 +601,6 @@ class TestStreamingMaintenance:
         sink folds whenever the delta count reaches the bound, replays
         of folded batches still no-op, results match a one-shot build."""
         from rtstore_spark.operators.retrieval import bm25_index_sink
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
 
         path = str(tmp_path / "bm25-autocompact")
         write_bm25_index(docs.limit(30), "text", "doc_id", path, n_buckets=8)
@@ -601,9 +612,7 @@ class TestStreamingMaintenance:
         ]
         sink(slices[0], 0)
         sink(slices[1], 1)  # second delta hits the bound → folds
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        assert fs.read_text(f"{path}/{live}/_deltas") is None  # folded
+        assert _manifest(spark, path).names == ()  # folded
         assert read_bm25_index(spark, path)[2]["n_docs"] == 50
         sink(slices[2], 2)  # one delta again
         sink(slices[1], 1)  # replay of a FOLDED batch: no-op
@@ -628,25 +637,18 @@ class TestStreamingMaintenance:
         assert via_sink == via_full
 
     def test_tag_ledger_is_watermark_compressed(self, spark, docs, tmp_path):
-        """The _tags ledger must stay O(1) for a sink-driven stream no
+        """The tag ledger must stay O(1) for a sink-driven stream no
         matter how many compactions chain: digit batch ids fold into
         ONE watermark line (batch ids are monotone under foreachBatch);
         hashed non-digit tags carry individually."""
         from rtstore_spark.operators.retrieval import bm25_index_sink
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
 
         path = str(tmp_path / "bm25-wm")
         write_bm25_index(docs.limit(30), "text", "doc_id", path)
         sink = bm25_index_sink(path, "text", "doc_id")
-        fs = fs_for(path, spark)
 
         def ledger():
-            _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-            return [
-                ln for ln in (
-                    fs.read_text(f"{path}/{live}/_tags") or ""
-                ).splitlines() if ln.strip()
-            ]
+            return _stored_ledger(spark, path)
 
         lo = 30
         for batch_id in range(4):
@@ -923,11 +925,7 @@ class TestCompaction:
         before = self._search(spark, path, queries)
         _, _, s_before = read_bm25_index(spark, path)
         compact_bm25_index(spark, path)
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        assert fs.read_text(f"{path}/{live}/_deltas") is None  # union-free
+        assert _manifest(spark, path).names == ()  # union-free
         postings, term_df, s_after = read_bm25_index(spark, path)
         assert s_after == s_before  # exact integer stats fold
         # one row per term again (the persisted fold)
@@ -1150,15 +1148,7 @@ class TestStreamingSafeRebuild:
     stance (indexer_impl.rs:147-196)."""
 
     def _ledger(self, spark, path):
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        return [
-            ln for ln in (
-                fs.read_text(f"{path}/{live}/_tags") or ""
-            ).splitlines() if ln.strip()
-        ]
+        return _stored_ledger(spark, path)
 
     def test_midstream_rebuild_replays_noop_new_batches_land(
         self, spark, docs, tmp_path
@@ -1177,11 +1167,7 @@ class TestStreamingSafeRebuild:
             docs.limit(50), "text", "doc_id", path,
             n_buckets=8, carry_ledger=True,
         )
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
-
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
-        assert fs.read_text(f"{path}/{live}/_deltas") is None  # folded
+        assert _manifest(spark, path).names == ()  # folded
         assert self._ledger(spark, path) == ["w1"]  # carried, compressed
         # the stream's replayed batches still no-op — no checkpoint reset
         sink(b0, 0)
@@ -1316,15 +1302,16 @@ class TestLegacyTagGuard:
         tag is unrecoverable) — a tagged append must refuse LOUDLY
         instead of risking a silent duplicate re-append; the
         carry-rebuild drops the unmatchable token and repairs."""
-        from rtstore_spark.store.fs import fs_for, parse_gen_pointer
+        from rtstore_spark.store.fs import fs_for
+        from rtstore_spark.store.increments import MANIFEST, live_base
 
         path = str(tmp_path / "bm25-legacy")
         write_bm25_index(docs.limit(30), "text", "doc_id", path, n_buckets=8)
-        fs = fs_for(path, spark)
-        _, live = parse_gen_pointer(fs.read_text(f"{path}/_current"))
         # a ledger token the OLD sanitizer would have written for
         # batch_tag='crawl/a' (stripped to alnum, not hashed)
-        fs.write_text_atomic(f"{path}/{live}/_tags", "tcrawla\n")
+        fs_for(path, spark).write_text_atomic(
+            f"{live_base(spark, path)}/{MANIFEST}", "v2\ntcrawla\n"
+        )
         batch = docs.limit(40).subtract(docs.limit(30))
         with pytest.raises(RuntimeError, match="strip-to-alnum"):
             append_bm25_index(batch, "text", "doc_id", path, batch_tag="9")
@@ -1341,6 +1328,49 @@ class TestLegacyTagGuard:
             "text", "doc_id", path, batch_tag="9",
         )
         assert read_bm25_index(spark, path)[2]["n_docs"] == 45
+
+
+class TestRetiredDeltasLayout:
+    def test_deltas_manifest_refused_until_rebuild(
+        self, spark, docs, tmp_path
+    ):
+        """A generation written under the retired layout keeps its
+        deltas (`_deltas`) or its folded tag ledger (`_tags`, all a
+        compaction left behind) where this version does not look:
+        reading, appending, compacting and a ledger-carrying rebuild
+        must refuse with the rebuild hint instead of silently serving
+        base-only results or re-appending a replayed batch; a plain
+        rebuild repairs."""
+        from rtstore_spark.store.fs import fs_for
+        from rtstore_spark.store.increments import live_base
+
+        path = str(tmp_path / "bm25-retired")
+        write_bm25_index(docs.limit(30), "text", "doc_id", path, n_buckets=8)
+        batch = docs.limit(40).subtract(docs.limit(30))
+        refused = [
+            lambda: read_bm25_index(spark, path),
+            lambda: append_bm25_index(
+                batch, "text", "doc_id", path, batch_tag="0"
+            ),
+            lambda: compact_bm25_index(spark, path),
+            lambda: write_bm25_index(
+                docs.limit(40), "text", "doc_id", path,
+                n_buckets=8, carry_ledger=True,
+            ),
+        ]
+        for retired, text in (("_deltas", "delta-1-t0\n"), ("_tags", "w0\n")):
+            fs_for(path, spark).write_text_atomic(
+                f"{live_base(spark, path)}/{retired}", text
+            )
+            for op in refused:
+                with pytest.raises(
+                    RuntimeError, match=f"`{retired}`.*Rebuild the"
+                ):
+                    op()
+            write_bm25_index(
+                docs.limit(30), "text", "doc_id", path, n_buckets=8
+            )
+            assert read_bm25_index(spark, path)[2]["n_docs"] == 30
 
 
 class TestLeaseOperational:
@@ -1394,3 +1424,72 @@ class TestBatchTagAliasing:
         append_bm25_index(c, "text", "doc_id", path, batch_tag="12")
         _, _, s2 = read_bm25_index(spark, path)
         assert s2["n_docs"] == 3
+
+
+class TestLifecyclePin:
+    """The whole maintained-index lifecycle through the public API —
+    rebuild → three tagged appends → replayed tag → compact → append →
+    carry_ledger rebuild → replay — with the search rows of every
+    distinct state pinned literally (they were recorded before the
+    increment protocol moved to store/increments.py, so any change of
+    what the protocol commits, folds or carries shows here) and every
+    replay asserted to be a no-op."""
+
+    def test_rows_pinned_and_replays_noop(self, spark, docs, tmp_path):
+        path = str(tmp_path / "bm25-lifecycle")
+        queries = spark.createDataFrame(QUERIES, "qid long, text string")
+
+        def rows(lo, hi):
+            return docs.limit(hi).subtract(docs.limit(lo))
+
+        def state():
+            postings, term_df, stats = read_bm25_index(spark, path)
+            return stats["n_docs"], [
+                (r["qid"], r["id"], r["score"])
+                for r in bm25_search_batch(
+                    postings, term_df, stats, queries, k=3
+                ).collect()
+            ]
+
+        write_bm25_index(docs.limit(30), "text", "doc_id", path, n_buckets=8)
+        seen = [state()]
+        for tag, (lo, hi) in enumerate([(30, 40), (40, 50), (50, 60)]):
+            append_bm25_index(
+                rows(lo, hi), "text", "doc_id", path, batch_tag=str(tag)
+            )
+            seen.append(state())
+        append_bm25_index(rows(40, 50), "text", "doc_id", path, batch_tag="1")
+        assert state() == seen[-1]  # replayed tag
+        compact_bm25_index(spark, path)
+        assert state() == seen[-1]
+        append_bm25_index(
+            rows(60, 70), "text", "doc_id", path, batch_tag="crawl/a"
+        )
+        seen.append(state())
+        write_bm25_index(
+            docs.limit(70), "text", "doc_id", path,
+            n_buckets=8, carry_ledger=True,
+        )
+        assert state() == seen[-1]
+        for tag, (lo, hi) in [("0", (30, 40)), ("2", (50, 60)),
+                              ("crawl/a", (60, 70))]:
+            append_bm25_index(
+                rows(lo, hi), "text", "doc_id", path, batch_tag=tag
+            )
+            assert state() == seen[-1]  # carried ledger: replay no-ops
+        assert seen == LIFECYCLE_ROWS
+
+
+# (n_docs, [(qid, id, score), ...]) of each distinct lifecycle state
+LIFECYCLE_ROWS = [
+    (30, [(0, 1, 0.659114), (0, 14, 0.649614), (0, 16, 0.640935),
+          (2, 11, 0.259561), (2, 21, 0.257739), (2, 15, 0.256399)]),
+    (40, [(0, 33, 0.778225), (0, 39, 0.74314), (0, 1, 0.699834),
+          (2, 11, 0.386655), (2, 21, 0.384001), (2, 15, 0.381339)]),
+    (50, [(0, 33, 0.856674), (0, 39, 0.814522), (0, 1, 0.765457),
+          (2, 42, 0.505178), (2, 11, 0.463936), (2, 21, 0.460642)]),
+    (60, [(0, 33, 0.863109), (0, 39, 0.817993), (0, 51, 0.81518),
+          (2, 42, 0.524288), (2, 11, 0.480635), (2, 21, 0.477139)]),
+    (70, [(0, 61, 0.839814), (0, 33, 0.826505), (0, 39, 0.780165),
+          (2, 42, 0.536741), (2, 11, 0.490975), (2, 15, 0.487359)]),
+]
