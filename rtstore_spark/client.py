@@ -31,7 +31,7 @@ class Client:
         self.sender = sender
 
     def _next_nonce(self) -> int:
-        return self.store.state._state["nonces"].get(self.sender, 0) + 1
+        return self.store.state.nonce_of(self.sender) + 1
 
     # -- databases --
 

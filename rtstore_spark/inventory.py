@@ -69,9 +69,6 @@ def _fanned(spark, sf: str, name: str, key: str):
 
 _REGISTRY: dict[str, tuple] = {}
 
-# bm25_maintained_search's per-process scratch root (see its body)
-_MAINT_SCRATCH: str | None = None
-
 
 def register(name: str, sql: str | None):
     def deco(fn):
@@ -1089,9 +1086,9 @@ def bm25_maintained_search(spark, sf):
     (test_append_visible_without_rebuild_and_matches_full_rebuild) plus
     the fold-after-restriction plan shape (TestDeltaFoldPlan)."""
     import os
-    import tempfile
 
     from rtstore_spark.operators.retrieval import (
+        _batch_scratch,
         append_bm25_index,
         bm25_search_batch,
         read_bm25_index,
@@ -1099,18 +1096,13 @@ def bm25_maintained_search(spark, sf):
     )
 
     docs = load_table(spark, sf, "documents")
-    # ONE mkdtemp per process (not per call): the gate and the bench
-    # invoke registry callables repeatedly, and a fresh directory per
-    # call would leak one full index per invocation, while a
-    # pid-derived fixed /tmp name would be a pre-creation hazard on a
-    # shared host. A repeat call on the cached path is an in-place
-    # rebuild — the generation protocol sweeps old generations itself
-    # (so evaluate each returned DataFrame before invoking again; the
-    # gate and bench both do).
-    global _MAINT_SCRATCH
-    if _MAINT_SCRATCH is None:
-        _MAINT_SCRATCH = tempfile.mkdtemp(prefix="rtstore_bm25_maint_")
-    path = os.path.join(_MAINT_SCRATCH, "idx")
+    # one index path per process under the BM25 scratch root (removed at
+    # exit, or ``$RTSTORE_SCRATCH_DIR``'s own lifecycle): the gate and the
+    # bench invoke registry callables repeatedly, and a repeat call is an
+    # in-place rebuild — the generation protocol sweeps old generations
+    # itself (so evaluate each returned DataFrame before invoking again;
+    # the gate and bench both do).
+    path = os.path.join(_batch_scratch(spark), "bm25_maintained_search")
     write_bm25_index(
         docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", path,
         n_buckets=16,

@@ -504,8 +504,9 @@ _BATCH_SCRATCH: str | None = None
 
 def _batch_scratch(spark) -> str:
     """Per-process scratch root for ``bm25_batch_topk``'s single-tokenize
-    materialization. One root per process; each CALL writes a fresh
-    subdirectory under it, so a repeat invocation always recomputes from
+    materialization (and the oracle row ``bm25_maintained_search``'s
+    index). One root per process; each ``bm25_batch_topk`` CALL writes a
+    fresh subdirectory under it, so a repeat invocation always recomputes from
     the corpus (never reuses a prior call's files) and never deletes
     files a still-lazy earlier result may yet read. The local-tempdir
     default is removed at interpreter exit; a ``$RTSTORE_SCRATCH_DIR``

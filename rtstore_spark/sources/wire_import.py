@@ -437,11 +437,7 @@ def import_wire_rollup(
         # per-db id base: continue after anything already known — current
         # counter AND the largest origin-supplied id in this batch
         touched_dbs = [r["db_addr"] for r in doc.select("db_addr").distinct().collect()]
-        with store.state.lock:
-            counter_base = {
-                db: store.state._state["doc_counters"].get(db, 0)
-                for db in touched_dbs
-            }
+        counter_base = {db: store.state.doc_counter(db) for db in touched_dbs}
         # only origin-ASSIGNED ids (adds) raise the base; update/delete ids
         # merely REFERENCE docs — often ones this same batch's id-less adds
         # are about to create

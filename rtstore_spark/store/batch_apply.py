@@ -1,4 +1,4 @@
-"""Set-wise micro-batch mutation apply — the scale path for SendMutation.
+"""Set-wise micro-batch mutation apply, and the one set-wise document writer.
 
 The reference applies mutations one at a time on a single node
 (storage_node_light_impl.rs:613-698). Replaying that shape through Spark —
@@ -11,20 +11,29 @@ the mutation count:
    arrival index becomes the mutation's ``order`` within the block, so the
    merge-on-read window resolves intra-block races exactly as a sequential
    apply would.
-2. verify + nonce — one ``applyInPandas`` over ``groupBy(sender)``:
-   signature check (Arrow-batched, distributed) and the per-sender
+2. verify + nonce — one ``applyInPandas`` over the senders' normalized
+   addresses (``state.normalize_addr``): signature check against the
+   sender as signed (Arrow-batched, distributed) and the per-account
    strictly-increasing nonce walk in arrival order (state_store.rs:171+).
    The mutation id (sha3(payload ‖ signature), id.rs:78-86) is computed in
    the same pass.
 3. control-plane ops (create_database / add_collection) — rare; collected
    and applied driver-side in arrival order via the DocStore methods.
-4. document ops — per touched collection: ONE id-assigned append of all
-   adds (ids come from a driver-reserved contiguous range + distributed
-   row_number), ONE ownership-check join + patch-fold + merge-patch append
-   of all updates, ONE ownership-check join + tombstone append of all
-   deletes.
+4. document ops — per touched collection, through the set-wise writer
+   below: ONE append of all adds (ids from a driver-reserved contiguous
+   range, pure arithmetic per mutation), the pinned state after them, ONE
+   mutation-atomic ownership check of the updates and deletes, ONE
+   folded-update merge append, ONE tombstone append.
 5. log — ONE append of every accepted doc-op row, carrying the per-mutation
-   doc_ids_map so a replica's sequential replay reproduces identical state.
+   doc_ids_map so a replica's replay reproduces identical state.
+
+The set-wise writer (``append_adds``, ``pinned_state``, ``append_updates``,
+``append_tombstones``, ``append_log``) takes one row per document mutation
+— ``action, owner, block, order, ids, docs, patches`` — and is the one
+write path of blocks, log replay (store/replay.py), rollup import and wire
+import. It never asks who calls it: the block applier runs its owner check
+between ``pinned_state`` and the update and delete writers, replay of an
+already-validated log does not.
 
 Intra-block semantics (documented deviation from strict sequential apply):
 validation of updates/deletes sees the block's *adds* but not its deletes —
@@ -52,6 +61,7 @@ from rtstore_spark.store.docstore import (
     DOC_READ_SCHEMA,
     DOC_SCHEMA,
     LOG_BLOCKS_PER_BUCKET,
+    LOG_SCHEMA,
     _arrow_table,
 )
 
@@ -63,6 +73,7 @@ FILE_OFFSET_SCHEMA = (
 ARRIVAL_START_SCHEMA = (
     T.StructType().add("_arrival", T.LongType()).add("_start", T.LongType())
 )
+ORDER_SCHEMA = T.StructType().add("order", T.IntegerType())
 
 
 def _local_df(
@@ -75,10 +86,14 @@ def _local_df(
     return spark.createDataFrame(_arrow_table(rows, schema), schema=schema)
 
 
-def _with_doc_bucket(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
-    )
+def _normalized_addr(col):
+    """``state.normalize_addr`` as a Spark expression: 0x followed by
+    exactly 40 hex digits folds to lowercase, anything else passes."""
+    return F.when(
+        (F.length(col) == 42) & col.rlike("^0[xX][0-9a-fA-F]{40}$"),
+        F.concat(F.lit("0x"), F.lower(F.substring(col, 3, 40))),
+    ).otherwise(col)
+
 
 PAYLOAD_SCHEMA = T.StructType(
     [
@@ -155,7 +170,10 @@ def pinned_state(store, path: str) -> DataFrame:
 
 
 def make_admit_fn(initial_nonces: dict[str, int], sig_mode: str):
-    """Build the per-sender admission function for ``applyInPandas``.
+    """Build the per-account admission function for ``applyInPandas``
+    over ``groupBy(owner)``, ``owner`` being the normalized sender: every
+    spelling of one account walks one nonce sequence, while each
+    signature is checked against the sender as the envelope gives it.
 
     Closure-factory on purpose: the function is cloudpickled by value, so
     workers never import this module. Captures only plain data — except in
@@ -177,10 +195,12 @@ def make_admit_fn(initial_nonces: dict[str, int], sig_mode: str):
         import pandas as pd
 
         pdf = pdf.sort_values("_arrival")
-        sender = pdf["sender"].iloc[0]
-        cur = initial_nonces.get(sender, 0)
+        owner = pdf["owner"].iloc[0]
+        cur = initial_nonces.get(owner, 0)
         mids, oks, reasons = [], [], []
-        for payload, sig, nonce in zip(pdf["payload"], pdf["signature"], pdf["nonce"]):
+        for payload, sig, nonce, sender in zip(
+            pdf["payload"], pdf["signature"], pdf["nonce"], pdf["sender"]
+        ):
             ok, reason = True, ""
             if sig_mode == "digest":
                 want = hashlib.sha3_256(
@@ -198,7 +218,7 @@ def make_admit_fn(initial_nonces: dict[str, int], sig_mode: str):
                 ok, reason = False, f"unsupported batch sig mode {sig_mode}"
             if ok:
                 if nonce <= cur:
-                    ok, reason = False, f"bad nonce for {sender}: {nonce} <= {cur}"
+                    ok, reason = False, f"bad nonce for {owner}: {nonce} <= {cur}"
                 else:
                     cur = nonce
             mids.append(
@@ -209,7 +229,8 @@ def make_admit_fn(initial_nonces: dict[str, int], sig_mode: str):
         return pd.DataFrame(
             {
                 "payload": pdf["payload"], "signature": pdf["signature"],
-                "sender": pdf["sender"], "nonce": pdf["nonce"],
+                "sender": pdf["sender"], "owner": pdf["owner"],
+                "nonce": pdf["nonce"],
                 "_arrival": pdf["_arrival"], "_mid": mids, "_ok": oks,
                 "_reason": reasons,
             }
@@ -242,6 +263,7 @@ ADMIT_SCHEMA = T.StructType(
         T.StructField("payload", T.StringType()),
         T.StructField("signature", T.StringType()),
         T.StructField("sender", T.StringType()),
+        T.StructField("owner", T.StringType()),
         T.StructField("nonce", T.LongType()),
         T.StructField("_arrival", T.LongType()),
         T.StructField("_mid", T.StringType()),
@@ -252,8 +274,9 @@ ADMIT_SCHEMA = T.StructType(
 
 
 def make_fold_patches():
-    """Arrow-batched composition of an arrival-ordered patch chain into one
-    equivalent RFC 7386 patch (closure-factory, self-contained on workers).
+    """Arrow-batched composition of a patch chain, sorted by (block,
+    order), into one equivalent RFC 7386 patch (closure-factory,
+    self-contained on workers).
 
     Composition rule: ``apply(apply(d, p1), p2) == apply(d, p1 ∘ p2)`` where
     ``∘`` recursively merges object values and lets p2 scalars — *including
@@ -280,7 +303,7 @@ def make_fold_patches():
 
         def fold(chain):
             acc = None
-            for item in chain:  # already sorted by (_arrival asc) via sort_array
+            for item in chain:  # sorted by (block, order) via sort_array
                 p = json.loads(item["patch"])
                 acc = p if acc is None else compose(acc, p)
             return json.dumps(acc, sort_keys=True)
@@ -288,6 +311,112 @@ def make_fold_patches():
         return pd.Series([fold(c) for c in chains])
 
     return fold_patches
+
+
+# -- the set-wise document writer ------------------------------------------
+# Input rows: one per document mutation, columns
+#   action, owner, block, order, ids, docs, patches
+# ``ids`` holds the mutation's document ids — the assigned ids of an add,
+# the targets of an update or delete. Callers run the writers in the
+# order adds → pinned_state → updates → tombstones (updates merge against
+# the state after this batch's adds), then append the log.
+
+
+def _append_partitioned(
+    df: DataFrame, bucket: str, source: str, per: int, path: str
+) -> None:
+    """Append ``df`` under ``<bucket>=<source div per>`` directories, one
+    file per bucket, each bucket written by its own task. A single-task
+    write (``repartition(1)``) timed the same on 4-collection blocks of
+    4-5k mutations (4-vCPU host) but funnels a large block through one
+    task."""
+    df.withColumn(bucket, F.expr(f"`{source}` div {per}")).repartition(
+        F.col(bucket)
+    ).write.mode("append").partitionBy(bucket).parquet(path)
+
+
+def _append_docs(df: DataFrame, path: str) -> None:
+    _append_partitioned(
+        df.select(
+            "doc_id", "owner", "doc", "op",
+            F.col("block").cast("long"), F.col("order").cast("int"),
+        ),
+        "doc_bucket", "doc_id", DOC_IDS_PER_BUCKET, path,
+    )
+
+
+def append_adds(rows: DataFrame, path: str) -> None:
+    """One append of every add's documents, at the add's (block, order)."""
+    _append_docs(
+        rows.filter(F.col("action") == "add_document")
+        .select(
+            "owner", "block", "order",
+            F.explode(F.arrays_zip("ids", "docs")).alias("_z"),
+        )
+        .select(
+            F.col("_z.ids").alias("doc_id"), "owner",
+            F.col("_z.docs").alias("doc"), F.lit("A").alias("op"),
+            "block", "order",
+        ),
+        path,
+    )
+
+
+def append_updates(rows: DataFrame, state_df: DataFrame, path: str) -> None:
+    """One merge append of every updated document: each document's patch
+    chain, sorted by (block, order), folds into one RFC 7386 patch, merges
+    against its ``state_df`` row and lands at the chain's last (block,
+    order). Rows whose document is absent from ``state_df`` write nothing."""
+    fold = make_fold_patches()
+    merge = make_json_merge_patch()
+    folded = (
+        rows.filter(F.col("action") == "update_document")
+        .select(
+            "block", "order",
+            F.explode(F.arrays_zip("ids", "patches")).alias("_z"),
+        )
+        .groupBy(F.col("_z.ids").alias("doc_id"))
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct("block", "order", F.col("_z.patches").alias("patch"))
+                )
+            ).alias("_chain"),
+            F.max(F.struct("block", "order")).alias("_last"),
+        )
+    )
+    _append_docs(
+        state_df.select("doc_id", "owner", "doc")
+        .join(folded, "doc_id")
+        .select(
+            "doc_id", "owner",
+            merge(F.col("doc"), fold(F.col("_chain"))).alias("doc"),
+            F.lit("U").alias("op"),
+            F.col("_last.block").alias("block"),
+            F.col("_last.order").alias("order"),
+        ),
+        path,
+    )
+
+
+def append_tombstones(rows: DataFrame, path: str) -> None:
+    """One append of a tombstone per deleted document id."""
+    _append_docs(
+        rows.filter(F.col("action") == "delete_document").select(
+            F.explode("ids").alias("doc_id"), "owner",
+            F.lit(None).cast("string").alias("doc"), F.lit("D").alias("op"),
+            "block", "order",
+        ),
+        path,
+    )
+
+
+def append_log(store, log_df: DataFrame) -> None:
+    """One append of LOG_SCHEMA rows to the store's mutation log."""
+    _append_partitioned(
+        log_df.select([f.name for f in LOG_SCHEMA.fields]),
+        "block_bucket", "block", LOG_BLOCKS_PER_BUCKET, store._log_path(),
+    )
 
 
 class BatchApplier:
@@ -344,41 +473,40 @@ class BatchApplier:
             .drop("_f", "_s", "_off", "_split_start")
         )
 
-    def _atomic_check(self, exploded: DataFrame, state_df: DataFrame, muts: DataFrame):
-        """Mutation-atomic ownership/existence check for exploded (doc_id,
-        _arrival, sender) rows: one join + one agg; returns (ok_arrivals_df,
-        rejected list). The reference rejects the whole mutation if any id
-        fails (db_store_v2.rs:819-846)."""
-        joined = exploded.join(
-            state_df.select("doc_id", F.col("owner").alias("_owner")),
-            "doc_id", "left",
+    def _atomic_check(self, rows: DataFrame, state_df: DataFrame):
+        """Mutation-atomic ownership/existence check of the updates and
+        deletes among ``rows`` against ``state_df``: one join + one agg +
+        one collect of the failures. The reference rejects the whole
+        mutation if any id fails (db_store_v2.rs:819-846). Returns
+        (``rows`` minus the rejected mutations, rejected list); a mutation
+        with an empty ids array has nothing to fail and stays."""
+        checked = rows.filter(
+            F.col("action").isin("update_document", "delete_document")
         )
-        per_mut = (
-            joined.withColumn(
-                "_fail",
-                F.when(F.col("_owner").isNull(), F.lit("documents not found"))
-                .when(F.col("_owner") != F.col("sender"), F.lit("owner mismatch"))
-                .otherwise(F.lit(None)),
+        owners = state_df.select("doc_id", F.col("owner").alias("_owner"))
+        fails = (
+            checked.select("order", "owner", F.explode("ids").alias("doc_id"))
+            .join(owners, "doc_id", "left")
+            .groupBy("order")
+            .agg(
+                F.max(
+                    F.when(F.col("_owner").isNull(), F.lit("documents not found"))
+                    .when(F.col("_owner") != F.col("owner"), F.lit("owner mismatch"))
+                ).alias("_fail")
             )
-            .groupBy("_arrival")
-            .agg(F.max("_fail").alias("_fail"))
+            .filter(F.col("_fail").isNotNull())
         )
-        bad = per_mut.filter(F.col("_fail").isNotNull())
-        rejected = self._reject_rows(
-            bad.join(muts, "_arrival")
-            .select("payload", "signature", "sender", "nonce", "_fail")
-            .collect(),
-            reason_col="_fail",
+        bad = (
+            fails.join(checked, "order")
+            .select("payload", "signature", "sender", "nonce", "order", "_fail")
+            .collect()
         )
-        # ok = every mutation minus the failed ones — keyed off MUTS, not
-        # off the exploded rows: a mutation with an empty ids array has no
-        # exploded row at all, and deriving ok from per_mut would make it
-        # vanish (neither rejected nor logged) even though its nonce was
-        # consumed — an accepted no-op must reach the log like empty adds
-        ok = muts.select("_arrival").join(
-            bad.select("_arrival"), "_arrival", "left_anti"
-        )
-        return ok, rejected
+        if bad:
+            orders = _local_df(
+                self.spark, [{"order": r["order"]} for r in bad], ORDER_SCHEMA
+            )
+            rows = rows.join(F.broadcast(orders), "order", "left_anti")
+        return rows, self._reject_rows(bad, reason_col="_fail")
 
     @staticmethod
     def _json_file_source(df: DataFrame) -> bool:
@@ -497,18 +625,21 @@ class BatchApplier:
                 & F.col("payload").isNotNull()
             )
             malformed = stamped.filter(~env_ok).select(
-                "payload", "signature", "sender", "nonce", "_arrival",
+                "payload", "signature", "sender",
+                F.lit(None).cast("string").alias("owner"), "nonce", "_arrival",
                 F.lit(None).cast("string").alias("_mid"),
                 F.lit(False).alias("_ok"),
                 F.lit("malformed envelope").alias("_reason"),
             )
-            admit = make_admit_fn(
-                dict(state._state["nonces"]), self.ingest.sig_mode
-            )
+            admit = make_admit_fn(state.nonces(), self.ingest.sig_mode)
             admitted = (
                 stamped.filter(env_ok)
-                .select("payload", "signature", "sender", "nonce", "_arrival")
-                .groupBy("sender")
+                .select(
+                    "payload", "signature", "sender",
+                    _normalized_addr(F.col("sender")).alias("owner"),
+                    "nonce", "_arrival",
+                )
+                .groupBy("owner")
                 .applyInPandas(admit, schema=ADMIT_SCHEMA)
                 .unionByName(malformed)
             )
@@ -590,26 +721,25 @@ class BatchApplier:
                         str(e),
                     ))
 
-            # advance nonces to each sender's ADMITTED max (independent of
+            # advance nonces to each account's ADMITTED max (independent of
             # action validity — a rejected unknown-action mutation still
             # consumed its nonce in the admission walk): O(senders) rows
-            admitted_ok = parsed.filter(F.col("_ok"))
-            for r in admitted_ok.groupBy("sender").agg(F.max("nonce").alias("n")).collect():
-                if r["n"] > state._state["nonces"].get(r["sender"], 0):
-                    state._state["nonces"][r["sender"]] = int(r["n"])
-            state._flush()
+            state.advance_nonces({
+                r["owner"]: r["n"]
+                for r in parsed.filter(F.col("_ok"))
+                .groupBy("owner").agg(F.max("nonce").alias("n")).collect()
+            })
 
             # 4. document ops, set-wise per touched collection. ONE driver
             # collect of the doc-op headers (db, col, action, arrival, doc
             # count — O(mutations) small rows, same scale as the reject
             # collect) drives the whole phase: the touched-collection set,
-            # which collections have updates/deletes (so no per-collection
+            # which op kinds each collection has (so no per-collection
             # head() probes), and the contiguous doc-id offsets. Ids must
             # be contiguous in (_arrival, position-within-mutation) order;
             # a Window.partitionBy(lit(1)) row_number would pull every doc
-            # row of the block through ONE task — instead each doc's id is
-            # pure arithmetic off a broadcast per-mutation start: no
-            # window at all over doc rows, parallelism is the scan's.
+            # row of the block through ONE task — instead each add's ids
+            # are pure arithmetic off a broadcast per-mutation start.
             doc_ops = accepted.filter(F.col("_action").isin(*_DOC_ACTIONS))
             info = doc_ops.select(
                 "_db", "_col", "_action", "_arrival",
@@ -617,18 +747,12 @@ class BatchApplier:
             ).collect()
             by_col: dict[tuple, dict] = {}
             for r in info:
-                e = by_col.setdefault(
-                    (r["_db"], r["_col"]),
-                    {"adds": [], "has_upd": False, "has_del": False, "n_docs": 0},
-                )
+                e = by_col.setdefault((r["_db"], r["_col"]), {"adds": []})
+                e[r["_action"]] = True
                 if r["_action"] == "add_document":
                     # clamp: size(null _docs) is -1 on Spark 3.5 (legacy
                     # sizeOfNull), null on 4.x — either way 0 docs
                     e["adds"].append((int(r["_arrival"]), max(r["_n"] or 0, 0)))
-                elif r["_action"] == "update_document":
-                    e["has_upd"] = True
-                else:
-                    e["has_del"] = True
 
             # catalog lookups once per block, not per collection per phase
             # (tombstoned/hidden collections are absent from collections())
@@ -648,33 +772,31 @@ class BatchApplier:
             # absolute start ids
             offs: list[dict] = []
             for (db, col), e in sorted(by_col.items()):
-                if (db, col) not in existing:
-                    continue
                 n_docs = sum(n for _, n in e["adds"])
-                if not n_docs:
+                if (db, col) not in existing or not n_docs:
                     continue
                 cum = store.state.reserve_doc_ids(db, int(n_docs))
                 for arr, n in sorted(e["adds"]):
                     offs.append({"_arrival": arr, "_start": cum})
                     cum += n
-                e["n_docs"] = n_docs
-            add_rows_all = None
-            if offs:
-                off_df = _local_df(self.store.spark, offs, ARRIVAL_START_SCHEMA)
-                add_rows_all = (
-                    doc_ops.filter(F.col("_action") == "add_document")
-                    .select(
-                        "_db", "_col", "sender", "_arrival",
-                        F.posexplode("_docs").alias("_pos", "doc"),
-                    )
-                    .join(F.broadcast(off_df), "_arrival")
-                    .withColumn("doc_id", F.col("_start") + F.col("_pos"))
-                    .persist()
-                )
+            rows = doc_ops.join(
+                F.broadcast(_local_df(self.spark, offs, ARRIVAL_START_SCHEMA)),
+                "_arrival", "left",
+            ).select(
+                "payload", "signature", "sender", "nonce", "_mid", "_db", "_col",
+                F.col("_action").alias("action"), "owner",
+                F.lit(block).cast("long").alias("block"),
+                F.col("_arrival").cast("int").alias("order"),
+                F.when(
+                    F.col("_action") == "add_document",
+                    F.transform("_docs", lambda _, i: F.col("_start") + i),
+                ).otherwise(F.col("_ids")).alias("ids"),
+                F.col("_docs").alias("docs"), F.col("_patches").alias("patches"),
+            )
 
             logged: list[DataFrame] = []
             for db, col in sorted(by_col):
-                muts = doc_ops.filter((F.col("_db") == db) & (F.col("_col") == col))
+                muts = rows.filter((F.col("_db") == db) & (F.col("_col") == col))
                 if (db, col) not in existing:
                     rejected += self._reject_rows(
                         muts.select("payload", "signature", "sender", "nonce")
@@ -682,26 +804,33 @@ class BatchApplier:
                         .collect()
                     )
                     continue
-                log_df, rej = self._apply_collection(
-                    muts, db, col, block, by_col[(db, col)], add_rows_all
+                ok, rej = self._apply_collection(
+                    muts, store._data_path(db, col), by_col[(db, col)]
                 )
-                logged.append(log_df)
+                logged.append(ok)
                 rejected += rej
 
-            # 5. one log append for every accepted doc-op mutation; the
-            # shared add-rows cache stays alive until this materializes
-            # (the log's doc_ids_map reads it), then is released
+            # 5. one log append for every accepted doc-op mutation, its
+            # payload normalized to the online _log format ({"docs": ...} /
+            # {"patches": ...} / null)
             if logged:
                 log_all = logged[0]
                 for extra in logged[1:]:
                     log_all = log_all.unionByName(extra)
-                log_all.withColumn(
-                    "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-                ).repartition(1).write.mode("append").partitionBy(
-                    "block_bucket"
-                ).parquet(store._log_path())
-            if add_rows_all is not None:
-                add_rows_all.unpersist()
+                append_log(store, log_all.select(
+                    F.col("_mid").alias("id"), F.col("owner").alias("sender"),
+                    "nonce", "action",
+                    F.col("_db").alias("db_addr"), F.col("_col").alias("col_name"),
+                    F.when(
+                        F.col("action") == "add_document",
+                        F.to_json(F.struct("docs")),
+                    ).when(
+                        F.col("action") == "update_document",
+                        F.to_json(F.struct("patches")),
+                    ).alias("payload"),
+                    F.to_json("ids").alias("doc_ids"),
+                    "block", "order",
+                ))
 
             # sequencer high-water mark = last arrival index in this block
             top = parsed.agg(F.max("_arrival").alias("m")).collect()[0]["m"]
@@ -720,180 +849,38 @@ class BatchApplier:
         seq = (block, int(r["_arrival"]))
         if r["_action"] == "create_database":
             store.create_database(
-                r["sender"], int(r["nonce"]), desc=body.get("desc", ""),
+                r["owner"], int(r["nonce"]), desc=body.get("desc", ""),
                 db_type=body.get("db_type", "doc"), meta=body.get("meta"),
                 seq=seq, mid=r["_mid"],
             )
         else:
             store.create_collection(
                 payload["db_addr"], payload["col_name"],
-                body.get("indexes", []), r["sender"], mid=r["_mid"], seq=seq,
+                body.get("indexes", []), r["owner"], mid=r["_mid"], seq=seq,
             )
-
-    def _pinned_state(self, path: str) -> DataFrame:
-        return pinned_state(self.store, path)
 
     def _apply_collection(
-        self,
-        muts: DataFrame,
-        db: str,
-        col: str,
-        block: int,
-        colinfo: dict,
-        add_rows_all: DataFrame | None,
+        self, rows: DataFrame, path: str, kinds: dict
     ) -> tuple[DataFrame, list]:
-        """Apply one collection's adds/updates/deletes; returns (log rows DF,
-        rejected list). Constant job count regardless of mutation count —
-        and no probe jobs at all: ``colinfo`` (from the block-level header
-        collect) already says which op kinds this collection has."""
-        store = self.store
-        path = store._data_path(db, col)
-        rejected: list[tuple[dict, str]] = []
-        ok_arrivals = []  # DFs of accepted _arrival values, for the log
-
-        # ---- adds: slice of the block-level id-assigned cache, one append.
-        # An add mutation with an EMPTY docs list is still accepted (and
-        # logged) like the sequential path's no-op add — hence ok_arrivals
-        # keys off the mutations, not off n_docs.
-        add_rows = None
-        if colinfo["adds"]:
-            ok_arrivals.append(
-                muts.filter(F.col("_action") == "add_document").select("_arrival")
-            )
-        if colinfo["n_docs"]:
-            add_rows = (
-                add_rows_all.filter(
-                    (F.col("_db") == db) & (F.col("_col") == col)
-                )
-                .select(
-                    "doc_id", F.col("sender").alias("owner"), "doc",
-                    F.lit("A").alias("op"), F.lit(block).alias("block"),
-                    F.col("_arrival").cast("int").alias("order"), "_arrival",
-                )
-            )
-            _with_doc_bucket(
-                add_rows.select([f.name for f in DOC_SCHEMA.fields])
-            ).repartition(1).write.mode("append").partitionBy(
-                "doc_bucket"
-            ).parquet(path)
-
-        # State after this block's adds, shared by update + delete checks —
-        # pinned to an explicit file list. Parquet files are immutable, so
-        # every plan built from this snapshot stays stable even when lazily
-        # re-evaluated after this block's own U/D appends land in the same
-        # directory (a directory-listing read would see the block's own
-        # tombstones on recompute and mis-validate the block's deletes).
-        # Only built when updates/deletes exist (colinfo; no probe jobs).
-        state_df = None
-        if colinfo["has_upd"] or colinfo["has_del"]:
-            state_df = self._pinned_state(path).persist()
-
-        # ---- updates: atomic ownership check, fold patch chains, one merge
-        if colinfo["has_upd"]:
-            updates = muts.filter(F.col("_action") == "update_document")
-            upd_exploded = updates.select(
-                "sender", "_arrival",
-                F.explode(F.arrays_zip("_ids", "_patches")).alias("_z"),
-            ).select(
-                "sender", "_arrival",
-                F.col("_z._ids").alias("doc_id"), F.col("_z._patches").alias("patch"),
-            )
-            ok_upd, rej = self._atomic_check(upd_exploded, state_df, updates)
-            rejected += rej
-            good = upd_exploded.join(ok_upd, "_arrival")
-            fold = make_fold_patches()
-            merge = make_json_merge_patch()
-            folded = (
-                good.groupBy("doc_id")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct("_arrival", "patch"))
-                    ).alias("_chain"),
-                    F.max("_arrival").alias("_last"),
-                )
-                .select(
-                    "doc_id", fold(F.col("_chain")).alias("_patch"), "_last"
-                )
-            )
-            merged = (
-                state_df.join(folded, "doc_id")
-                .select(
-                    "doc_id", "owner",
-                    merge(F.col("doc"), F.col("_patch")).alias("doc"),
-                    F.lit("U").alias("op"), F.lit(block).alias("block"),
-                    F.col("_last").cast("int").alias("order"),
-                )
-            )
-            _with_doc_bucket(merged).repartition(1).write.mode(
-                "append"
-            ).partitionBy("doc_bucket").parquet(path)
-            ok_arrivals.append(ok_upd)
-
-        # ---- deletes: atomic ownership check, one tombstone append
-        if colinfo["has_del"]:
-            deletes = muts.filter(F.col("_action") == "delete_document")
-            del_exploded = deletes.select(
-                "sender", "_arrival", F.explode("_ids").alias("doc_id")
-            )
-            ok_del, rej = self._atomic_check(del_exploded, state_df, deletes)
-            rejected += rej
-            _with_doc_bucket(
-                del_exploded.join(ok_del, "_arrival")
-                .select(
-                    "doc_id", F.col("sender").alias("owner"),
-                    F.lit(None).cast("string").alias("doc"),
-                    F.lit("D").alias("op"), F.lit(block).alias("block"),
-                    F.col("_arrival").cast("int").alias("order"),
-                )
-            ).repartition(1).write.mode("append").partitionBy(
-                "doc_bucket"
-            ).parquet(path)
-            ok_arrivals.append(ok_del)
-
-        if state_df is not None:
+        """One collection's document ops through the set-wise writer, with
+        the owner check between the pinned state and the update and
+        delete writers; returns (accepted rows, rejected list). Constant
+        job count regardless of mutation count — and no probe jobs at
+        all: ``kinds`` (from the block-level header collect) says which
+        op kinds this collection has."""
+        if sum(n for _, n in kinds["adds"]):
+            append_adds(rows, path)
+        if "update_document" not in kinds and "delete_document" not in kinds:
+            return rows, []
+        # pinned to the file list after the adds: the U/D appends below
+        # land in the same directory without changing this snapshot
+        state_df = pinned_state(self.store, path).persist()
+        try:
+            rows, rejected = self._atomic_check(rows, state_df)
+            if "update_document" in kinds:
+                append_updates(rows, state_df, path)
+            if "delete_document" in kinds:
+                append_tombstones(rows, path)
+        finally:
             state_df.unpersist()
-
-        # ---- log rows for accepted mutations of this collection
-        ok_all = ok_arrivals[0]
-        for extra in ok_arrivals[1:]:
-            ok_all = ok_all.unionByName(extra)
-        ok_all = ok_all.distinct()
-        doc_ids_map = (
-            add_rows.groupBy("_arrival")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_assigned"))
-            if add_rows is not None
-            else None
-        )
-        log_df = muts.join(ok_all, "_arrival")
-        if doc_ids_map is not None:
-            log_df = log_df.join(doc_ids_map, "_arrival", "left")
-        else:
-            log_df = log_df.withColumn(
-                "_assigned", F.lit(None).cast(T.ArrayType(T.LongType()))
-            )
-        # payload normalized to the sequential _log format ({"docs": ...} /
-        # {"patches": ...} / null) so apply_mutation replays either shape.
-        log_payload = (
-            F.when(
-                F.col("_action") == "add_document",
-                F.to_json(F.struct(F.col("_docs").alias("docs"))),
-            )
-            .when(
-                F.col("_action") == "update_document",
-                F.to_json(F.struct(F.col("_patches").alias("patches"))),
-            )
-            .otherwise(F.lit(None).cast("string"))
-        )
-        log_df = log_df.select(
-            F.col("_mid").alias("id"), "sender", "nonce",
-            F.col("_action").alias("action"),
-            F.lit(db).alias("db_addr"), F.lit(col).alias("col_name"),
-            log_payload.alias("payload"),
-            F.to_json(F.coalesce(F.col("_assigned"), F.col("_ids"))).alias("doc_ids"),
-            F.lit(block).cast("long").alias("block"),
-            F.col("_arrival").cast("int").alias("order"),
-        )
-        # no materialization here: the block-level log append executes this
-        # plan while add_rows_all (doc_ids_map's source) is still persisted;
-        # apply() releases that cache after the append
-        return log_df, rejected
+        return rows, rejected

@@ -16,9 +16,12 @@ of RocksDB+EJDB2 single-node storage:
 
 Sequencing (block/order counters, doc-id high-water marks, nonces) lives in
 ``StateStore`` — the single-sequencer role of the reference's rollup node.
-Replicas rebuild identical state by replaying the mutation log through
-``apply_mutation`` with the recorded ``doc_ids_map``
-(mutation_utils.rs:138-179; indexer_impl.rs:259-324).
+Two writers put document rows here: the driver-row methods below (one
+online mutation at a time) and the set-wise writer of store/batch_apply.py
+(blocks, log replay, rollup and wire import). Replicas rebuild identical
+state by replaying the mutation log set-wise (store/replay.py) with the
+recorded ``doc_ids_map`` (mutation_utils.rs:138-179;
+indexer_impl.rs:259-324); ``apply_mutation`` replays its control actions.
 """
 
 from __future__ import annotations
@@ -707,13 +710,13 @@ class DocStore:
     def add_docs(
         self, db_addr: str, col: str, docs: list[str], sender: str,
         nonce: int | None = None, doc_ids: list[int] | None = None,
-        seq: tuple[int, int] | None = None, mid: str | None = None,
+        mid: str | None = None,
     ) -> list[int]:
         """M2 AddDocument — sequential ids, ownership rows, append.
 
-        ``doc_ids`` is the replay form: an indexer re-applying a logged
-        mutation passes the origin's doc_ids_map so replica ids match exactly
-        (db_store_v2.rs:1347-1385; mutation_utils.rs:138-179).
+        ``doc_ids`` seeds a store with documents at known ids instead of
+        the counter's next ones (db_store_v2.rs:1347-1385); the counter
+        moves past them.
         """
         self._require_col(db_addr, col)
         if nonce is not None:
@@ -726,8 +729,8 @@ class DocStore:
             if len(doc_ids) != len(docs):
                 raise InvalidMutation("doc_ids length mismatch")
             ids = list(doc_ids)
-            self.state.observe_doc_ids(db_addr, ids)
-        block, order = self._seq(seq)
+            self.state.advance_doc_counters({db_addr: max(ids, default=0)})
+        block, order = self.state.next_order()
         rows = [
             {
                 "doc_id": i, "owner": sender, "doc": d, "op": "A",
@@ -779,8 +782,7 @@ class DocStore:
 
     def update_docs(
         self, db_addr: str, col: str, ids: list[int], patches: list[str],
-        sender: str, nonce: int | None = None,
-        seq: tuple[int, int] | None = None, mid: str | None = None,
+        sender: str, nonce: int | None = None, mid: str | None = None,
     ) -> None:
         """M3 UpdateDocument — merge-patch against current state, append new
         full versions (ids and patches must align: db_store_v2.rs:1386-1425).
@@ -798,7 +800,7 @@ class DocStore:
             self.state.incr_nonce(sender, nonce)
         stored = self._owned_docs(db_addr, col, ids, sender)
         merged = [_merged_doc(stored[i], p) for i, p in zip(ids, patches)]
-        block, order = self._seq(seq)
+        block, order = self.state.next_order()
         rows = [
             {
                 "doc_id": i, "owner": sender, "doc": d, "op": "U",
@@ -812,15 +814,14 @@ class DocStore:
 
     def delete_docs(
         self, db_addr: str, col: str, ids: list[int], sender: str,
-        nonce: int | None = None,
-        seq: tuple[int, int] | None = None, mid: str | None = None,
+        nonce: int | None = None, mid: str | None = None,
     ) -> None:
         """M4 DeleteDocument — owner-only tombstones (db_store_v2.rs:1426-1447)."""
         self._require_col(db_addr, col)
         if nonce is not None:
             self.state.incr_nonce(sender, nonce)
         self._owned_docs(db_addr, col, ids, sender)
-        block, order = self._seq(seq)
+        block, order = self.state.next_order()
         rows = [
             {
                 "doc_id": i, "owner": sender, "doc": None, "op": "D",
@@ -1271,15 +1272,14 @@ class DocStore:
         )
 
     def apply_mutation(self, row: dict) -> None:
-        """Re-apply one logged mutation (indexer_impl.rs:259-324).
-
-        Deterministic: doc ids come from the logged doc_ids list, never from
-        this replica's counter, and the replica re-logs the origin's mutation
-        id so GetMutationHeader lookups agree across replicas.
+        """Re-apply one logged control mutation (indexer_impl.rs:259-324):
+        a database create, add_collection or add_index, at the origin's
+        (block, order) and re-logged under the origin's mutation id so
+        GetMutationHeader lookups agree across replicas. Document
+        mutations replay set-wise (store/replay.py).
         """
         action = row["action"]
         payload = json.loads(row["payload"]) if row.get("payload") else {}
-        doc_ids = json.loads(row["doc_ids"]) if row.get("doc_ids") else None
         seq = (row["block"], row["order"])
         mid = row.get("id")
         if action.startswith("create_") and action.endswith("_db"):
@@ -1315,23 +1315,8 @@ class DocStore:
                     row["db_addr"], row["col_name"], fresh, row["sender"],
                     seq=seq, mid=mid,
                 )
-        elif action == "add_document":
-            self.add_docs(
-                row["db_addr"], row["col_name"], payload["docs"], row["sender"],
-                nonce=row["nonce"] or None, doc_ids=doc_ids, seq=seq, mid=mid,
-            )
-        elif action == "update_document":
-            self.update_docs(
-                row["db_addr"], row["col_name"], doc_ids, payload["patches"],
-                row["sender"], nonce=row["nonce"] or None, seq=seq, mid=mid,
-            )
-        elif action == "delete_document":
-            self.delete_docs(
-                row["db_addr"], row["col_name"], doc_ids, row["sender"],
-                nonce=row["nonce"] or None, seq=seq, mid=mid,
-            )
         else:
-            raise InvalidMutation(f"unknown action {action}")
+            raise InvalidMutation(f"not a control action: {action}")
 
     def replay_from(self, other: "DocStore", block_start: int = 0) -> None:
         """S13 cold-start catch-up from the origin's log

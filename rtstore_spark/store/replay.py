@@ -2,35 +2,30 @@
 
 The reference's indexer re-applies logged mutations one at a time
 (indexer_impl.rs:259-324), which is fine on a single RocksDB node but
-O(N) work here: each ``apply_mutation`` call writes its own doc and log
-objects from the driver (no Spark job for an add, two small parquet files),
-and each update or delete first runs a one-job Spark point read for its
-owner check, so catching a replica up on an N-mutation log costs O(N) small
-files and up to O(N) Spark jobs while the cluster idles. This module
-applies a whole micro-batch of ORIGIN LOG ROWS set-wise, so the Spark job
-count is O(collections touched + control ops) — independent of the
-mutation count:
+O(N) Spark jobs and small files here. This module applies a whole
+micro-batch of ORIGIN LOG ROWS set-wise, so the Spark job count is
+O(collections touched + control ops) — independent of the mutation count:
 
 1. control ops (create_*_db / add_collection / add_index) are rare; they are
    collected and applied driver-side in (block, order) order through
-   ``DocStore.apply_mutation`` — unchanged semantics (idempotence, event-db
-   table fan-out, nonce consumption), and they re-log themselves.
-2. document ops replay per touched collection with a CONSTANT number of
-   jobs, reusing the block applier's machinery (store/batch_apply.py):
-   - adds: one exploded (doc_ids ∥ docs) append — ids come from the logged
-     doc_ids_map (mutation_utils.rs:138-179), never this replica's counter,
-     so replica ids match the origin exactly;
+   ``DocStore.apply_mutation`` — idempotence, event-db table fan-out and
+   nonce consumption as on the origin, and they re-log themselves.
+2. document ops replay per touched collection through the block applier's
+   set-wise writer (store/batch_apply.py), the same code a block runs:
+   - adds: the logged doc_ids_map (mutation_utils.rs:138-179) is the ids
+     column, never this replica's counter, so replica ids match the
+     origin exactly;
    - updates: per-doc patch chains fold in (block, order) order into ONE
-     equivalent RFC-7386 patch (``make_fold_patches``), merged against the
-     pinned pre-update state (pre-batch files ∪ this batch's adds) and
-     appended as one U version at the chain's last (block, order);
-   - deletes: one exploded tombstone append.
-   Folding is equivalence-preserving for a valid origin log: per doc the
-   logged lifecycle is A? U* D? in (block, order) order (the origin rejected
-   anything else before logging), so the merge-on-read window over the
-   replayed rows yields byte-identical ``current_state`` — with the
-   intermediate U versions collapsed, i.e. the replica lands in the state a
-   sequential replay plus ``compact()`` would reach.
+     equivalent RFC-7386 patch, merged against the pinned state after
+     this batch's adds and appended as one U version at the chain's last
+     (block, order);
+   - deletes: one tombstone append.
+   No owner check runs: the origin validated every logged row. Folding is
+   equivalence-preserving for a valid origin log: per doc the logged
+   lifecycle is A? U* D? in (block, order) order, so the merge-on-read
+   window over the replayed rows yields byte-identical ``current_state`` —
+   with the intermediate U versions collapsed, i.e. the replica lands in
+   the state a sequential replay plus ``compact()`` would reach.
 3. the origin's doc-op log rows are appended VERBATIM to the replica's log
    (one distributed write): identical mutation ids, payloads, doc_ids_map,
    (block, order) — GetMutationHeader agrees across replicas by
@@ -52,16 +47,13 @@ from pyspark.sql import DataFrame, functions as F
 from rtstore_spark.errors import CollectionNotFound
 from rtstore_spark.store.batch_apply import (
     _DOC_ACTIONS,
-    _with_doc_bucket,
-    make_fold_patches,
+    append_adds,
+    append_log,
+    append_tombstones,
+    append_updates,
     pinned_state,
 )
-from rtstore_spark.functions.merge_patch import make_json_merge_patch
-from rtstore_spark.store.docstore import (
-    DOC_SCHEMA,
-    LOG_BLOCKS_PER_BUCKET,
-    LOG_SCHEMA,
-)
+from rtstore_spark.store.docstore import LOG_SCHEMA
 
 _PAYLOAD = "docs array<string>, patches array<string>"
 
@@ -74,104 +66,18 @@ REPLAY_MAX_PARALLEL_COLLECTIONS = 8
 def _replay_collection(
     replica, db: str, col: str, actions: set, doc: DataFrame
 ) -> None:
-    """One collection's document ops from a replayed batch — adds, folded
-    updates, deletes, in that order (the pinned state for updates must see
-    this batch's adds). Runs on a pool thread; everything it touches is
-    collection-local (the data directory, the append counter note)."""
-    # UDF wrappers are created per call: pandas-UDF objects are cheap, and
-    # per-thread instances avoid sharing one lazily-registered function
-    # across concurrently-built plans
-    fold = make_fold_patches()
-    merge = make_json_merge_patch()
-    muts = doc.filter(
-        (F.col("db_addr") == db) & (F.col("col_name") == col)
-    )
+    """One collection's document ops from a replayed batch — adds, then
+    updates against the state pinned after them, then tombstones. Runs
+    on a pool thread; everything it touches is collection-local (the
+    data directory)."""
+    rows = doc.filter((F.col("db_addr") == db) & (F.col("col_name") == col))
     path = replica._data_path(db, col)
-
-    # ---- adds first: logged ids ∥ docs, one exploded append.
-    # repartition on doc_bucket keeps the write parallel across
-    # buckets while still producing one file per bucket.
     if "add_document" in actions:
-        add_rows = (
-            muts.filter(F.col("action") == "add_document")
-            .select(
-                F.col("sender").alias("owner"), "block", "order",
-                F.explode(
-                    F.arrays_zip(F.col("_log_ids"), F.col("_p.docs"))
-                ).alias("_z"),
-            )
-            .select(
-                F.col("_z._log_ids").alias("doc_id"), "owner",
-                F.col("_z.docs").alias("doc"),
-                F.lit("A").alias("op"), "block", "order",
-            )
-        )
-        _with_doc_bucket(
-            add_rows.select([f.name for f in DOC_SCHEMA.fields])
-        ).repartition(F.col("doc_bucket")).write.mode(
-            "append"
-        ).partitionBy("doc_bucket").parquet(path)
-
-    # state for the update merge: pinned AFTER the adds append, so
-    # the frozen file list covers pre-batch files ∪ this batch's
-    # adds — and, files being immutable, stays valid while the U/D
-    # appends below land in the same directory
+        append_adds(rows, path)
     if "update_document" in actions:
-        state_df = pinned_state(replica, path)
-        upd = (
-            muts.filter(F.col("action") == "update_document")
-            .select(
-                "block", "order",
-                F.explode(
-                    F.arrays_zip(F.col("_log_ids"), F.col("_p.patches"))
-                ).alias("_z"),
-            )
-            .select(
-                F.col("_z._log_ids").alias("doc_id"),
-                "block", "order", F.col("_z.patches").alias("patch"),
-            )
-        )
-        folded = (
-            upd.groupBy("doc_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("block", "order", "patch"))
-                ).alias("_chain"),
-                F.max(F.struct("block", "order")).alias("_last"),
-            )
-            .select(
-                "doc_id", fold(F.col("_chain")).alias("_patch"),
-                F.col("_last.block").alias("block"),
-                F.col("_last.order").alias("order"),
-            )
-        )
-        merged = state_df.select("doc_id", "owner", "doc").join(
-            folded, "doc_id"
-        ).select(
-            "doc_id", "owner",
-            merge(F.col("doc"), F.col("_patch")).alias("doc"),
-            F.lit("U").alias("op"), "block", "order",
-        )
-        _with_doc_bucket(merged).repartition(
-            F.col("doc_bucket")
-        ).write.mode("append").partitionBy("doc_bucket").parquet(path)
-
+        append_updates(rows, pinned_state(replica, path), path)
     if "delete_document" in actions:
-        del_rows = (
-            muts.filter(F.col("action") == "delete_document")
-            .select(
-                F.col("sender").alias("owner"), "block", "order",
-                F.explode("_log_ids").alias("doc_id"),
-            )
-            .select(
-                "doc_id", "owner",
-                F.lit(None).cast("string").alias("doc"),
-                F.lit("D").alias("op"), "block", "order",
-            )
-        )
-        _with_doc_bucket(del_rows).repartition(
-            F.col("doc_bucket")
-        ).write.mode("append").partitionBy("doc_bucket").parquet(path)
+        append_tombstones(rows, path)
 
 
 def replay_log_batch(replica, batch_df: DataFrame) -> int:
@@ -183,7 +89,6 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
     a row re-appends an identical version at the same (block, order), which
     the merge-on-read window collapses.
     """
-    spark = replica.spark
     batch = batch_df.select([f.name for f in LOG_SCHEMA.fields])
 
     # -- 1. control plane: rare ops, driver-side, in (block, order) order.
@@ -202,7 +107,11 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
     doc = (
         batch.filter(F.col("action").isin(*_DOC_ACTIONS))
         .withColumn("_p", F.from_json("payload", _PAYLOAD))
-        .withColumn("_log_ids", F.from_json("doc_ids", "array<bigint>"))
+        .select(
+            "*", F.col("sender").alias("owner"),
+            F.from_json("doc_ids", "array<bigint>").alias("ids"),
+            F.col("_p.docs").alias("docs"), F.col("_p.patches").alias("patches"),
+        )
         .persist()
     )
     try:
@@ -273,11 +182,7 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
         snapshot = _converge_aggregates(batch, doc, has_doc_ops=True)
 
         # -- 3b. the log: origin rows verbatim, one distributed append
-        doc.select([f.name for f in LOG_SCHEMA.fields]).withColumn(
-            "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-        ).repartition(F.col("block_bucket")).write.mode("append").partitionBy(
-            "block_bucket"
-        ).parquet(replica._log_path())
+        append_log(replica, doc)
 
         # -- 4. sequencer convergence (fold AFTER the append so a crash
         # between 3b and 4 leaves watermarks behind the log, never ahead
@@ -299,7 +204,7 @@ def _converge_aggregates(batch: DataFrame, doc: DataFrame, has_doc_ops: bool):
         agg = doc.groupBy("sender").agg(F.max("nonce").alias("_n")).collect()
         id_max = (
             doc.filter(F.col("action") == "add_document")
-            .select("db_addr", F.array_max("_log_ids").alias("_m"))
+            .select("db_addr", F.array_max("ids").alias("_m"))
             .groupBy("db_addr")
             .agg(F.max("_m").alias("_m"))
             .collect()
@@ -313,18 +218,10 @@ def _converge_fold(replica, snapshot) -> None:
     agg, id_max, top = snapshot
     state = replica.state
     with state.lock:
-        for r in agg:
-            if r["_n"] and r["_n"] > state._state["nonces"].get(r["sender"], 0):
-                state._state["nonces"][r["sender"]] = int(r["_n"])
-        for r in id_max:
-            if r["_m"] is not None:
-                cur = state._state["doc_counters"].get(r["db_addr"], 0)
-                state._state["doc_counters"][r["db_addr"]] = max(cur, int(r["_m"]))
-        if top is not None and (top["block"], top["order"]) >= (state.block, state.order):
-            state._state["block"], state._state["order"] = (
-                int(top["block"]), int(top["order"]),
-            )
-        state._flush()
+        state.advance_nonces({r["sender"]: r["_n"] for r in agg})
+        state.advance_doc_counters({r["db_addr"]: r["_m"] for r in id_max})
+        if top is not None:
+            state.observe_seq(int(top["block"]), int(top["order"]))
 
 
 def _converge_state(replica, batch: DataFrame, doc: DataFrame, has_doc_ops: bool):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import string
 import threading
 
 from rtstore_spark.errors import BadNonce
@@ -26,18 +27,17 @@ def normalize_addr(sender: str) -> str:
     EIP-55 checksummed addresses are the SAME account as their lowercase
     form — a stock SDK signs with a mixed-case address while signature
     recovery yields lowercase, so every nonce/owner lookup must agree on
-    one spelling. 0x-hex strings fold to lowercase; anything else (tests
-    use human-readable ids) passes through untouched.
+    one spelling. 0x followed by exactly 40 hex digits folds to lowercase;
+    anything else (tests use human-readable ids) passes through untouched.
+    The block applier's ``batch_apply._normalized_addr`` is the same rule
+    as a Spark expression.
     """
     if (
         isinstance(sender, str)
         and sender.startswith(("0x", "0X"))
         and len(sender) == 42
+        and all(c in string.hexdigits for c in sender[2:])
     ):
-        try:
-            bytes.fromhex(sender[2:])
-        except ValueError:
-            return sender
         return "0x" + sender[2:].lower()
     return sender
 
@@ -127,16 +127,42 @@ class StateStore:
             self._flush()
             return cur + 1
 
-    def observe_doc_ids(self, db_addr: str, ids: list[int]) -> None:
-        """Replay path: advance the counter past explicitly-supplied ids."""
-        if not ids:
-            return
+    def doc_counter(self, db_addr: str) -> int:
+        """Highest doc id assigned in a database (0 = none yet)."""
         with self.lock:
-            cur = self._state["doc_counters"].get(db_addr, 0)
-            self._state["doc_counters"][db_addr] = max(cur, max(ids))
-            self._flush()
+            return self._state["doc_counters"].get(db_addr, 0)
+
+    def advance_doc_counters(self, maxima: dict[str, int]) -> None:
+        """Raise each database's counter to at least the given doc id
+        (ids assigned elsewhere: a replayed log, an import); at most one
+        flush."""
+        self._advance("doc_counters", maxima.items())
 
     # -- nonce replay guard: state_store.rs:171+, 'bad nonce' --
+
+    def nonces(self) -> dict[str, int]:
+        """A copy of every account's last consumed nonce."""
+        with self.lock:
+            return dict(self._state["nonces"])
+
+    def advance_nonces(self, maxima: dict[str, int]) -> None:
+        """Raise each account's last consumed nonce to at least the given
+        value (nonces consumed set-wise by a block or a replay); at most
+        one flush."""
+        self._advance(
+            "nonces", ((normalize_addr(k), v) for k, v in maxima.items())
+        )
+
+    def _advance(self, table: str, items) -> None:
+        with self.lock:
+            cur = self._state[table]
+            raised = False
+            for key, value in items:
+                if value is not None and int(value) > cur.get(key, 0):
+                    cur[key] = int(value)
+                    raised = True
+            if raised:
+                self._flush()
 
     def incr_nonce(self, sender: str, nonce: int) -> None:
         sender = normalize_addr(sender)

@@ -185,7 +185,7 @@ class TestDocumentCRUD:
         spark.createDataFrame(legacy, schema=DOC_SCHEMA).coalesce(
             1
         ).write.mode("append").parquet(store._data_path(db, "c"))
-        store.state.observe_doc_ids(db, [7])
+        store.state.advance_doc_counters({db: 7})
         # bucketed append via the current writer
         (new_id,) = store.add_docs(db, "c", ['{"v": "new"}'], ALICE)
 
@@ -356,6 +356,96 @@ class TestReplay:
         # doc-id counters line up for future writes
         assert replica.state.take_doc_ids(db, 1) == origin.state.take_doc_ids(db, 1)
 
+    def test_block_apply_and_log_replay_pinned(self, spark, tmp_path):
+        """One mixed block through BatchApplier, a later block updating
+        the same document again, then a set-wise replay of the origin log
+        into a replica: both stores hold exactly the pinned documents and
+        log rows, and only the owner-mismatch update is rejected."""
+        from rtstore_spark.store.batch_apply import BatchApplier
+        from rtstore_spark.store.ingest import Ingest, digest_signature
+        from rtstore_spark.streaming.ingest_stream import ENVELOPE_SCHEMA
+
+        origin = DocStore(spark, str(tmp_path / "o_pin"))
+        ing = Ingest(origin)
+
+        def env(payload, sender, nonce):
+            body = json.dumps(payload, sort_keys=True)
+            return {"payload": body, "sender": sender, "nonce": nonce,
+                    "signature": digest_signature(body, nonce, sender)}
+
+        def send(payload, sender, nonce):
+            e = env(payload, sender, nonce)
+            return ing.send_mutation(payload, e["signature"], sender, nonce)
+
+        db = send({"action": "create_database", "body": {"desc": "d"}},
+                  ALICE, 1)["items"][0]["value"]
+        send({"action": "add_collection", "db_addr": db, "col_name": "c",
+              "body": {}}, ALICE, 2)
+
+        def doc_op(action, sender, nonce, **body):
+            return env({"action": action, "db_addr": db, "col_name": "c",
+                        "body": body}, sender, nonce)
+
+        def apply_block(name, envs):
+            f = tmp_path / f"{name}.jsonl"
+            f.write_text("\n".join(json.dumps(e) for e in envs))
+            batch = spark.read.schema(ENVELOPE_SCHEMA).json(str(f))
+            return [reason for _, reason in BatchApplier(ing).apply(batch)]
+
+        rejects = apply_block("b1", [
+            doc_op("add_document", ALICE, 3,
+                   docs=['{"k": 1}', '{"k": 2}', '{"k": 3}']),
+            doc_op("add_document", BOB, 1, docs=['{"k": 4}']),
+            doc_op("update_document", ALICE, 4, ids=[1], patches=['{"a": 1}']),
+            doc_op("update_document", ALICE, 5, ids=[1],
+                   patches=['{"b": {"c": 2}}']),
+            doc_op("delete_document", ALICE, 6, ids=[2]),
+            doc_op("update_document", BOB, 2, ids=[3], patches=['{"x": 1}']),
+        ])
+        rejects += apply_block("b2", [
+            doc_op("update_document", ALICE, 7, ids=[1],
+                   patches=['{"a": null, "b": {"d": 3}}']),
+        ])
+        replica = DocStore(spark, str(tmp_path / "r_pin"))
+        replica.replay_from(origin)
+
+        def docs(s):
+            return sorted(
+                (r["doc_id"], r["owner"], r["doc"])
+                for r in s.current_state(db, "c").collect()
+            )
+
+        def log(s):
+            return sorted(
+                (r["block"], r["order"], r["action"], r["doc_ids"], r["id"][:12])
+                for r in s.mutation_log().collect()
+            )
+
+        a, b = ALICE, BOB
+        assert rejects == ["owner mismatch"]
+        want_docs = [
+            (1, a, '{"b":{"c":2,"d":3},"k":1}'),
+            (3, a, '{"k": 3}'),
+            (4, b, '{"k": 4}'),
+        ]
+        want_log = [
+            (0, 1, "create_doc_db", None, "3249ab243bfa"),
+            (0, 2, "add_collection", None, "8cbd88a432ab"),
+            (1, 1, "add_document", "[1,2,3]", "85b1deac3d61"),
+            (1, 2, "add_document", "[4]", "a8743fcd1d9d"),
+            (1, 3, "update_document", "[1]", "d0048c5bb9f8"),
+            (1, 4, "update_document", "[1]", "39b81f67f245"),
+            (1, 5, "delete_document", "[2]", "c2fb2c64282a"),
+            (2, 1, "update_document", "[1]", "90d056da77f6"),
+        ]
+        # the rejected update consumed BOB's nonce 2 on the origin; it is
+        # not in the log, so the replica's sequencer stops at nonce 1
+        for s, bob_nonce in ((origin, 2), (replica, 1)):
+            assert docs(s) == want_docs
+            assert log(s) == want_log
+            assert (s.state.nonce_of(a), s.state.nonce_of(b)) == (7, bob_nonce)
+            assert s.state.take_doc_ids(db, 1) == [5]
+
     def test_range_scan_partition_pruning(self, spark, tmp_path):
         """Block-range scans must prune log partition directories."""
         s = DocStore(spark, str(tmp_path / "pp"))
@@ -445,17 +535,17 @@ class TestUpdateMergePin:
         ids = store.add_docs(
             db, col, [b for _, b, _, _ in MERGE_CASES] + [DUP_BASE], ALICE
         )
+        block = store.state.next_block()
         store.update_docs(db, col, ids[:-1], [p for _, _, p, _ in MERGE_CASES],
-                          ALICE, seq=(7, 1))
-        store.update_docs(db, col, [ids[-1]] * 2, DUP_PATCHES, ALICE,
-                          seq=(7, 2))
+                          ALICE)  # (block, 1)
+        store.update_docs(db, col, [ids[-1]] * 2, DUP_PATCHES, ALICE)
         written = sorted(
             (r["doc_id"], r["order"], r["doc"], r["owner"], r["block"])
             for r in store._read_docs(store._data_path(db, col))
             .filter("op = 'U'").collect()
         )
-        want = [(i, 1, t, ALICE, 7) for i, (*_, t) in zip(ids, MERGE_CASES)]
-        want += sorted((ids[-1], 2, t, ALICE, 7) for t in DUP_TEXTS)
+        want = [(i, 1, t, ALICE, block) for i, (*_, t) in zip(ids, MERGE_CASES)]
+        want += sorted((ids[-1], 2, t, ALICE, block) for t in DUP_TEXTS)
         assert written == want
 
 
@@ -656,8 +746,8 @@ class TestDriverRowFrames:
         db = store.create_database(ALICE, nonce=1, desc="d", seq=(1, 1))
         idx = [{"path": "/a", "type": "string"}]
         store.create_collection(db, "c", idx, ALICE, seq=(1, 2))
-        store.add_docs(db, "c", ['{"x": "é"}'], ALICE, doc_ids=[7], seq=(1, 3))
-        store.delete_docs(db, "c", [7], ALICE, seq=(1, 4))
+        store.add_docs(db, "c", ['{"x": "é"}'], ALICE, doc_ids=[7])  # (1, 3)
+        store.delete_docs(db, "c", [7], ALICE)  # (1, 4)
         store.archive_wire_envelope("m1", b"\x00\xff", "0xsig", 1, 5)
         assert db == derive_db_addr(ALICE, 1)
 

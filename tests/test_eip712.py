@@ -201,6 +201,66 @@ class TestEndToEnd:
         assert len(si.rejected) == 1
         assert "recovers another address" in si.rejected[0][1]
 
+    def test_batch_rejects_mixed_case_sender_replay(self, spark, tmp_path):
+        """A signed envelope already applied through SendMutation, staged
+        again with a mixed-case spelling of its sender, is the same
+        account's old nonce: the block applier rejects it as a bad nonce
+        and the document is stored once."""
+        from rtstore_spark.store.batch_apply import BatchApplier
+        from rtstore_spark.store.docstore import DocStore
+        from rtstore_spark.store.ingest import Ingest
+        from rtstore_spark.streaming.ingest_stream import ENVELOPE_SCHEMA
+
+        store = DocStore(spark, str(tmp_path / "w"))
+        ingest = Ingest(store, sig_mode="eip712")
+
+        def signed(payload: dict, nonce: int) -> dict:
+            text = json.dumps(payload, sort_keys=True)
+            sig = "0x" + sign(mutation_signing_hash(text, nonce), PRIV).hex()
+            return {"payload": text, "signature": sig, "sender": ADDR,
+                    "nonce": nonce}
+
+        def send(payload: dict, nonce: int):
+            e = signed(payload, nonce)
+            return ingest.send_mutation(payload, e["signature"], ADDR, nonce)
+
+        resp = send({"action": "create_database", "body": {"desc": "d"}}, 1)
+        db = next(i["value"] for i in resp["items"] if i["key"] == "db_addr")
+        send({"action": "add_collection", "db_addr": db, "col_name": "c",
+              "body": {"indexes": []}}, 2)
+        add = {"action": "add_document", "db_addr": db, "col_name": "c",
+               "body": {"docs": ['{"k": 1}']}}
+        send(add, 3)
+
+        replay = dict(signed(add, 3), sender="0x" + ADDR[2:].upper())
+        f = tmp_path / "replay.jsonl"
+        f.write_text(json.dumps(replay))
+        rejected = BatchApplier(ingest).apply(
+            spark.read.schema(ENVELOPE_SCHEMA).json(str(f))
+        )
+        assert [reason.split(":")[0] for _, reason in rejected] == [
+            f"bad nonce for {ADDR}"
+        ]
+        assert store.current_state(db, "c").count() == 1
+        assert store.state.nonce_of(ADDR) == 3
+
+    def test_block_owner_key_matches_state_normalization(self, spark):
+        """The block applier's Spark-side owner key spells every account
+        the way ``state.normalize_addr`` keys its nonces."""
+        from rtstore_spark.store.batch_apply import _normalized_addr
+        from rtstore_spark.store.state import normalize_addr
+
+        hexpart = ADDR[2:]
+        cases = [
+            ADDR, "0x" + hexpart.upper(), "0X" + hexpart.upper(),
+            ADDR + "\n", ADDR[:-1], "0x" + "g" * 40, "alice",
+            "0x" + hexpart[:20] + " " + hexpart[21:],
+            "0x" + "٣" * 40,  # non-ASCII digits are not hex
+        ]
+        df = spark.createDataFrame([(c,) for c in cases], "s string")
+        got = [r[0] for r in df.select(_normalized_addr(df["s"])).collect()]
+        assert got == [normalize_addr(c) for c in cases]
+
     def test_ingest_eip712_mode(self, spark, tmp_path):
         """Full SendMutation with a real EIP-712 signature."""
         from rtstore_spark.store.docstore import DocStore

@@ -960,10 +960,9 @@ class TestUriRootIndex:
 
 class TestRebuildClearsIncrements:
     def test_in_place_rebuild_retires_stale_increments(
-        self, spark, emb, model
+        self, spark, emb, model, tmp_path
     ):
         import os
-        import tempfile
 
         from rtstore_spark.operators.similarity import (
             append_pq_index,
@@ -971,7 +970,7 @@ class TestRebuildClearsIncrements:
             write_pq_index,
         )
 
-        path = tempfile.mkdtemp(prefix="pq_rebuild_")
+        path = str(tmp_path / "pq_rebuild")
         routed = emb.select(
             F.col("vec_id").alias("id"), "embedding",
             F.col("label").alias("route"),

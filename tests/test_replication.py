@@ -253,8 +253,8 @@ class TestSetWiseReplay:
         )
         # sequencer convergence: ids keep flowing from the origin's counter
         assert (
-            replica.state._state["doc_counters"][db]
-            == origin.state._state["doc_counters"][db]
+            replica.state.doc_counter(db)
+            == origin.state.doc_counter(db)
         )
         new_ids = replica.add_docs(db, "c", ['{"v": 99}'], ALICE)
         assert new_ids[0] == max(ids) + 1

@@ -11,8 +11,10 @@ Prints one JSON line.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -32,6 +34,7 @@ def main() -> int:
 
     spark = get_spark("bench_ingest")
     root = tempfile.mkdtemp(prefix="bench_ingest_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     store = DocStore(spark, os.path.join(root, "w"))
     ingest = Ingest(store)
     sender = "0x" + "ab" * 20
