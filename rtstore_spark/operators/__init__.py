@@ -7,22 +7,26 @@ Generic DataFrame transforms (no testdata coupling):
                    paragraph-granular exact dedup with reconstruction
 - ``similarity`` — brute-force cosine top-k, hyperplane-LSH + IVF ANN,
                    product quantization (PQ/IVF-PQ: sampled codebook fit,
-                   Arrow-batched encode, LUT-based compressed scoring),
+                   Arrow-batched encode, one-job batch ADC search over a
+                   query table),
                    learned k-means routing, distributed PCA
                    (moments-merge fit, codegen transform),
                    reciprocal-rank fusion of ranked lists,
                    banded-LSH approximate kNN self-join (graph builder)
 - ``text``       — unicode/whitespace normalization, language/script ID,
-                   quality features + trainable quality classifier,
-                   Gopher rule gate, token counts, PII metrics/scrub,
-                   intra- and cross-doc repetition, chunking, BM25 top-k,
-                   tf-idf keywords, hashed-TF-IDF content clustering,
+                   quality features, Gopher rule gate, token counts,
+                   PII metrics/scrub, intra- and cross-doc repetition,
+                   chunking, tf-idf keywords, hashed-TF-IDF content clustering,
                    blocklist term filtering (C4-style)
 - ``retrieval``  — persisted BM25 inverted index (bucket-partitioned
                    postings, generation-pointer rebuilds, increment-append
                    incremental + streaming maintenance) + one-job batch
                    search with two-phase top-k and static bucket
-                   pruning (decontamination-search shape)
+                   pruning (decontamination-search shape); the one BM25
+                   scorer, with an index-free front (``bm25_batch_topk``)
+- ``quality_classifier`` — trainable fastText-style quality classifier
+                   (Spark ML tokenize → n-gram TF-IDF → logistic
+                   regression) with threshold and Pareto keep policies
 - ``multimodal`` — binary media columns: schema, batching, stubbed decode
 - ``sampling``   — deterministic stratified sampling, token-budget
                    domain-mixture sampling + per-domain mixture stats,

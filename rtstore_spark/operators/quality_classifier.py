@@ -90,8 +90,9 @@ def quality_fit(
     return model
 
 
-def drop_training_summary(model: PipelineModel, spark) -> None:
-    """Strip training summaries from a fitted pipeline's stages.
+def drop_training_summary(model, spark) -> None:
+    """Strip training summaries from a fitted model: a ``PipelineModel``'s
+    stages, or one bare model (``KMeansModel``, ...).
 
     A summary pins the TRAINING SparkSession inside the model, and the
     prediction UDF serializes the model per task — "Task not
@@ -100,7 +101,7 @@ def drop_training_summary(model: PipelineModel, spark) -> None:
     process). Summaries are training-time metadata scoring never needs;
     save/load drops them too. Best-effort across Spark versions."""
     empty = spark._jvm.scala.Option.empty()
-    for stage in getattr(model, "stages", []):
+    for stage in getattr(model, "stages", [model]):
         try:
             if getattr(stage, "hasSummary", False):
                 stage._java_obj.setSummary(empty)

@@ -1,12 +1,13 @@
 """Lexical retrieval at corpus scale: a persisted BM25 inverted index.
 
-``text.bm25_topk`` answers ONE query with one pass over the corpus —
-right for ad-hoc search, wrong for the batch shapes a training-data
-pipeline actually runs (decontamination search: thousands of benchmark
-queries against a 100-TB corpus; dedup candidate generation; eval-set
-retrieval). This module is the index-based counterpart, the same
-relationship ``similarity.write_pq_index``/``ivf_pq_search_batch`` have
-to brute-force cosine:
+Every BM25 score in the package comes from ``bm25_search_batch``: a
+query TABLE against postings, the batch shape a training-data pipeline
+actually runs (decontamination search: thousands of benchmark queries
+against a 100-TB corpus; dedup candidate generation; eval-set
+retrieval). One ad-hoc query is a one-row query table. The module has
+the same relationship to a corpus scan that
+``similarity.write_pq_index``/``ivf_pq_search_batch`` have to
+brute-force cosine:
 
 - ``bm25_build``      — one corpus scan → postings (term, id, tf, dl),
   per-term document frequencies, and the global (n_docs, avgdl) stats;
@@ -44,10 +45,9 @@ decontamination queries against 100 TB a join, not 10k scans. The
 optional ``max_df_fraction`` prune drops stopword-grade terms BEFORE
 the postings probe, so their matched sets are never materialized.
 
-Scoring matches ``text.bm25_topk`` exactly (Okapi BM25,
-idf = ln(1 + (N - df + 0.5)/(df + 0.5)), tf saturation with length
-normalization, scores rounded to 6): one query through the batch path
-returns byte-identical (id, score) rows — pinned by test.
+Scoring is Okapi BM25 (idf = ln(1 + (N - df + 0.5)/(df + 0.5)), tf
+saturation with length normalization, scores rounded to 6), pinned by
+literal rows, a hand computation and a DuckDB replay in the tests.
 
 Reference scope note: the reference engine has no lexical retrieval
 (its queries are JQL point/range scans); this operator belongs to the
@@ -368,7 +368,7 @@ def bm25_search_batch(
 ) -> DataFrame:
     """All queries against the index in one job → (qid, id, score),
     top-k per query, ordered (qid, score desc, id). ``round_to`` is the
-    score's decimal rounding (6 matches text.bm25_topk; cross-engine
+    score's decimal rounding (default 6; cross-engine
     oracles should round the RAW sum once at their comparison precision
     — double-rounding through 6 manufactures exact half-way decimals
     that Spark's BigDecimal-on-shortest-repr and an engine rounding the
@@ -561,9 +561,8 @@ def bm25_batch_topk(
     max_df_fraction: float | None = None,
 ) -> DataFrame:
     """Index-free convenience: build the postings and search — ONE corpus
-    tokenize for the WHOLE query batch (vs one per query with
-    ``text.bm25_topk``). Use ``write_bm25_index`` + ``bm25_search_batch``
-    when the corpus outlives the query batch.
+    tokenize for the WHOLE query batch. Use ``write_bm25_index`` +
+    ``bm25_search_batch`` when the corpus outlives the query batch.
 
     The postings are MATERIALIZED to an operator-private temp parquet
     before the search. The search plan consumes the postings twice

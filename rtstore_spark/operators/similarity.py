@@ -291,6 +291,8 @@ def kmeans_routes(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    from rtstore_spark.operators.quality_classifier import drop_training_summary
+
     norm = F.expr(
         f"transform({vec_col}, x -> cast(x as double) /"
         f" greatest(sqrt({dot_expr(vec_col, vec_col)}), 1e-12))"
@@ -302,11 +304,7 @@ def kmeans_routes(
     ).fit(feats)
     # the training summary pins the session inside the serialized model —
     # scoring then breaks on sessions that ever registered an Observation
-    # (see quality_classifier.drop_training_summary)
-    try:
-        model._java_obj.setSummary(df.sparkSession._jvm.scala.Option.empty())
-    except Exception:  # noqa: BLE001 — private API; tolerate changes
-        pass
+    drop_training_summary(model, df.sparkSession)
     routed = model.transform(feats).drop("_feat")
     centers = [list(map(float, c)) for c in model.clusterCenters()]
     return routed, centers
@@ -427,10 +425,11 @@ def rrf_fuse(
     k_rrf: int = 60,
 ) -> DataFrame:
     """Reciprocal-rank fusion of ranked result lists (Cormack et al.
-    2009): the standard way to combine lexical (``text.bm25_topk``) and
-    vector (``brute_force_topk``/``lsh_topk``/``ivf_topk``) retrieval
-    without score calibration — each list contributes 1/(k_rrf + rank)
-    and the sums rank the fused output.
+    2009): the standard way to combine lexical
+    (``retrieval.bm25_batch_topk``) and vector
+    (``brute_force_topk``/``lsh_topk``/``ivf_topk``) retrieval without
+    score calibration — each list contributes 1/(k_rrf + rank) and the
+    sums rank the fused output.
 
     Each input DataFrame is (id, score) shaped — its single non-id
     column orders it descending (ties break on id, so fusion is
@@ -657,11 +656,11 @@ def pq_fit(
     A fitted PQ turns every d-float embedding into ``m`` small ints —
     at m=8, a 64-dim float vector (256 B raw) becomes 8 bytes, a 32×
     compression — and distance evaluation into table lookups
-    (``pq_topk``). That is the standard way a 100-TB embedding corpus
-    becomes scannable: the CODES table fits where the vectors never
-    would, and candidate generation reads codes only; exact re-ranking
-    (``brute_force_topk`` on the survivors) touches raw vectors for a
-    few hundred rows, not the corpus.
+    (``ivf_pq_search_batch``). That is the standard way a 100-TB
+    embedding corpus becomes scannable: the CODES table fits where the
+    vectors never would, and candidate generation reads codes only;
+    exact re-ranking (``brute_force_topk`` on the survivors) touches raw
+    vectors for a few hundred rows, not the corpus.
 
     Training follows the faiss convention: k-means runs on a bounded
     **sample** (``max_train`` rows, deterministic content-hash gate) —
@@ -800,104 +799,6 @@ def _pq_encode_impl(
     return src.mapInPandas(encode, schema=schema)
 
 
-def _adc_lut(model: dict, query_vec: list[float]):
-    """(m, ksub) inner-product lookup table for an L2-normalized query:
-    lut[j][c] = ⟨q_j, codebook_j[c]⟩, so Σ_j lut[j][codes_j] approximates
-    cosine(q, x) for normalized x (asymmetric distance computation — the
-    query stays exact, only the database side is quantized)."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    if q.shape[0] != model["dim"]:
-        raise ValueError(
-            f"query dim {q.shape[0]} != model dim {model['dim']}"
-        )
-    q = q / max(float(np.linalg.norm(q)), 1e-12)
-    dsub = model["dsub"]
-    return [
-        (np.asarray(cb, dtype=np.float64) @ q[j * dsub : (j + 1) * dsub]).tolist()
-        for j, cb in enumerate(model["codebooks"])
-    ]
-
-
-def _adc_score(model: dict, query_vec: list[float], codes_col: str = "codes") -> Column:
-    """JVM-side ADC score Column: the per-subspace LUT is a literal
-    array-of-arrays (m·ksub doubles — a few KB shipped once in the plan),
-    and the score folds codes through element_at lookups inside
-    whole-stage codegen. No Python runs at scoring time."""
-    lut = _adc_lut(model, query_vec)
-    lut_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in row]) for row in lut]
-    )
-    m = model["m"]
-    return F.expr(
-        f"aggregate(zip_with({codes_col}, sequence(0, {m - 1}),"
-        f" (c, j) -> element_at(element_at(_pq_lut, j + 1), c + 1)),"
-        f" 0.0D, (acc, v) -> acc + v)"
-    ), lut_lit
-
-
-def pq_topk(
-    codes: DataFrame,
-    model: dict,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "id",
-    codes_col: str = "codes",
-) -> DataFrame:
-    """ANN top-k over a PQ-codes table by asymmetric distance: one scan
-    of the CODES (m ints per row — the compressed corpus), LUT lookups in
-    whole-stage codegen, TakeOrderedAndProject top-k (per-partition heaps
-    + one merge; no global sort, no shuffle of the corpus). Returns
-    (id, score) — score ≈ cosine for unit-normalized data, exactly
-    Σ_j ⟨q_j, codeword⟩. The standard recipe at 100 TB: pq_topk for
-    candidates (k′ ≈ 10k), then exact re-rank of the k′ survivors
-    against raw vectors.
-    """
-    score, lut_lit = _adc_score(model, query_vec, codes_col)
-    return (
-        codes.withColumn("_pq_lut", lut_lit)
-        .select(F.col(id_col).alias("id"), F.round(score, 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("id"))
-        .limit(k)
-    )
-
-
-def ivf_pq_topk(
-    codes: DataFrame,
-    model: dict,
-    centroids: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "id",
-    codes_col: str = "codes",
-    route_col: str = "route",
-) -> DataFrame:
-    """IVF-PQ: coarse route pruning + compressed-domain scoring — the
-    faiss ``IndexIVFPQ`` layout re-expressed as a DataFrame plan. Ranks
-    routes by centroid cosine (``centroids`` from ``compute_centroids``
-    or ``kmeans_routes``; rows = routes, tiny), broadcast-semi-joins the
-    best ``nprobe`` routes against the codes table — when the codes are
-    parquet-partitioned by route (``write_ivf_index`` layout), that join
-    prunes to nprobe directories — then ADC-scores only the probed
-    fraction. The full index for a 10-billion-vector corpus is the
-    centroid table (k rows) + the codes table (m bytes/vector): both
-    scannable, neither resembling the raw 30-TB vector set.
-    """
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    ranked = (
-        centroids.withColumn("_q", qv)
-        .select(route_col, cosine_expr("centroid", "_q").alias("_rs"))
-        .orderBy(F.col("_rs").desc())
-        .limit(nprobe)
-    )
-    probed = codes.join(
-        F.broadcast(ranked.select(route_col)), route_col
-    )
-    return pq_topk(probed, model, query_vec, k, id_col, codes_col)
-
-
 def ivf_pq_search_batch(
     codes: DataFrame,
     model: dict,
@@ -919,9 +820,9 @@ def ivf_pq_search_batch(
     driver loop of per-query plans.
 
     Returns (query_id, id, score, rank), rank 1..k per query, score ≈
-    cosine (ADC — the query side stays exact). Per query it probes the
-    same routes ``ivf_pq_topk`` would, so results match the one-query
-    operator at equal nprobe.
+    cosine (ADC — the query side stays exact). It is the one ADC scorer:
+    a single query is a one-row query table, and plain PQ over every code
+    is a one-route index (every code row ``route = 0``, one centroid).
 
     Scale shape:
 
@@ -938,10 +839,9 @@ def ivf_pq_search_batch(
       raw vectors ride to candidates once, never through the route
       explode) and computes ADC per batch by deduplicating the batch to
       its unique queries (``np.unique``), building each unique query's
-      ADC lookup table with one einsum — the same tables the
-      single-query path uses — and scoring every candidate row with an
-      O(n·m) fancy gather (no per-row python loop, no O(n·dim)
-      reconstruction);
+      ADC lookup table (lut[j][c] = ⟨q_j, codebook_j[c]⟩) with one
+      einsum, and scoring every candidate row with an O(n·m) fancy
+      gather (no per-row python loop, no O(n·dim) reconstruction);
     - top-k is a per-query window (partitioned by query_id, never
       SinglePartition).
 
@@ -1013,9 +913,8 @@ def ivf_pq_search_batch(
             # CANDIDATE row. Deduplicate to the batch's UNIQUE queries
             # first: the per-row python loop (np.stack over every cell)
             # and the normalization then run u times, not n times, and
-            # scoring goes through a per-query ADC lookup table — the
-            # same tables the single-query path uses — so the gather is
-            # O(n·m) instead of reconstructing x̂ at O(n·dim)
+            # scoring goes through a per-query ADC lookup table, so the
+            # gather is O(n·m) instead of reconstructing x̂ at O(n·dim)
             # (dim = m·dsub, an 8× flop cut at dsub=8). Profiled on the
             # bench shape: the row-loop over duplicated vectors WAS the
             # stage's dominant cost, not the arithmetic.
@@ -1146,8 +1045,8 @@ def write_pq_index(
     stack for a corpus that will be queried many times:
 
     - ``<gen>/codes``      — (id, codes, route) parquet, PARTITIONED BY
-      route, so an ``nprobe``-probe query is a partition-pruned scan of
-      nprobe directories over m-byte codes (at m=8 the whole index for a
+      route, so a route-filtered read is a partition-pruned scan of
+      those directories over m-byte codes (at m=8 the whole index for a
       billion vectors is ~8 GB + ids — a single executor's disk);
     - ``<gen>/_centroids`` — the coarse router (``compute_centroids``);
     - ``<gen>/_model``     — the PQ codebooks (``pq_save``);
@@ -1158,8 +1057,9 @@ def write_pq_index(
 
     One corpus scan total: codes are encoded on the way in (the error
     stat rides the same numpy pass). Readers get everything back with
-    ``read_pq_index`` and query via ``ivf_pq_topk``; exact re-ranking,
-    when wanted, joins survivors back to the raw vectors by id.
+    ``read_pq_index`` and query via ``ivf_pq_search_batch``; exact
+    re-ranking (``rerank_exact_batch``) joins survivors back to the raw
+    vectors by id.
 
     A full rebuild behind the root ``_current`` pointer flip
     (``store.increments.rebuild``): a crash before the flip leaves the
@@ -1242,11 +1142,12 @@ def resolve_index_base(spark, path: str) -> str:
 
 def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """(codes partitioned by route, centroids, model) from
-    ``write_pq_index`` — pass straight to ``ivf_pq_topk``. Codes are the
-    union of the live base generation and every COMMITTED
+    ``write_pq_index`` — pass straight to ``ivf_pq_search_batch``. Codes
+    are the union of the live base generation and every COMMITTED
     ``append_pq_index`` increment of THAT generation; each union arm is
-    its own route-partitioned parquet read, so nprobe pruning still
-    skips directories in every arm."""
+    its own route-partitioned parquet read, so a route filter skips
+    directories in every arm. ``ivf_pq_search_batch`` does not yet
+    prune the codes scan to its probed routes (ROADMAP)."""
     from rtstore_spark.store import increments
     from rtstore_spark.store.fs import fs_for
 

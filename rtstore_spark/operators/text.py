@@ -56,15 +56,15 @@ def gopher_rules(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The Gopher corpus-quality rule set (Rae et al. 2021, appendix A1.1)
     as one projection: per-rule signals plus the combined ``gopher_pass``.
 
-    Complements ``quality_features`` (generic ratios a trainable
-    classifier consumes) with the published heuristic bundle a corpus run
-    applies as a hard gate. All signals are Column algebra — one scan, no
-    shuffle, and a ``gopher_pass``-only caller lets Catalyst prune the
-    per-rule columns. Thresholds are the paper's: 50–100k words, mean
-    word length 3–10, symbol-to-word ≤ 0.1, ≤ 90% bullet lines, ≤ 30%
-    ellipsis lines, ≥ 80% words with an alphabetic character, ≥ 2 of the
-    8 core English stop words present. (The stop-word rule makes the
-    bundle English-centric — run after a lang gate, as the paper does.)
+    Complements ``quality_features`` (generic per-document ratios) with
+    the published heuristic bundle a corpus run applies as a hard gate.
+    All signals are Column algebra — one scan, no shuffle, and a
+    ``gopher_pass``-only caller lets Catalyst prune the per-rule columns.
+    Thresholds are the paper's: 50–100k words, mean word length 3–10,
+    symbol-to-word ≤ 0.1, ≤ 90% bullet lines, ≤ 30% ellipsis lines,
+    ≥ 80% words with an alphabetic character, ≥ 2 of the 8 core English
+    stop words present. (The stop-word rule makes the bundle
+    English-centric — run after a lang gate, as the paper does.)
     """
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     n_tokens = F.size(toks)
@@ -410,158 +410,6 @@ def rolling_hash_fingerprints(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Lexical top-k document search: Okapi BM25 over whitespace tokens —
-    the classic counterpart to the ANN family for corpora without
-    embeddings (and the usual first-stage retriever in front of them).
-
-    Shape at corpus scale:
-
-    - tokens explode once, filtered to the query terms BEFORE any shuffle
-      (a tiny ``isin`` the scan pushes down), so the per-term frequency
-      aggregate only ever shuffles (doc, query-term) hits — bytes scale
-      with matches, not the corpus;
-    - document lengths and the global doc count come from one projection
-      + one aggregate over (id, len) pairs;
-    - per-term document frequencies are an O(terms)-row aggregate,
-      collected and folded into literal IDF weights (no join against a
-      stats table);
-    - the final score is a partial-agg sum per doc and the top-k compiles
-      to TakeOrderedAndProject (per-partition heaps, no global sort).
-
-    Scoring: idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)); the standard
-    tf saturation with length normalization. Returns (id, score), score
-    rounded to 6 — deterministic, oracle-friendly.
-    """
-    terms = sorted({t.lower() for t in query_terms})
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("_toks")).select(
-        "id", "_toks", F.size("_toks").alias("_len")
-    )
-    lens = base.select("id", "_len")
-    stats = lens.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"] or 1.0)
-    hits = (
-        base.select("id", "_len", F.explode("_toks").alias("_t"))
-        .filter(F.col("_t").isin(terms))
-        .groupBy("id", "_t")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("_len").alias("dl"))
-    )
-    import math
-
-    dfs = {
-        r["_t"]: r["df"]
-        for r in hits.groupBy("_t")
-        .agg(F.countDistinct("id").alias("df"))
-        .collect()
-    }
-    idf = F.lit(0.0)
-    for t in terms:
-        d = dfs.get(t, 0)
-        w = math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-        idf = F.when(F.col("_t") == t, F.lit(w)).otherwise(idf)
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    return (
-        hits.select("id", (idf * tf_part).alias("_s"))
-        .groupBy("id")
-        .agg(F.round(F.sum("_s"), 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("id"))
-        .limit(k)
-    )
-
-
-QUALITY_FEATURE_COLS = [
-    "n_tokens",
-    "avg_token_len",
-    "punct_ratio",
-    "digit_ratio",
-    "upper_ratio",
-    "type_token_ratio",
-]
-
-
-def quality_classifier_fit(
-    df: DataFrame,
-    text_col: str,
-    label_col: str,
-    id_col: str,
-    max_iter: int = 50,
-):
-    """Fit a trainable quality classifier — the learned upgrade of the
-    heuristic ``quality_features`` thresholds (the fasttext-classifier
-    pattern of CCNet/GPT-3-style pipelines: label a small seed set
-    "keep"/"toss", learn the boundary, score the corpus).
-
-    Features are exactly ``QUALITY_FEATURE_COLS`` from
-    ``quality_features`` (Column algebra, computed on the fly), model is
-    Spark ML ``LogisticRegression`` — distributed L-BFGS, one pass per
-    iteration over the (tiny) labeled set, and the fitted model is a
-    plain coefficient vector, broadcast-applied at score time. Labels:
-    ``label_col`` must be 0/1 (1 = keep).
-
-    Returns the fitted PipelineModel (``.save(path)``/``PipelineModel
-    .load`` for persistence next to the corpus).
-    """
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import StandardScaler, VectorAssembler
-
-    feats = quality_features(df, text_col, id_col).join(
-        df.select(
-            F.col(id_col).alias("id"), F.col(label_col).cast("double").alias("label")
-        ),
-        "id",
-    )
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(
-                inputCols=QUALITY_FEATURE_COLS, outputCol="_raw", handleInvalid="keep"
-            ),
-            StandardScaler(inputCol="_raw", outputCol="features"),
-            LogisticRegression(maxIter=max_iter, labelCol="label"),
-        ]
-    )
-    model = pipe.fit(feats)
-    # without this, scoring breaks once any Observation has registered on
-    # the session — see quality_classifier.drop_training_summary
-    from rtstore_spark.operators.quality_classifier import drop_training_summary
-
-    drop_training_summary(model, df.sparkSession)
-    return model
-
-
-def quality_classifier_score(
-    df: DataFrame, text_col: str, id_col: str, model
-) -> DataFrame:
-    """Score documents with a fitted quality classifier: (id,
-    quality_score) with score = P(keep). Featurization is the same
-    Column algebra as training; the model transform is JVM-side (no
-    Python), so scoring a 100-TB corpus is a projection pass — filter
-    with ``quality_score >= τ`` and the threshold composes with every
-    other pushed-down gate."""
-    from pyspark.ml.functions import vector_to_array
-
-    feats = quality_features(df, text_col, id_col)
-    scored = model.transform(feats)
-    # probability is an ml VectorUDT; element 2 (1-indexed) = P(label=1)
-    p1 = F.element_at(vector_to_array(F.col("probability")), 2)
-    return scored.select("id", F.round(p1, 6).alias("quality_score"))
-
-
 def normalize_text(
     df: DataFrame,
     text_col: str,
@@ -718,6 +566,8 @@ def cluster_texts(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import IDF, HashingTF, Normalizer
 
+    from rtstore_spark.operators.quality_classifier import drop_training_summary
+
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     src = df.select(F.col(id_col).alias("id"), toks.alias("_toks"))
     tf = HashingTF(
@@ -733,12 +583,9 @@ def cluster_texts(
         k=k, seed=seed, maxIter=max_iter,
         featuresCol="_feat", predictionCol="cluster",
     ).fit(normed)
-    # see quality_classifier.drop_training_summary: a retained summary
-    # breaks transform on sessions that ever registered an Observation
-    try:
-        model._java_obj.setSummary(df.sparkSession._jvm.scala.Option.empty())
-    except Exception:  # noqa: BLE001 — private API; tolerate changes
-        pass
+    # a retained summary breaks transform on sessions that ever
+    # registered an Observation
+    drop_training_summary(model, df.sparkSession)
     return model.transform(normed).select("id", "cluster")
 
 

@@ -88,8 +88,9 @@ class BlockEventBroadcaster:
     the ``block_events_after`` aggregate ONCE per tick on its own thread
     (only while subscribers exist; it starts on the first subscribe and
     exits when the last unsubscribes) and pushes each event into every
-    subscriber's queue. Poll jobs carry the ``rtstore-block-poller`` job
-    group so tests can pin the one-job-per-tick contract.
+    subscriber's queue. Poll jobs carry this broadcaster's own
+    ``job_group`` (``rtstore-block-poller-<id>``) so tests can pin the
+    one-job-per-tick contract per node.
     """
 
     JOB_GROUP = "rtstore-block-poller"
@@ -105,6 +106,7 @@ class BlockEventBroadcaster:
     def __init__(self, node: "NodeService", poll_seconds: float = 0.5):
         self.node = node
         self.poll_seconds = poll_seconds
+        self.job_group = f"{self.JOB_GROUP}-{id(self)}"
         self._lock = threading.Lock()
         self._subs: dict[int, queue.Queue] = {}
         self._next_token = 0
@@ -171,7 +173,7 @@ class BlockEventBroadcaster:
         sc = self.node.store.spark.sparkContext
         # thread-local job group: every poll aggregate this thread submits
         # is attributed here (the test's one-job-per-tick counter)
-        sc.setJobGroup(self.JOB_GROUP, "shared Subscribe block poll", False)
+        sc.setJobGroup(self.job_group, "shared Subscribe block poll", False)
         failing = False
         while True:
             with self._lock:

@@ -182,9 +182,7 @@ class Ingest:
         block, order = store.state.block, store.state.order
         return {"id": tx_id, "items": items, "block": block, "order": order}
 
-    def send_wire_mutation(
-        self, payload: bytes | str, signature: str, archive: bool = True
-    ) -> dict:
+    def send_wire_mutation(self, payload: bytes | str, signature: str) -> dict:
         """Apply one REFERENCE-FORMAT signed mutation.
 
         ``payload`` is the EIP-712 TypedData JSON envelope the reference
@@ -218,17 +216,16 @@ class Ingest:
             raise InvalidMutation(str(e)) from e
         with self.store.state.lock:
             out = self._apply(ingest_payload, wm.sender, wm.nonce, wm.mutation_id)
-            if archive:
-                # keep the ORIGINAL envelope bytes so the rollup export
-                # can emit this mutation exactly as the client signed it
-                # (the reference persists payload+signature verbatim,
-                # ar_toolbox.rs:83-127). Written inside the lock: the ack
-                # follows the write, and close_block's sweep (same lock)
-                # never rewrites the archive under it
-                raw = payload if isinstance(payload, bytes) else payload.encode("utf-8")
-                self.store.archive_wire_envelope(
-                    wm.mutation_id, raw, signature, out["block"], out["order"]
-                )
+            # keep the ORIGINAL envelope bytes so the rollup export can
+            # emit this mutation exactly as the client signed it (the
+            # reference persists payload+signature verbatim,
+            # ar_toolbox.rs:83-127). Written inside the lock: the ack
+            # follows the write, and close_block's sweep (same lock)
+            # never rewrites the archive under it
+            raw = payload if isinstance(payload, bytes) else payload.encode("utf-8")
+            self.store.archive_wire_envelope(
+                wm.mutation_id, raw, signature, out["block"], out["order"]
+            )
         out["sender"] = wm.sender
         return out
 

@@ -27,8 +27,6 @@ SLOW_MODULES = {
     "test_permaweb_spark",
     "test_pipeline",
     "test_planes",
-    "test_pq",
-    "test_quality_classifier",
     "test_replication",
     "test_service",
     "test_state_compaction",

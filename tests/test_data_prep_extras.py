@@ -140,13 +140,11 @@ class TestBM25:
             ]
         )
 
-    def test_scores_match_hand_computation(self, docs):
+    def test_scores_match_hand_computation(self, spark, docs):
         import math
 
-        from rtstore_spark.operators.text import bm25_topk
-
         out = {r["id"]: r["score"] for r in
-               bm25_topk(docs, "text", "id", ["spark"], k=10).collect()}
+               _one_query(spark, docs, "spark", k=10).collect()}
         assert set(out) == {1, 2}  # only docs containing the term
         # hand-computed: N=4, df=2, idf = ln(1 + 2.5/2.5) = ln 2
         # avgdl = (5+7+5+6)/4 = 5.75
@@ -158,22 +156,20 @@ class TestBM25:
         assert out[2] == pytest.approx(s(3, 7), abs=1e-6)
         assert out[2] > out[1]  # tf saturation still ranks the heavy doc up
 
-    def test_multi_term_and_topk_plan(self, docs):
-        from rtstore_spark.operators.text import bm25_topk
-
-        out = bm25_topk(docs, "text", "id", ["spark", "pond"], k=2)
-        rows = out.collect()
+    def test_multi_term_rare_term_ranks_first(self, spark, docs):
+        rows = _one_query(spark, docs, "spark pond", k=2).collect()
         assert len(rows) == 2
         # rare term 'pond' (df=1) outweighs common 'spark' (df=2)
         assert rows[0]["id"] == 3
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan  # heap top-k, no global sort
 
-    def test_empty_query_rejected(self, docs):
-        from rtstore_spark.operators.text import bm25_topk
 
-        with pytest.raises(ValueError):
-            bm25_topk(docs, "text", "id", [])
+def _one_query(spark, docs, text, k):
+    """BM25 top-k of one query: a one-row query table through the batch
+    scorer."""
+    from rtstore_spark.operators.retrieval import bm25_batch_topk
+
+    queries = spark.createDataFrame([(0, text)], "qid long, text string")
+    return bm25_batch_topk(docs, "text", "id", queries, k=k)
 
 
 class TestHllSketches:
@@ -419,83 +415,6 @@ class TestRepeatedSpans:
             ).fetchall()
         )
         assert got == want and len(got) > 0
-
-
-class TestQualityClassifier:
-    def test_learns_a_separable_boundary(self, spark, tmp_path):
-        """Train on an obviously-separable seed set (clean prose vs digit
-        spam), score held-out docs of both kinds — the learned boundary
-        must rank every clean doc above every spam doc."""
-        from pyspark.ml import PipelineModel
-
-        from rtstore_spark.operators.text import (
-            quality_classifier_fit,
-            quality_classifier_score,
-        )
-
-        clean = [
-            "the quiet morning light settled over the harbor while fishermen "
-            "prepared their nets and talked about the coming season",
-            "distributed query engines compile declarative plans into stages "
-            "that exchange data only when the aggregation demands it",
-            "she walked along the river path reading street signs and noting "
-            "how the old town kept its original names",
-            "careful measurement beats clever guessing when the system is "
-            "too large to hold in one head",
-        ]
-        spam = [
-            "9301 1182 7462 9018 4417 2214 8830 1190 5532 0021 7648 1123",
-            "4412 8810 2293 1174 9921 3356 7781 2210 6634 9912 0045 5567",
-            "1000 2000 3000 4000 5000 6000 7000 8000 9000 0000 1111 2222",
-            "7* 8* 9* !!! 222 333 444 555 666 777 888 999 000 111 ###",
-        ]
-        rows = [(i, t, 1) for i, t in enumerate(clean)] + [
-            (100 + i, t, 0) for i, t in enumerate(spam)
-        ]
-        df = spark.createDataFrame(rows, "id long, text string, label int")
-        model = quality_classifier_fit(df, "text", "label", "id")
-
-        held = spark.createDataFrame(
-            [
-                (1, "the engineers reviewed the design and agreed the simple "
-                    "approach would survive the next order of magnitude"),
-                (2, "8841 0092 7613 5541 9902 1234 8765 1029 3847 5566 7788"),
-            ],
-            "id long, text string",
-        )
-        scores = {
-            r["id"]: r["quality_score"]
-            for r in quality_classifier_score(held, "text", "id", model).collect()
-        }
-        assert scores[1] > 0.5 > scores[2], scores
-
-        # persistence round-trip: same scores from a reloaded model
-        p = str(tmp_path / "qc_model")
-        model.write().overwrite().save(p)
-        again = {
-            r["id"]: r["quality_score"]
-            for r in quality_classifier_score(
-                held, "text", "id", PipelineModel.load(p)
-            ).collect()
-        }
-        assert again == scores
-
-    def test_scoring_plan_stays_jvm_side(self, spark):
-        from rtstore_spark.operators.text import (
-            quality_classifier_fit,
-            quality_classifier_score,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "good clean readable text with words", 1),
-             (2, "111 222 333 444 555 666 777", 0)] * 4,
-            "id long, text string, label int",
-        )
-        model = quality_classifier_fit(df, "text", "label", "id")
-        out = quality_classifier_score(df, "text", "id", model)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-        assert "Exchange" not in plan  # scoring is a pure projection pass
 
 
 class TestHotSpanRouting:

@@ -1,4 +1,8 @@
-"""Product quantization (pq_fit / pq_encode / pq_topk / ivf_pq_topk).
+"""Product quantization (pq_fit / pq_encode / ivf_pq_search_batch).
+
+Every ADC score comes from ``ivf_pq_search_batch``: one query is a
+one-row query table (``_one_query``), and plain PQ over every code is a
+one-route index (``_one_route``: route 0, one centroid).
 
 Recall calibration (sf0.001 embeddings, m=8, ksub=32, query = vec_id 0):
 observed recall@10 vs exact = 0.3 (the synthetic vectors are near-random —
@@ -15,13 +19,49 @@ from pyspark.sql import functions as F
 from rtstore_spark.operators.similarity import (
     brute_force_topk,
     compute_centroids,
-    ivf_pq_topk,
+    ivf_pq_search_batch,
     pq_encode,
     pq_fit,
     pq_load,
     pq_save,
-    pq_topk,
 )
+
+# (id, score) top-10 of query vec_id 0 over every code of the fixture
+# model (m=8, ksub=32, seed=7), recorded from the one-vector ADC scan
+# that preceded the batch path and agreed with it row for row
+PQ_TOP10_Q0 = [
+    (0, 0.50152), (443, 0.287006), (257, 0.254715), (232, 0.239956),
+    (260, 0.23234), (12, 0.232268), (248, 0.221876), (465, 0.220762),
+    (73, 0.20754), (453, 0.206017),
+]
+
+
+def _one_query(codes, model, cents, query, k, nprobe):
+    """Top-k of one query vector: a one-row query table through the batch
+    scorer, rows in rank order."""
+    queries = codes.sparkSession.createDataFrame(
+        [(0, [float(x) for x in query])], "qid long, qv array<double>"
+    )
+    return ivf_pq_search_batch(
+        codes, model, cents, queries, "qv", "qid", k=k, nprobe=nprobe
+    ).orderBy("rank")
+
+
+def _one_route(codes, model):
+    """Plain PQ over every code: (codes with route 0, one zero centroid)."""
+    cents = codes.sparkSession.createDataFrame(
+        [(0, [0.0] * model["dim"])], "route int, centroid array<double>"
+    )
+    return codes.withColumn("route", F.lit(0)), cents
+
+
+def _plain_pq(codes, model, query, k):
+    rcodes, cents = _one_route(codes, model)
+    return _one_query(rcodes, model, cents, query, k, nprobe=1)
+
+
+def _rows(df):
+    return [(r["id"], r["score"]) for r in df.collect()]
 
 
 @pytest.fixture(scope="module")
@@ -110,7 +150,7 @@ class TestTopK:
             r["id"]
             for r in brute_force_topk(emb, "embedding", "vec_id", query, 50).collect()
         }
-        got = pq_topk(codes, model, query, 10).collect()
+        got = _plain_pq(codes, model, query, 10).collect()
         ids = [r["id"] for r in got]
         assert ids[0] == 0  # the query vector itself wins
         assert len(set(ids) & exact50) >= 8  # observed 10/10
@@ -121,7 +161,7 @@ class TestTopK:
         assert len(set(ids) & exact10) >= 2  # observed 3/10
 
     def test_scores_match_numpy_adc(self, codes, model, query):
-        got = {r["id"]: r["score"] for r in pq_topk(codes, model, query, 5).collect()}
+        got = dict(_rows(_plain_pq(codes, model, query, 5)))
         cb = np.asarray(model["codebooks"])
         q = np.asarray(query, dtype=np.float64)
         q /= np.linalg.norm(q)
@@ -137,17 +177,10 @@ class TestTopK:
             expect = sum(lut[j][c] for j, c in enumerate(code_rows[i]))
             assert score == pytest.approx(expect, abs=1e-6)
 
-    def test_scoring_plan_is_jvm_side_topk(self, codes, model, query):
-        out = pq_topk(codes, model, query, 10)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        # the one Python stage is the (upstream) encode; scoring adds none
-        assert plan.count("MapInPandas") == 1
-        assert "BatchEvalPython" not in plan
-
     def test_query_dim_mismatch_raises(self, codes, model):
-        with pytest.raises(ValueError, match="query dim"):
-            pq_topk(codes, model, [0.1, 0.2], 5)
+        # validated inside the routing batch: a Spark job's Python error
+        with pytest.raises(Exception, match="query dim"):
+            _plain_pq(codes, model, [0.1, 0.2], 5).collect()
 
 
 class TestIvfPq:
@@ -158,10 +191,9 @@ class TestIvfPq:
         cents = compute_centroids(routed, "embedding", "route")
         rcodes = codes.join(routed.select("id", "route"), "id")
         n_routes = cents.count()
-        full = ivf_pq_topk(rcodes, model, cents, query, 10, nprobe=n_routes)
-        assert [r["id"] for r in full.collect()] == [
-            r["id"] for r in pq_topk(codes, model, query, 10).collect()
-        ]
+        full = _one_query(rcodes, model, cents, query, 10, nprobe=n_routes)
+        assert _rows(full) == PQ_TOP10_Q0
+        assert _rows(_plain_pq(codes, model, query, 10)) == PQ_TOP10_Q0
 
     def test_probe_subset_returns_k_from_probed_routes_only(
         self, emb, codes, model, query
@@ -171,7 +203,7 @@ class TestIvfPq:
         )
         cents = compute_centroids(routed, "embedding", "route")
         rcodes = codes.join(routed.select("id", "route"), "id")
-        got = ivf_pq_topk(rcodes, model, cents, query, 5, nprobe=1).collect()
+        got = _one_query(rcodes, model, cents, query, 5, nprobe=1).collect()
         assert len(got) == 5
         # every hit belongs to the single probed (best) route
         qv = F.array(*[F.lit(float(x)) for x in query])
@@ -195,9 +227,7 @@ class TestPersistence:
         pq_save(spark, model, path)
         again = pq_load(spark, path)
         assert again["codebooks"] == model["codebooks"]
-        assert [r["id"] for r in pq_topk(codes, again, query, 10).collect()] == [
-            r["id"] for r in pq_topk(codes, model, query, 10).collect()
-        ]
+        assert _rows(_plain_pq(codes, again, query, 10)) == PQ_TOP10_Q0
 
 
 class TestDuckDBOracle:
@@ -207,10 +237,15 @@ class TestDuckDBOracle:
         produce the same top-10 (ids AND rounded scores, same tie-break)."""
         import duckdb
 
-        from rtstore_spark.operators.similarity import _adc_lut
-
         codes.write.mode("overwrite").parquet(str(tmp_path / "codes"))
-        lut = _adc_lut(model, query)
+        cb = np.asarray(model["codebooks"])
+        q = np.asarray(query, dtype=np.float64)
+        q /= np.linalg.norm(q)
+        dsub = model["dsub"]
+        lut = [
+            (cb[j] @ q[j * dsub : (j + 1) * dsub]).tolist()
+            for j in range(model["m"])
+        ]
         con = duckdb.connect()
         con.sql(
             "create table lut as select * from (values "
@@ -232,7 +267,7 @@ class TestDuckDBOracle:
             group by id order by score desc, id limit 10
             """
         ).fetchall()
-        got = [(r["id"], float(r["score"])) for r in pq_topk(codes, model, query, 10).collect()]
+        got = [(i, float(sc)) for i, sc in _rows(_plain_pq(codes, model, query, 10))]
         assert got == [(a, float(b)) for a, b in oracle]
 
 
@@ -251,28 +286,9 @@ class TestPersistedIndex:
         codes, cents, loaded = read_pq_index(spark, path)
         assert loaded["codebooks"] == model["codebooks"]
         n_routes = cents.count()
-        got = ivf_pq_topk(codes, loaded, cents, query, 10, nprobe=n_routes)
-        # matches the in-memory path end to end
-        mem = pq_topk(pq_encode(emb, "embedding", "vec_id", model), model, query, 10)
-        assert [r["id"] for r in got.collect()] == [r["id"] for r in mem.collect()]
-
-    def test_probe_scan_is_partition_pruned(self, spark, emb, model, query, tmp_path):
-        from rtstore_spark.operators.similarity import (
-            read_pq_index,
-            write_pq_index,
-        )
-
-        routed = emb.select(
-            F.col("vec_id").alias("id"), "embedding", F.col("label").alias("route")
-        )
-        path = str(tmp_path / "pq_index2")
-        write_pq_index(routed, "embedding", "id", "route", model, path)
-        codes, cents, loaded = read_pq_index(spark, path)
-        out = ivf_pq_topk(codes, loaded, cents, query, 5, nprobe=2)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # the route filter must reach the scan as dynamic partition pruning
-        # (the broadcast semi-join keys on the partition column)
-        assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
+        got = _one_query(codes, loaded, cents, query, 10, nprobe=n_routes)
+        # matches the in-memory plain-PQ rows end to end
+        assert _rows(got) == PQ_TOP10_Q0
 
 
 class TestIncrementalIndex:
@@ -311,14 +327,11 @@ class TestIncrementalIndex:
             for r in codes.filter("id >= 250").collect()
         }
         assert stored == direct
-        # and a full-probe query over the appended index equals pq_topk
+        # and a full-probe query over the appended index equals plain PQ
         # over the union's codes
         n_routes = cents.count()
-        got = ivf_pq_topk(codes, loaded, cents, query, 10, nprobe=n_routes)
-        want = pq_topk(
-            pq_encode(emb, "embedding", "vec_id", model), model, query, 10
-        )
-        assert [r["id"] for r in got.collect()] == [r["id"] for r in want.collect()]
+        got = _one_query(codes, loaded, cents, query, 10, nprobe=n_routes)
+        assert _rows(got) == PQ_TOP10_Q0
 
     def test_assign_routes_is_nearest_centroid_and_shuffle_free(self, spark):
         from rtstore_spark.operators.similarity import assign_routes
@@ -454,7 +467,6 @@ class TestAppendCrashSafety:
     def test_multiple_appends_stack_generations(self, spark, emb, base_index):
         from rtstore_spark.operators.similarity import (
             append_pq_index,
-            ivf_pq_topk,
             read_pq_index,
         )
 
@@ -470,7 +482,7 @@ class TestAppendCrashSafety:
         # appended vectors are queryable: vec 55's own code row must rank
         # it in the all-probe top-k
         q = emb.filter("vec_id = 55").collect()[0]["embedding"]
-        hits = ivf_pq_topk(codes, loaded, cents, q, k=5, nprobe=4).collect()
+        hits = _one_query(codes, loaded, cents, q, 5, nprobe=4).collect()
         assert 55 in [r["id"] for r in hits]
 
 
@@ -699,7 +711,6 @@ class TestStreamingMaintenance:
         import json as _json
 
         from rtstore_spark.operators.similarity import (
-            ivf_pq_topk,
             pq_index_sink,
             read_pq_index,
             write_pq_index,
@@ -739,7 +750,7 @@ class TestStreamingMaintenance:
         codes, cents, loaded = read_pq_index(spark, path)
         assert codes.count() == 60
         q55 = emb.filter("vec_id = 55").collect()[0]["embedding"]
-        hits = ivf_pq_topk(codes, loaded, cents, q55, k=5, nprobe=4).collect()
+        hits = _one_query(codes, loaded, cents, q55, 5, nprobe=4).collect()
         assert 55 in [r["id"] for r in hits]
         # restart over the SAME checkpoint: no new data → no new appends
         run_stream()
@@ -776,7 +787,6 @@ class TestPqCompaction:
 
     def _hits(self, spark, emb, path, vec_id=55, k=5):
         from rtstore_spark.operators.similarity import (
-            ivf_pq_topk,
             read_pq_index,
         )
 
@@ -784,7 +794,7 @@ class TestPqCompaction:
         q = emb.filter(f"vec_id = {vec_id}").collect()[0]["embedding"]
         return [
             (r["id"], r["score"])
-            for r in ivf_pq_topk(codes, model, cents, q, k=k, nprobe=4).collect()
+            for r in _one_query(codes, model, cents, q, k, nprobe=4).collect()
         ]
 
     def test_fold_is_union_free_and_results_identical(
@@ -921,7 +931,6 @@ class TestUriRootIndex:
         from rtstore_spark.operators.similarity import (
             append_pq_index,
             compact_pq_index,
-            ivf_pq_topk,
             read_pq_index,
             write_pq_index,
         )
@@ -943,7 +952,7 @@ class TestUriRootIndex:
         q55 = emb.filter("vec_id = 55").collect()[0]["embedding"]
         before = [
             (r["id"], r["score"])
-            for r in ivf_pq_topk(codes, loaded, cents, q55, k=5, nprobe=4)
+            for r in _one_query(codes, loaded, cents, q55, 5, nprobe=4)
             .collect()
         ]
         assert 55 in [i for i, _ in before]
@@ -952,7 +961,7 @@ class TestUriRootIndex:
         assert codes.count() == 60
         after = [
             (r["id"], r["score"])
-            for r in ivf_pq_topk(codes, loaded, cents, q55, k=5, nprobe=4)
+            for r in _one_query(codes, loaded, cents, q55, 5, nprobe=4)
             .collect()
         ]
         assert after == before
@@ -993,6 +1002,19 @@ class TestRebuildClearsIncrements:
         assert not os.path.exists(f"{path}/inc")
 
 
+# (id, score) top-5 at nprobe=3 over the label-routed index, per query
+# vec_id, recorded from the one-query IVF-PQ operator that preceded the
+# batch path and agreed with it row for row
+PINNED_K5_NPROBE3 = {
+    0: [(0, 0.50152), (443, 0.287006), (257, 0.254715), (248, 0.221876),
+        (453, 0.206017)],
+    7: [(382, 0.295613), (466, 0.253552), (220, 0.223857), (82, 0.220107),
+        (353, 0.215073)],
+    42: [(42, 0.549003), (478, 0.282256), (242, 0.242632), (329, 0.217039),
+         (9, 0.204221)],
+}
+
+
 class TestBatchSearch:
     """ivf_pq_search_batch: a query TABLE against the index in one job."""
 
@@ -1022,14 +1044,12 @@ class TestBatchSearch:
         for r in batch:
             got.setdefault(r["query_id"], []).append((r["rank"], r["id"], r["score"]))
         for qid in (0, 7, 42):
-            qv = emb.filter(f"vec_id = {qid}").collect()[0]["embedding"]
-            want = [
-                (i + 1, r["id"], r["score"])
-                for i, r in enumerate(
-                    ivf_pq_topk(codes, model, cents, qv, k=5, nprobe=3).collect()
-                )
-            ]
+            want = [(i + 1, *row) for i, row in enumerate(PINNED_K5_NPROBE3[qid])]
             assert sorted(got[qid]) == want, qid
+            # a one-row query table answers the same as the batch
+            qv = emb.filter(f"vec_id = {qid}").collect()[0]["embedding"]
+            one = _one_query(codes, model, cents, qv, 5, nprobe=3)
+            assert _rows(one) == PINNED_K5_NPROBE3[qid], qid
 
     def test_null_queries_dropped_and_ranks_contiguous(
         self, spark, model, index
@@ -1528,8 +1548,8 @@ class TestLifecyclePinPQ:
 
         def state():
             codes, cents, loaded = read_pq_index(spark, path)
-            hits = ivf_pq_topk(
-                codes, loaded, cents, q, k=5, nprobe=cents.count()
+            hits = _one_query(
+                codes, loaded, cents, q, 5, nprobe=cents.count()
             ).collect()
             return codes.count(), [
                 (r["id"], round(r["score"], 6)) for r in hits

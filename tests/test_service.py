@@ -330,14 +330,13 @@ class TestRunQueryPaging:
 class TestSharedSubscribePoller:
     """N concurrent Subscribe clients must cost ONE poll aggregate per tick,
     not N — the reference's single broadcast channel
-    (storage_node_light_impl.rs:270-374). Poll jobs carry the
-    rtstore-block-poller job group; the counter pins the contract."""
+    (storage_node_light_impl.rs:270-374). Poll jobs carry the node's own
+    broadcaster job group, so the counter sees only this node's poller,
+    never the pollers of nodes earlier tests left in the session."""
 
     def test_one_poll_job_per_tick(self, spark, tmp_path):
         import threading as _threading
         import time as _time
-
-        from rtstore_spark.service import BlockEventBroadcaster
 
         store = DocStore(spark, str(tmp_path / "sub"))
         srv_node = NodeService(store, Ingest(store), subscribe_poll_seconds=0.4)
@@ -395,7 +394,7 @@ class TestSharedSubscribePoller:
             # subscribers. >= 1 proves polling really runs under the group
             # (a regression to per-handler polling would leave it at 0).
             jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
-                BlockEventBroadcaster.JOB_GROUP
+                srv_node.broadcaster.job_group
             )
             max_ticks = int(elapsed / 0.4) + 2
             assert 1 <= len(jobs) <= max_ticks * 2, (len(jobs), elapsed)

@@ -11,6 +11,7 @@ own encoder round-trips through the same import.
 from __future__ import annotations
 
 import json
+import os
 import tempfile
 
 import pytest
@@ -39,6 +40,8 @@ ROLLUP_SCHEMA = T.StructType([
 
 
 def load_artifact(spark):
+    if not os.path.exists(ARTIFACT):
+        pytest.skip("reference artifact not present")
     df = spark.read.parquet(ARTIFACT)
     return df.select(
         df["payload"].cast("binary").alias("payload"),
